@@ -206,16 +206,13 @@ object BenchDoc {
       stats("substring_spans") =
         s"${agg.getLong(0)} spans, ${agg.getLong(1)} chars covered"
     }
-    // the SAME operator pair on corpus B — INTENDED as the sparse
-    // regime, but the measurement refuted the premise: the replica-
-    // suffixed words share their vocabulary across the 5k docs WITHIN
-    // each replica, so this corpus is ~fully covered too (499,991
-    // spans / 227M chars), and under total coverage the hashed mode's
-    // verify pass re-pays the wide shuffle on top of the narrow one —
-    // measured 2.39× SLOWER than exact (PERF.md r15). The pair stays
-    // as the recorded refutation + degradation bound; the hashed
-    // mode's winning regime (few-percent dup rates, real web text)
-    // is not constructible from these synthetic tables.
+    // the SAME operator on corpus B — INTENDED as the sparse regime,
+    // but the measurement refuted the premise: the replica-suffixed
+    // words share their vocabulary across the 5k docs WITHIN each
+    // replica, so this corpus is ~fully covered too (499,991 spans /
+    // 227M chars). A gram-hash variant of the operator was measured
+    // against exact here (401 s vs 170 s) and on corpus S below
+    // (103 s vs 85 s); it lost on both and was removed.
     timedMin2("substring_exact_lowdup_500k") {
       val agg = Dedup.substringDedupSpans(spansCorpus, "doc_id", "text",
           k = 20, minLen = 60)
@@ -223,16 +220,9 @@ object BenchDoc {
       stats("substring_lowdup_spans") =
         s"${agg.getLong(0)} spans, ${agg.getLong(1)} chars covered"
     }
-    timedMin2("substring_hashed_lowdup_500k") {
-      val agg = Dedup.substringDedupSpansHashed(spansCorpus, "doc_id", "text",
-          k = 20, minLen = 60)
-        .agg(count(lit(1)).as("n"), sum(col("span_len")).as("chars")).head()
-      stats("substring_lowdup_spans_hashed") =
-        s"${agg.getLong(0)} spans, ${agg.getLong(1)} chars covered"
-    }
 
     // ---- corpus S: GENUINELY sparse duplication (r15 verdict task 5)
-    // The lowdup pair above refuted its own premise — replica-suffixed
+    // The lowdup leg above refuted its own premise — replica-suffixed
     // words still share a vocabulary, so ~every position was covered.
     // This corpus makes background 20-gram sharing IMPOSSIBLE by
     // construction: every token is d%06dt%02d — a complete 7-char
@@ -243,12 +233,11 @@ object BenchDoc {
     // 7 chars) — so background windows from different docs always
     // differ. The ONLY cross-doc duplication is a 119-char passage
     // appended to 1% of docs (doc_id % 100 == 0): candidate positions
-    // are ~0.3% of the corpus — the hashed mode's design regime at
-    // last. Expected output (measured on the 1k-doc smoke): one span
-    // per injected doc, 119 chars + a few boundary chars where the
-    // doc-field tail before the passage coincides (every injected id
-    // ends in "00", and last-token indices repeat per id%7 class);
-    // both modes identical by construction.
+    // are ~0.3% of the corpus. Expected output (measured on the
+    // 1k-doc smoke): one span per injected doc, 119 chars + a few
+    // boundary chars where the doc-field tail before the passage
+    // coincides (every injected id ends in "00", and last-token
+    // indices repeat per id%7 class).
     val sparseCorpus = spark.range(500000L)
       .select(col("id").as("doc_id"),
         concat(
@@ -264,13 +253,6 @@ object BenchDoc {
           k = 20, minLen = 100)
         .agg(count(lit(1)).as("n"), sum(col("span_len")).as("chars")).head()
       stats("substring_sparse_spans") =
-        s"${agg.getLong(0)} spans, ${agg.getLong(1)} chars covered"
-    }
-    timedMin2("substring_hashed_sparse_500k") {
-      val agg = Dedup.substringDedupSpansHashed(sparseCorpus, "doc_id", "text",
-          k = 20, minLen = 100)
-        .agg(count(lit(1)).as("n"), sum(col("span_len")).as("chars")).head()
-      stats("substring_sparse_spans_hashed") =
         s"${agg.getLong(0)} spans, ${agg.getLong(1)} chars covered"
     }
     sparseCorpus.unpersist()

@@ -86,12 +86,12 @@ object BenchVec extends Serializable {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      // typed TopK aggregations (knnBatch, the sketch-ranked graph
-      // build) fall back to SORT-based aggregation after 128 distinct
-      // keys per partition by default — which re-sorts every candidate
-      // pair, exactly the cost the partial-aggregating TopK exists to
-      // avoid. Per-partition key counts here are ≤ ~20k src ids with
-      // ≤ 24-entry buffers (~20 MB), so the hash map is safe.
+      // typed TopK aggregations (knnBatch) fall back to SORT-based
+      // aggregation after 128 distinct keys per partition by default —
+      // which re-sorts every candidate pair, exactly the cost the
+      // partial-aggregating TopK exists to avoid. Per-partition key
+      // counts here are ≤ ~20k with ≤ 24-entry buffers (~20 MB), so
+      // the hash map is safe.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "2000000")
       // heap comes from build.sbt's -Xmx (SPARK_DRIVER_MEM, default
@@ -117,16 +117,6 @@ object BenchVec extends Serializable {
     val timings = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     val stats = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val bytesPerLeg = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-
-    // The graph tier is EXPERIMENTAL (round-13: IVF beat it on every
-    // corpus including its claimed manifold regime) — the full
-    // posture × corpus sweep (~80 s) runs only under
-    // SPARK_GRAFT_HNSW_SWEEP=1; the default keeps ONE representative
-    // leg per corpus (clu seeded — its best clustered posture; man
-    // wide — its best manifold posture) so drift stays observable
-    // without paying for a tier the engine recommends against
-    // (round-13 verdict task 8).
-    val hnswSweep = sys.env.contains("SPARK_GRAFT_HNSW_SWEEP")
 
     // Box-weather probes — the SAME fixed probes graft.Bench runs
     // (BenchProbe), so BENCHVEC numbers can be normalized against
@@ -154,24 +144,21 @@ object BenchVec extends Serializable {
       scala.io.Source.fromFile("/proc/self/io").getLines()
         .collectFirst { case l if l.startsWith("rchar:") =>
           l.stripPrefix("rchar:").trim.toLong }.get
-    // pre-seed from the previous artifact so BUILD stages skipped by
-    // the layout cache keep their last measured cost instead of
-    // silently vanishing from the JSON on a partial re-run. Only
-    // build/write stage names preseed — query legs always re-measure,
-    // so a renamed or retired query leg cannot leak a stale number
-    // into the fresh artifact (round-12 lesson: a renamed HNSW leg's
-    // old timing survived a full rerun via the blanket preseed).
-    locally {
+    // The previous artifact's timings, so BUILD stages skipped by the
+    // layout cache keep their last measured cost instead of silently
+    // vanishing from the JSON on a partial re-run. Only a build stage
+    // that this run reaches and skips takes its old value — query legs
+    // always re-measure, and a renamed or retired stage cannot leak a
+    // stale number into the fresh artifact (round-12 lesson: a renamed
+    // leg's old timing survived a full rerun via a blanket preseed).
+    val prevTimings: Map[String, Double] = {
       val prev = Paths.get("BENCHVEC.json")
-      val buildStage = ".*(write|corpus|train_sampled|build).*".r
-      if (Files.exists(prev)) {
-        val txt = Files.readString(prev)
-        "\"timings_sec\":\\{([^}]*)\\}".r.findFirstMatchIn(txt).foreach { sec =>
-          "\"([a-z0-9_]+)\":([0-9.]+)".r.findAllMatchIn(sec.group(1))
-            .foreach(m => if (buildStage.matches(m.group(1)))
-              timings(m.group(1)) = m.group(2).toDouble)
-        }
-      }
+      if (!Files.exists(prev)) Map.empty
+      else "\"timings_sec\":\\{([^}]*)\\}".r
+        .findFirstMatchIn(Files.readString(prev)).toSeq
+        .flatMap(sec => "\"([a-z0-9_]+)\":([0-9.]+)".r.findAllMatchIn(sec.group(1))
+          .map(m => m.group(1) -> m.group(2).toDouble))
+        .toMap
     }
     def timed[T](name: String)(body: => T): T = {
       val t0 = System.nanoTime()
@@ -181,6 +168,7 @@ object BenchVec extends Serializable {
     }
     def buildIfStale(path: String, name: String)(body: => Unit): Unit =
       if (!isFresh(path)) { timed(name)(body); stamp(path) }
+      else prevTimings.get(name).foreach(timings(name) = _)
     // Query stages report the MIN of two passes (same rule as
     // graft.Bench): single cold samples on this shared box swing ±30 %,
     // which is larger than the pruning ratios being measured. One-time
@@ -439,8 +427,8 @@ object BenchVec extends Serializable {
     stats("lsh_bucket_occupancy") =
       s"""{"buckets":${bucketSizes.length},"min":${bucketSizes.head},"p50":${bucketSizes(bucketSizes.length / 2)},"max":${bucketSizes.last}}"""
 
-    // 128-bit sign sketch (two longs per vector): shared by the
-    // semdedup prefilter leg below and the HNSW sketch-ranked build.
+    // 128-bit sign sketch (two longs per vector) for the semdedup
+    // prefilter leg below.
     // Splitmix planes, distinct seed base from every blocking-plane
     // set so sketch bits are uncorrelated with block bits. One codegen
     // pass (VectorFunctions.signSketch); measured ≈ parity with the
@@ -1208,91 +1196,8 @@ object BenchVec extends Serializable {
       }
     })
 
-    // ---- HNSW-lite on the clustered corpus: the graph tier at
-    // scale, measured HONESTLY. Build: maxLevel 13 ≈ log2(500k/60),
-    // 13 splitmix planes, sibling probes (each level's edges span its
-    // parent block), floorBoost 3 (level-0 blocks coarsened 8× so the
-    // graph stays connected INSIDE latent clusters — without it
-    // recall@10 caps at ~0.65 even when the walk finds the cluster).
-    // Two search postures:
-    //  * clu_hnsw_batch_8q — the pure ladder descent (single entry,
-    //    wide upper beams). FINDING: on THIS corpus (1,024 mutually
-    //    near-orthogonal centers) greedy descent is blind between
-    //    clusters — there is no similarity gradient to climb — and
-    //    recall saturates ~0.65 no matter the beam. This is geometry,
-    //    not tuning: graph ANN needs a continuous manifold.
-    //  * clu_hnsw_seeded_8q — the production posture for clustered
-    //    corpora (SPANN/DiskANN-partitioned shape): the initial beam
-    //    is an exhaustive scan of the level ≥ 4 union (a
-    //    deterministic 1/16 hash sample ≈ 31k rows — one level-banded
-    //    partition read at scale), then the graph crawls the target
-    //    region. Recall ~0.81 at ~2.4× the brute-force speed.
-    // The cross-family conclusion stands in the stats: IVF's
-    // centroid routing (recall 1.0 at nProbe 4) DOMINATES the graph
-    // family on orthogonal-cluster geometry, because a centroid
-    // aggregates its cluster — the engine keeps both tiers because
-    // real corpora sit between the two geometries. ----
-    val HMaxLevel = 13
-    val hPlanes = mkPlanes(HMaxLevel, 7200000L)
-    // 128-bit sign-sketch build ranking (round-13 verdict task 3: the
-    // exact build's level-0 block join computed ~490M 768-d dots and
-    // window-shuffled every pair — 121 s; the sketch build streams
-    // (id + 2 longs) pairs and Hamming-ranks top-M per src via the
-    // partial-aggregating TopK — embeddings never enter the build).
-    // skPlanes/skWordsUdf are hoisted above the semdedup legs, which
-    // reuse the same sketch as a pair prefilter.
-    val hnswPf = graft.operators.Hnsw.BuildPrefilter(c => skWordsUdf(c))
-    val hnswPath = s"$vecDir/vec768_500k_clu_hnsw_fb3_sk128"
-    buildIfStale(hnswPath, "clu_hnsw_build") {
-      graft.operators.Hnsw.build(clu, m = 8, maxLevel = HMaxLevel,
-          b0 = HMaxLevel, siblingProbe = true, floorBoost = 3,
-          codeFn = c => codeUdf(hPlanes)(c), prefilter = Some(hnswPf))
-        .write.mode("overwrite").partitionBy("lvl").parquet(hnswPath)
-    }
-    val hAdj = spark.read.parquet(hnswPath).persist()
-    val hEdges = hAdj.count()
-    stats("clu_hnsw_edges") = hEdges.toString
-    import spark.implicits._
-    val hQueries = (0 until NQueries).map(i => (i.toLong, cluQv(i)))
-      .toDF("q_id", "q_emb")
-    if (hnswSweep) {
-      val hEntry = graft.operators.Hnsw.entryOf(clu, HMaxLevel)
-      val hnswBatchHits: Map[Long, Set[Long]] = timedMin2B("clu_hnsw_batch_8q") {
-        graft.operators.Hnsw.searchBatch(clu, hAdj, hQueries, k = 10,
-            maxLevel = HMaxLevel, entry0 = hEntry,
-            sched = graft.operators.Hnsw.wideSchedule(HMaxLevel, 2048, 6, 192, 96, 4))
-          .select("q_id", "vec_id").collect()
-          .groupBy(_.getLong(0))
-          .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-      }
-      stats("clu_hnsw_recall_at_10") =
-        f3((0 until NQueries).map(i =>
-          (hnswBatchHits(i.toLong) & cluBrute(i)).size / 10.0).sum / NQueries)
-      stats("clu_hnsw_target_found") =
-        f3((0 until NQueries).count(i =>
-          hnswBatchHits(i.toLong).contains(8000L * i)).toDouble / NQueries)
-    }
-    val hSeedPool = clu.filter(
-      graft.operators.Hnsw.levelCol(col("vec_id"), HMaxLevel) >= 4)
-    val hSeedSched = (3 to 1 by -1).map(l => (l, 256)) ++
-      Seq.fill(4)((0, 128)) ++ Seq((2, 256), (1, 256)) ++ Seq.fill(4)((0, 128))
-    val hnswSeedHits: Map[Long, Set[Long]] = timedMin2B("clu_hnsw_seeded_8q") {
-      graft.operators.Hnsw.searchBatchSeeded(clu, hAdj, hQueries, hSeedPool,
-          seedWidth = 256, k = 10, sched = hSeedSched)
-        .select("q_id", "vec_id").collect()
-        .groupBy(_.getLong(0))
-        .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-    }
-    stats("clu_hnsw_seeded_recall_at_10") =
-      f3((0 until NQueries).map(i =>
-        (hnswSeedHits(i.toLong) & cluBrute(i)).size / 10.0).sum / NQueries)
-    stats("clu_hnsw_seeded_target_found") =
-      f3((0 until NQueries).count(i =>
-        hnswSeedHits(i.toLong).contains(8000L * i)).toDouble / NQueries)
-    hAdj.unpersist()
-
     // ---- CONTINUOUS-MANIFOLD corpus (round-13 verdict task 3): the
-    // geometry the graph tier CLAIMS as its regime — smooth latent
+    // geometry a graph ANN tier would claim as its regime — smooth latent
     // structure where similarity gradients exist everywhere (greedy
     // descent can navigate) but latent clusters do not (centroids
     // aggregate nothing). Construction: each id gets a latent point
@@ -1303,9 +1208,10 @@ object BenchVec extends Serializable {
     // ‖Δz‖ ≈ 0.22 → sim ≈ 0.85, decaying smoothly to ~0.03 at the
     // typical far-pair distance — a global gradient with NO cluster
     // structure (the exact opposite of the 1,024-center twin above).
-    // The same three families are measured here: brute force (truth),
-    // IVF (centroid routing on a centroid-less corpus), and the graph
-    // tier in pure-descent, wide-upper and flat-seeded postures. ----
+    // Measured here: brute force (truth) and IVF (centroid routing on
+    // a centroid-less corpus). The graph tier built for this geometry
+    // lost to IVF here too (recall 0.763 in 15.5 s vs 0.988 in 1.40 s
+    // at nProbe 8) and was removed. ----
     val ManLat = 8
     val ManEll = 0.38
     def u01(seed: Long): Double = (mix(seed) >>> 11).toDouble / (1L << 53).toDouble
@@ -1395,60 +1301,6 @@ object BenchVec extends Serializable {
       .select("count").collect().map(_.getLong(0)).sorted
     stats("man_ivf_cell_occupancy") =
       s"""{"cells":${manCellSizes.length},"min":${manCellSizes.head},"p50":${manCellSizes(manCellSizes.length / 2)},"max":${manCellSizes.last}}"""
-
-    val manHnswPath = s"$vecDir/vec768_500k_man_hnsw_fb3_sk128"
-    buildIfStale(manHnswPath, "man_hnsw_build") {
-      graft.operators.Hnsw.build(man, m = 8, maxLevel = HMaxLevel,
-          b0 = HMaxLevel, siblingProbe = true, floorBoost = 3,
-          codeFn = c => codeUdf(hPlanes)(c), prefilter = Some(hnswPf))
-        .write.mode("overwrite").partitionBy("lvl").parquet(manHnswPath)
-    }
-    val mAdj = spark.read.parquet(manHnswPath).persist()
-    stats("man_hnsw_edges") = mAdj.count().toString
-    val mEntry = graft.operators.Hnsw.entryOf(man, HMaxLevel)
-    val mQueries = (0 until NQueries).map(i => (i.toLong, manQv(i)))
-      .toDF("q_id", "q_emb")
-    def manRecall(prefix: String, hits: Map[Long, Set[Long]]): Unit = {
-      stats(s"${prefix}_recall_at_10") =
-        f3((0 until NQueries).map(i =>
-          (hits(i.toLong) & manBrute(i)).size / 10.0).sum / NQueries)
-      stats(s"${prefix}_target_found") =
-        f3((0 until NQueries).count(i =>
-          hits(i.toLong).contains(8000L * i)).toDouble / NQueries)
-    }
-    if (hnswSweep) {
-      // PURE narrow greedy descent — the walk shape that was BLIND on
-      // the orthogonal-cluster twin (recall 0.05): on a corpus with a
-      // real gradient it is the cheapest posture, so measure it first.
-      manRecall("man_hnsw_descent", timedMin2B("man_hnsw_descent_8q") {
-        graft.operators.Hnsw.searchBatch(man, mAdj, mQueries, k = 10,
-            maxLevel = HMaxLevel, entry0 = mEntry,
-            sched = graft.operators.Hnsw.schedule(HMaxLevel, 96, 16, 4, 1))
-          .select("q_id", "vec_id").collect()
-          .groupBy(_.getLong(0))
-          .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-      })
-    }
-    manRecall("man_hnsw_wide", timedMin2B("man_hnsw_wide_8q") {
-      graft.operators.Hnsw.searchBatch(man, mAdj, mQueries, k = 10,
-          maxLevel = HMaxLevel, entry0 = mEntry,
-          sched = graft.operators.Hnsw.wideSchedule(HMaxLevel, 2048, 6, 192, 96, 4))
-        .select("q_id", "vec_id").collect()
-        .groupBy(_.getLong(0))
-        .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-    })
-    if (hnswSweep) {
-      val mSeedPool = man.filter(
-        graft.operators.Hnsw.levelCol(col("vec_id"), HMaxLevel) >= 4)
-      manRecall("man_hnsw_seeded", timedMin2B("man_hnsw_seeded_8q") {
-        graft.operators.Hnsw.searchBatchSeeded(man, mAdj, mQueries, mSeedPool,
-            seedWidth = 256, k = 10, sched = hSeedSched)
-          .select("q_id", "vec_id").collect()
-          .groupBy(_.getLong(0))
-          .map { case (q, rs) => q -> rs.map(_.getLong(1)).toSet }
-      })
-    }
-    mAdj.unpersist()
 
     calSamples += calibrate()
     calDiskSamples += BenchProbe.calibrateDisk()

@@ -34,7 +34,7 @@ object SparkEntry {
       operators.ResponseCache.queries ++ operators.ProductQuantization.queries ++
       operators.Bpe.queries ++ operators.Graph.queries ++
       operators.Perplexity.queries ++ operators.DataQuality.queries ++
-      operators.Hnsw.queries ++ operators.Serving.queries
+      operators.Serving.queries
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
@@ -50,5 +50,5 @@ object SparkEntry {
       operators.ResponseCache.oracles ++ operators.ProductQuantization.oracles ++
       operators.Bpe.oracles ++ operators.Graph.oracles ++
       operators.Perplexity.oracles ++ operators.DataQuality.oracles ++
-      operators.Hnsw.oracles ++ operators.Serving.oracles
+      operators.Serving.oracles
 }

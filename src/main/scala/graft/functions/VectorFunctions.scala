@@ -254,10 +254,9 @@ object VectorFunctions {
   */
 /** Multi-plane sign sketch of an embedding in ONE codegen pass: bit p
   * of word ⌊p/64⌋ is the sign of dot(emb, planes(p)) — the 128-bit
-  * Hamming sketch used by the HNSW sketch-ranked build and the
-  * dd_semdedup_sketch prefilter. The plane matrix rides as a codegen
-  * reference object. The alternative — stacking one `DotProduct`
-  * expression per plane — builds ~136 expression trees per row, which
+  * Hamming sketch used by the dd_semdedup_sketch prefilter. The plane
+  * matrix rides as a codegen reference object. The alternative —
+  * stacking one `DotProduct` expression per plane — builds ~136 expression trees per row, which
   * falls out of whole-stage codegen's method budget (measured:
   * dd_semdedup_sketch's coding pass at sf0.1 was ~4× the exact leg's
   * whole cost before this expression existed). Per-plane accumulation

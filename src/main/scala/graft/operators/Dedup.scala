@@ -662,9 +662,11 @@ object Dedup {
     *  1. every character position p of every doc emits its k-char
     *     gram substr(text, p, k) — map-only expansion;
     *  2. grams occurring in MORE THAN ONE distinct doc are the
-    *     duplicated anchors (one groupBy-gram aggregation — at 100 TB
-    *     the gram key becomes an 8-byte rolling hash with a verify
-    *     pass; here the literal gram keeps the oracle exact);
+    *     duplicated anchors (one groupBy-gram aggregation on the
+    *     literal gram. An 8-byte gram-hash key plus a candidates-only
+    *     verify pass gave the same output but ran slower on both
+    *     500k-doc BENCHDOC corpora, 401 s vs 170 s low-dup and 103 s
+    *     vs 85 s sparse, and was removed);
     *  3. a position is covered iff its gram is duplicated (semi-join
     *     back on the gram key);
     *  4. per doc, covered intervals [p, p+k-1] merge into maximal
@@ -699,70 +701,6 @@ object Dedup {
       .agg(min(col("doc_id")).as("_mn"), max(col("doc_id")).as("_mx"))
       .filter(col("_mn") =!= col("_mx")).select("gram")
     val covered = grams.join(dup, Seq("gram"), "left_semi")
-      .select("doc_id", "p")
-    val isl = covered
-      .withColumn("_prev", lag(col("p"), 1).over(
-        Window.partitionBy(col("doc_id")).orderBy(col("p"))))
-      .withColumn("_new",
-        when(col("_prev").isNull || col("p") > col("_prev") + k, 1)
-          .otherwise(0))
-      .withColumn("_isl", sum(col("_new")).over(
-        Window.partitionBy(col("doc_id")).orderBy(col("p"))))
-    val spans = isl.groupBy(col("doc_id"), col("_isl"))
-      .agg(min(col("p")).as("span_start"),
-        (max(col("p")) + (k - 1) - min(col("p")) + 1).as("span_len"))
-      .filter(col("span_len") >= minLen)
-    spans.join(base, Seq("doc_id"))
-      .select(col("doc_id"), col("span_start"), col("span_len"),
-        md5(col("_t").substr(col("span_start"),
-          col("span_len").cast("int"))).as("span_md5"))
-  }
-
-  /** The 100 TB form of [[substringDedupSpans]] — SAME OUTPUT,
-    * hash-narrowed shuffles: the first (and dominant) groupBy keys on
-    * `xxhash64(gram)` (8 bytes) instead of the k-char gram string,
-    * and only CANDIDATE positions (those whose hash is cross-doc
-    * duplicated) pay a gram-string verify pass — recomputed by
-    * substr from a doc_id join, grouped on the true gram, so a hash
-    * collision can never mark a span (any truly-duplicated gram has
-    * ALL its occurrences in the candidate set, hence the verify group
-    * sees every occurrence and collision-only candidates fail it).
-    * On a genuinely sparse-duplication corpus the verify subset is a
-    * sliver, so the whole job shuffles 8-byte keys where the exact
-    * mode shuffles k-char strings. MEASURED CAVEAT (BENCHDOC r15,
-    * PERF.md): both synthetic bench corpora turn out ~fully covered
-    * (shared vocabularies make cross-doc 20-grams ubiquitous), and
-    * under total coverage this mode is 2.39× SLOWER than exact — the
-    * verify pass re-pays the wide shuffle when ~every position is a
-    * candidate. Default to [[substringDedupSpans]]; reach for this
-    * form only when the corpus's dup rate is known to be small (real
-    * web text), the regime the hash anchors were designed for.
-    * CurationOpsSpec pins hashed == exact on the fixture corpus. */
-  def substringDedupSpansHashed(docs: DataFrame, idCol: String,
-                                textCol: String, k: Int,
-                                minLen: Int): DataFrame = {
-    // fanOut: same single-file-scan serialization note as the exact mode
-    val base = Tables.fanOut(docs.filter(length(col(textCol)) >= k)
-      .select(col(idCol).cast("long").as("doc_id"), col(textCol).as("_t")))
-    val pos = base
-      .select(col("doc_id"), col("_t"),
-        explode(sequence(lit(1), length(col("_t")) - (k - 1))).as("p"))
-      .select(col("doc_id"), col("p"),
-        xxhash64(col("_t").substr(col("p"), lit(k))).as("h"))
-    // min/max ≠ pair instead of countDistinct > 1 — map-side partial
-    // aggregation, no distinct expansion (same rationale as the exact
-    // mode's dup set)
-    val dupH = pos.groupBy("h")
-      .agg(min(col("doc_id")).as("_mn"), max(col("doc_id")).as("_mx"))
-      .filter(col("_mn") =!= col("_mx")).select("h")
-    val cand = pos.join(dupH, Seq("h"), "left_semi").select("doc_id", "p")
-    val candGram = cand.join(base, Seq("doc_id"))
-      .select(col("doc_id"), col("p"),
-        col("_t").substr(col("p"), lit(k)).as("gram"))
-    val dupG = candGram.groupBy("gram")
-      .agg(min(col("doc_id")).as("_mn"), max(col("doc_id")).as("_mx"))
-      .filter(col("_mn") =!= col("_mx")).select("gram")
-    val covered = candGram.join(dupG, Seq("gram"), "left_semi")
       .select("doc_id", "p")
     val isl = covered
       .withColumn("_prev", lag(col("p"), 1).over(
@@ -898,16 +836,6 @@ object Dedup {
     // report) with the per-doc removal-ready char-span form.
     "dd_substring_exact" -> ((s, d) =>
       substringDedupSpans(Tables.documents(s, d), "doc_id", "text",
-          k = 20, minLen = 100)
-        .orderBy("doc_id", "span_start")),
-
-    // The scale-path physical variant under the SAME oracle: 8-byte
-    // rolling-hash anchors + a candidates-only gram-string verify —
-    // output provably identical to the exact mode (a collision can
-    // mark a candidate but never survive the verify), so one DuckDB
-    // replay gates both plans, the semDedupAuto pattern.
-    "dd_substring_hashed" -> ((s, d) =>
-      substringDedupSpansHashed(Tables.documents(s, d), "doc_id", "text",
           k = 20, minLen = 100)
         .orderBy("doc_id", "span_start")),
 
@@ -1656,8 +1584,8 @@ object Dedup {
          |  CAST(count(*) - 1 AS BIGINT) AS n_dropped
          |FROM ranked GROUP BY comp ORDER BY comp""".stripMargin)
 
-  /** The anchor+island span CTE chain (shared by the report, hashed
-    * and scrub substring oracles): docs ≥ 20 chars, every position's
+  /** The anchor+island span CTE chain (shared by the report and
+    * scrub substring oracles): docs ≥ 20 chars, every position's
     * 20-gram, >1-distinct-doc duplication, coverage, lag/cumsum
     * island merge. `spans` holds the UNFILTERED islands — consumers
     * apply the ≥ 100-char floor. */
@@ -1795,10 +1723,7 @@ object Dedup {
 
     // The anchor+island replay: same 20-grams, same >1-distinct-doc
     // coverage rule, same lag/cumsum interval merge, same md5 of the
-    // span substring. The hashed gate shares it verbatim (same logical
-    // result by construction — the verify pass removes every
-    // collision-only candidate).
-    "dd_substring_hashed" -> substringOracleSql,
+    // span substring.
     "dd_substring_exact" -> substringOracleSql,
     "dd_substring_scrub" -> substringScrubOracleSql,
     // The rewrite form: tokens of the LATER doc (doc_b keeps the

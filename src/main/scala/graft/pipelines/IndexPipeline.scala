@@ -685,7 +685,7 @@ object IndexPipeline {
     // (subspace, codeword), the member-id digest, classes ranked by
     // min id — plus inc_matches_full, the engine's own from-scratch
     // snapshot-2 encode agreeing class-for-class. Completes the
-    // CDC-maintained set: IVF (x17), HNSW (ann_hnsw_incremental), PQ.
+    // CDC-maintained set: IVF (x17), PQ.
     "x19_cdc_pq_maintain" -> ((s, d) => {
       import graft.operators.{ProductQuantization => PQc}
       val dir = snapDir(d) + "_pqm"

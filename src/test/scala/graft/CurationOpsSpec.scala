@@ -92,19 +92,6 @@ class CurationOpsSpec extends AnyFunSuite {
     assert(s1._2 == 22 && s2._2 == 2)
   }
 
-  test("substringDedupSpansHashed == exact mode on the fixture corpus (collision verify holds)") {
-    import graft.operators.Dedup
-    val docs = Tables.documents(spark, d)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id", "span_start", "span_len", "span_md5")
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2),
-          r.getString(3))).toSet
-    val exact = rows(Dedup.substringDedupSpans(docs, "doc_id", "text", 20, 50))
-    val hashed = rows(Dedup.substringDedupSpansHashed(docs, "doc_id", "text", 20, 50))
-    assert(exact.nonEmpty)
-    assert(hashed == exact)
-  }
-
   test("sharedSpans maxGramDf drops ubiquitous grams, keeps rare pairs") {
     // one 12-token boilerplate span on EVERY doc (df = corpus size)
     // plus the rare %13 passage: with the cap below corpus size, only

@@ -11,6 +11,10 @@ class ExtensionsAndPropsSpec extends AnyFunSuite {
     val orphanOracles = SparkEntry.oracleSql.keySet -- qkeys
     assert(orphanOracles.isEmpty,
       s"oracleSql entries without a query (typo?): $orphanOracles")
+    // and the reverse: every query is oracle-gated, so a gate can only
+    // leave together with the query it gates
+    val ungated = qkeys -- SparkEntry.oracleSql.keySet
+    assert(ungated.isEmpty, s"queries without oracle SQL: $ungated")
     val orphanHeadline = Bench.headline.toSet -- qkeys
     assert(orphanHeadline.isEmpty,
       s"Bench.headline entries without a query (rename?): $orphanHeadline")
