@@ -2,13 +2,16 @@
 """Local stand-in for the driver's correctness gate: run each oracle SQL in
 DuckDB against the sf parquet tables, load the Verify parquet output, and
 compare schema/rows exactly (columns sorted by name, rows in result order).
-Usage: check.py <sfdir> <verify_outdir>
+Usage: check.py <sfdir> <verify_outdir> [name-prefix ...]
+With prefixes, only the queries whose names start with one of them are
+compared, so a long run can be split by name range (e.g. `a b c`, then
+`d e`, ...). Each result line is flushed as it is printed.
 """
 import sys, json, glob, os
 import duckdb
 import pandas as pd
 
-sfdir, outdir = sys.argv[1], sys.argv[2]
+sfdir, outdir, prefixes = sys.argv[1], sys.argv[2], tuple(sys.argv[3:])
 con = duckdb.connect()
 for t in ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split():
@@ -18,12 +21,12 @@ oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 ok = fail = 0
 for name in sorted(os.listdir(outdir)):
     p = f"{outdir}/{name}"
-    if not os.path.isdir(p):
+    if not os.path.isdir(p) or (prefixes and not name.startswith(prefixes)):
         continue
     files = glob.glob(f"{p}/*.parquet")
     got = pd.concat([pd.read_parquet(f) for f in sorted(files)], ignore_index=True)
     if name not in oracle:
-        print(f"{name:28s} rows-only: {len(got)} rows")
+        print(f"{name:28s} rows-only: {len(got)} rows", flush=True)
         continue
     exp = con.execute(oracle[name]).fetchdf()
     got = got[sorted(got.columns)]
@@ -56,9 +59,9 @@ for name in sorted(os.listdir(outdir)):
                 status.append(f"VAL col={c} row={i} got={g.iloc[i]!r} exp={e.iloc[i]!r}")
     if status:
         fail += 1
-        print(f"{name:28s} FAIL  {'; '.join(status)}")
+        print(f"{name:28s} FAIL  {'; '.join(status)}", flush=True)
     else:
         ok += 1
-        print(f"{name:28s} OK    ({len(got)} rows)")
-print(f"\n{ok} ok, {fail} fail")
+        print(f"{name:28s} OK    ({len(got)} rows)", flush=True)
+print(f"\n{ok} ok, {fail} fail", flush=True)
 sys.exit(1 if fail else 0)

@@ -36,6 +36,12 @@ import org.apache.spark.sql.expressions.Window
   *    without its tombstones, a half-written parquet dir, a
   *    mid-compaction hole). Marker-less `seg_`/`tomb_` dirs are
   *    invisible debris, reclaimed by the next [[compact]].
+  *  - SIZING: every layout decision — the [[init]] base, each delta,
+  *    each fold — takes `ceil(bytes / spark.graft.byid.deltaTargetBytes)`
+  *    files (1..256; an explicit file count pins it), measured from
+  *    parquet bytes on the driver: the staged raw frame for init and
+  *    deltas, the committed segments for a fold. A churn-scale store
+  *    is therefore one id-sorted file, written with no shuffle.
   *  - RESOLUTION (reader-side merge-on-read): a fetch reads EVERY
   *    committed segment with the same `Layout.idsPredicate` or-of-eq
   *    (each scan page-prunes to the candidate ids — K segments cost K
@@ -137,26 +143,27 @@ object ByidStore {
 
   /** Bootstrap: write the full corpus as base segment 0 in the
     * point-fetch layout. The one intentionally O(corpus) call.
-    * Committed like any batch: staged write, rename, marker. Persists
-    * the store's schema as a `_schema.json` sidecar so every later
-    * read (segments, resolved view, collision guard) passes an
-    * explicit schema — parquet schema inference launches one Spark
-    * job per `spark.read.parquet` call in Spark 4, and a maintain
-    * loop reads segments dozens of times per epoch (optimization r17,
-    * guide §1.2: a scheduler round-trip per metadata question is the
-    * episode loops' floor). */
-  def init(df: DataFrame, idCol: String, path: String, nFiles: Int = 32): Unit = {
+    * Committed like any batch: staged write, rename, marker. The frame
+    * is staged RAW first ([[stageRaw]], the same shape as
+    * [[applyCdc]]'s additions half): its plan — e.g. lexDocVectors
+    * over the corpus — runs once, at natural parallelism, with no
+    * persist; the file count is sized from the staged bytes
+    * (`nFiles = 0`, the default; a positive `nFiles` pins it), and
+    * the layout pass re-reads the staged parquet. Persists the
+    * store's schema as a `_schema.json` sidecar so every later read
+    * (segments, resolved view, collision guard) passes an explicit
+    * schema — parquet schema inference launches one Spark job per
+    * `spark.read.parquet` call in Spark 4, and a maintain loop reads
+    * segments dozens of times per epoch (optimization r17, guide
+    * §1.2: a scheduler round-trip per metadata question is the
+    * episode loops' floor) — and the sidecar is the schema every CDC
+    * batch must match. */
+  def init(df: DataFrame, idCol: String, path: String, nFiles: Int = 0): Unit = {
     require(maxBatch(path) < 0, s"byid store at $path already initialized")
+    val spark = df.sparkSession
     val stage = stageDir(path, 0)
-    // persist across pointFetchWrite's two passes (range sampling +
-    // write) so a derived bootstrap frame (e.g. lexDocVectors over the
-    // corpus) is computed once, not twice; respect a caller's own
-    // persist by only releasing a cache this call created
-    val ownCache = nFiles > 1 &&
-      df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    val src = if (ownCache) df.persist() else df
-    try Layout.pointFetchWrite(src, idCol, s"$stage/seg", nFiles)
-    finally if (ownCache) src.unpersist(): Unit
+    val (_, n, raw) = stageRaw(spark, path, df, None, stage, nFiles)
+    Layout.pointFetchWrite(raw, idCol, s"$stage/seg", n)
     // sidecar BEFORE the commit marker: file-source reads force
     // nullability anyway, so store the asNullable form — identical to
     // what inference would return
@@ -256,6 +263,66 @@ object ByidStore {
     (rows, files.map(_.getLen).sum)
   }
 
+  /** The store's one sizing rule: `ceil(bytes / target)` files,
+    * clamped to 1..256, with `spark.graft.byid.deltaTargetBytes`
+    * (default 128 MB) as the target; a positive `pinned` wins. Every
+    * layout decision — [[init]], [[applyCdc]]'s delta, the
+    * [[checkpoint]]/[[compact]] fold — sizes through it, so a
+    * churn-scale store is one id-sorted file (`Layout.pointFetchWrite`'s
+    * shuffle-free branch) and a backfill-scale one fans out. */
+  private def sizedFiles(spark: SparkSession, bytes: Long, pinned: Int): Int =
+    if (pinned > 0) pinned
+    else {
+      val target = spark.conf.getOption("spark.graft.byid.deltaTargetBytes")
+        .map(_.toLong).getOrElse(128L * 1024 * 1024)
+      math.max(1L, math.min(256L, (bytes + target - 1) / target)).toInt
+    }
+
+  /** Stage `df` RAW under `stage/raw` (one evaluation of its plan, at
+    * its natural partitioning — no sort, no shuffle), then read back
+    * its row count and size from the staged FOOTERS on the driver.
+    * Returns (rows, layout file count, the staged frame). The staged
+    * frame re-reads cheap parquet, so a multi-file layout's range
+    * sampling never re-evaluates the upstream plan.
+    *
+    * SCHEMA GUARD: when the store already has a sidecar (`expected`),
+    * the frame's columns must match it by name and type (in
+    * [[asNullable]] form; column order is free) — checked before
+    * anything is written. Reading the batch with the sidecar schema
+    * would otherwise drop an extra column and commit a missing one as
+    * null, silently. */
+  private def stageRaw(spark: SparkSession, path: String, df: DataFrame,
+                       expected: Option[org.apache.spark.sql.types.StructType],
+                       stage: String, pinned: Int): (Long, Int, DataFrame) = {
+    expected.foreach(requireSchema(path, df.schema, _))
+    deleteRecursively(new File(stage)) // single-writer: only crash debris
+    df.write.mode("overwrite").parquet(s"$stage/raw")
+    val (rows, bytes) = parquetRowsBytes(spark, s"$stage/raw")
+    val raw = spark.read.schema(expected.getOrElse(
+        asNullable(df.schema).asInstanceOf[org.apache.spark.sql.types.StructType]))
+      .parquet(s"$stage/raw")
+    (rows, sizedFiles(spark, bytes, pinned), raw)
+  }
+
+  private def requireSchema(path: String,
+                            got: org.apache.spark.sql.types.StructType,
+                            want: org.apache.spark.sql.types.StructType): Unit = {
+    def byName(st: org.apache.spark.sql.types.StructType) =
+      st.fields.map(f => f.name -> asNullable(f.dataType)).toMap
+    val (g, w) = (byName(got), byName(want))
+    if (g != w) {
+      val extra = g.keySet -- w.keySet
+      val missing = w.keySet -- g.keySet
+      val changed = (g.keySet & w.keySet).filter(k => g(k) != w(k))
+        .map(k => s"$k: ${w(k).simpleString} -> ${g(k).simpleString}")
+      throw new IllegalArgumentException(
+        s"byid store at $path: CDC batch schema does not match the store's " +
+          s"_schema.json (extra: ${extra.mkString(", ")}; missing: " +
+          s"${missing.mkString(", ")}; changed type: ${changed.mkString(", ")}) " +
+          "— a store's schema is fixed at init")
+    }
+  }
+
   /** Apply one CDC batch: `removals` (one `idCol` column — deletes +
     * update preimages) becomes a tombstone, `additions` (full payload
     * rows — inserts + update postimages) becomes a delta segment in
@@ -276,16 +343,21 @@ object ByidStore {
     * sampling pass of a multi-file layout re-reads cheap parquet,
     * never re-evaluates the upstream CDC plan). The churn-bounded
     * common case (staged bytes ≤ `spark.graft.byid.deltaTargetBytes`,
-    * default 128 MB) lays out ONE id-sorted file via coalesce(1)+sort
-    * — zero shuffles, zero AQE stage jobs — and the uniqueness check
-    * is a single coalesced aggregate job. Four jobs per batch end to
-    * end (was 7 with AQE stage materialization in r16).
+    * default 128 MB) lays out ONE id-sorted file through
+    * `Layout.pointFetchWrite`'s one-file branch (coalesce(1)+sort —
+    * zero shuffles, zero AQE stage jobs), and the uniqueness check is
+    * a single coalesced aggregate job. Four jobs per batch end to end
+    * (was 7 with AQE stage materialization in r16).
     *
     * SCALE (r16 verdict task 6): `deltaFiles = 0` (the default) sizes
-    * the delta file count from the staged bytes, so a backfill-scale
-    * batch parallelizes the sort+write across ceil(bytes/target)
-    * range-partitioned files instead of funneling through one task;
-    * an explicit `deltaFiles > 0` pins the count.
+    * the delta file count from the staged bytes ([[sizedFiles]]), so
+    * a backfill-scale batch parallelizes the sort+write across
+    * ceil(bytes/target) range-partitioned files instead of funneling
+    * through one task; an explicit `deltaFiles > 0` pins the count.
+    *
+    * SCHEMA: `additions` must carry exactly the store's columns and
+    * types (the `_schema.json` sidecar written at [[init]]) — a
+    * drifted batch throws before anything is staged ([[stageRaw]]).
     *
     * CRASH-ATOMIC: both parts are staged under `_stage_N/`, renamed
     * into place, and made visible by the single `commit_N` marker
@@ -297,26 +369,15 @@ object ByidStore {
                deltaFiles: Int = 0): Int = {
     val batch = maxBatch(path) + 1
     val stage = stageDir(path, batch)
-    deleteRecursively(new File(stage)) // single-writer: only crash debris
-    additions.write.mode("overwrite").parquet(s"$stage/raw")
+    val (nAdd, nFiles, raw) =
+      stageRaw(spark, path, additions, readSchema(path), stage, deltaFiles)
     removals.select(col(idCol).cast("long").as(idCol))
       .coalesce(1).write.mode("overwrite").parquet(s"$stage/tomb")
     // staged parquet counts/sizes are FOOTER reads on the driver — the
-    // upstream plans ran exactly once, at the writes above, and no
-    // count job is launched
-    val (nAdd, addBytes) = parquetRowsBytes(spark, s"$stage/raw")
+    // upstream plans ran exactly once, at the writes, and no count job
+    // is launched
     val (nRem, _) = parquetRowsBytes(spark, s"$stage/tomb")
     if (nAdd > 0) {
-      val target = spark.conf.getOption("spark.graft.byid.deltaTargetBytes")
-        .map(_.toLong).getOrElse(128L * 1024 * 1024)
-      val nFiles =
-        if (deltaFiles > 0) deltaFiles
-        else math.max(1L, math.min(256L,
-          (addBytes + target - 1) / target)).toInt
-      val raw = readSchema(path) match {
-        case Some(st) => spark.read.schema(st).parquet(s"$stage/raw")
-        case None => spark.read.parquet(s"$stage/raw")
-      }
       // WITHIN-BATCH id uniqueness (r15 verdict task 7): two rows for
       // one id in one segment tie on `seg` in the merge window, so the
       // resolved winner would be arbitrary — reject loudly before the
@@ -329,15 +390,7 @@ object ByidStore {
         s"byid store at $path: CDC batch carries ${nAdd - nDis} duplicate " +
           s"$idCol rows — one postimage per id per batch (collapse the feed " +
           "first, e.g. streamByidMaintain's orderCol rule)")
-      // point-fetch layout from the materialized staged bytes: one
-      // sorted file needs no shuffle at all; a multi-file layout's
-      // range sampling re-reads the staged parquet, not the CDC plan
-      if (nFiles == 1)
-        raw.coalesce(1).sortWithinPartitions(idCol)
-          .write.mode("overwrite")
-          .option("parquet.page.row.count.limit", 8)
-          .parquet(s"$stage/seg")
-      else Layout.pointFetchWrite(raw, idCol, s"$stage/seg", nFiles)
+      Layout.pointFetchWrite(raw, idCol, s"$stage/seg", nFiles)
     }
     if (nAdd == 0 && nRem == 0) {
       deleteRecursively(new File(stage))
@@ -359,7 +412,7 @@ object ByidStore {
   def applyCdcAutoCompact(spark: SparkSession, path: String, removals: DataFrame,
                           additions: DataFrame, idCol: String,
                           maxSegments: Int = 8, deltaFiles: Int = 0,
-                          compactFiles: Int = 32): Int = {
+                          compactFiles: Int = 0): Int = {
     val b = applyCdc(spark, path, removals, additions, idCol, deltaFiles)
     if (segments(path).size + tombstones(path).size > maxSegments)
       compact(spark, path, idCol, compactFiles)
@@ -377,10 +430,18 @@ object ByidStore {
     * [[checkpoint]] output), `pin` the newest batch the snapshot saw;
     * CDC batches applied after `pin` are invisible to the pinned
     * reader, so a serve-during-refresh pairs assets and corpus bytes
-    * from the SAME snapshot, never a torn mix. */
+    * from the SAME snapshot, never a torn mix.
+    *
+    * `onePartition` (the one-file fold) coalesces the segment and
+    * tombstone unions to one partition BEFORE the merge: a single
+    * partition satisfies the window's and the tombstone aggregate's
+    * distribution, so the view plans with no exchange at all. */
   private def resolved(spark: SparkSession, path: String, idCol: String,
                        pred: Option[Column],
-                       range: Option[(Int, Int)] = None): DataFrame = {
+                       range: Option[(Int, Int)] = None,
+                       onePartition: Boolean = false): DataFrame = {
+    def gather(df: DataFrame): DataFrame =
+      if (onePartition) df.coalesce(1) else df
     def inRange(n: Int): Boolean =
       range.forall { case (base, pin) => n >= base && n <= pin }
     val segs = segments(path).filter(inRange)
@@ -396,10 +457,10 @@ object ByidStore {
       val df = readSeg(spark, path, segs.head)
       return pred.fold(df)(p => df.filter(p)).withColumn("seg", lit(segs.head))
     }
-    val rows = segs.map { n =>
+    val rows = gather(segs.map { n =>
       val df = readSeg(spark, path, n)
       pred.fold(df)(p => df.filter(p)).withColumn("seg", lit(n))
-    }.reduce(_.unionByName(_))
+    }.reduce(_.unionByName(_)))
     val latest = rows
       .withColumn("_rn", row_number().over(
         Window.partitionBy(col(idCol)).orderBy(col("seg").desc)))
@@ -407,10 +468,10 @@ object ByidStore {
     val tombs = tombsAll
     if (tombs.isEmpty) latest
     else {
-      val dead = tombs.map { n =>
+      val dead = gather(tombs.map { n =>
         val df = readTomb(spark, path, n, idCol)
         pred.fold(df)(p => df.filter(p)).withColumn("tseg", lit(n))
-      }.reduce(_.unionByName(_))
+      }.reduce(_.unionByName(_)))
         .groupBy(col(idCol)).agg(max(col("tseg")).as("tseg"))
       // tombstone batch b kills versions with seg < b; the same
       // batch's postimage (seg = b) and later re-inserts survive
@@ -450,20 +511,34 @@ object ByidStore {
     * oldest still-pinned base happens at vacuum time
     * ([[retireBelow]]); a standalone store with no pinned readers
     * uses [[compact]], which folds and retires in one call. Returns
-    * the new base's batch number. */
+    * the new base's batch number.
+    *
+    * SIZING: `nFiles = 0` (the default) sizes the fold from the
+    * committed segments' parquet bytes, listed on the driver
+    * ([[sizedFiles]]); a positive `nFiles` pins it. A churn-scale
+    * store folds to ONE file: the merge view and the collision guard
+    * run over one coalesced partition, so the fold is one
+    * exchange-free pass — no range sampling, no range shuffle, no
+    * persisted view — and the file gets the layout's 8-row id pages
+    * from its first row. A multi-file fold persists the view across the layout's two
+    * passes (range sampling + write) so the merge runs once. */
   def checkpoint(spark: SparkSession, path: String, idCol: String,
-                 nFiles: Int = 32): Int = {
-    tenantCollisionGuard(spark, path, idCol)
+                 nFiles: Int = 0): Int = {
+    val segBytes = segments(path)
+      .flatMap(n => parquetFiles(spark, segDir(path, n))).map(_.getLen).sum
+    val n = sizedFiles(spark, segBytes, nFiles)
+    tenantCollisionGuard(spark, path, idCol, onePartition = n == 1)
     val newBase = maxBatch(path) + 1
     val stage = stageDir(path, newBase)
     deleteRecursively(new File(stage))
-    // persist the merge-on-read view across pointFetchWrite's two
-    // passes (range sampling + write): the fold — the store's one
-    // O(corpus) action — is evaluated ONCE, not twice (guide §1.2:
-    // don't compute things twice; the cache is released immediately)
-    val view = resolved(spark, path, idCol, None).drop("seg").persist()
-    try Layout.pointFetchWrite(view, idCol, s"$stage/seg", nFiles)
-    finally view.unpersist()
+    val view = resolved(spark, path, idCol, None, onePartition = n == 1)
+      .drop("seg")
+    if (n == 1) Layout.pointFetchWrite(view, idCol, s"$stage/seg", 1)
+    else {
+      view.persist()
+      try Layout.pointFetchWrite(view, idCol, s"$stage/seg", n)
+      finally view.unpersist(): Unit
+    }
     rename(s"$stage/seg", segDir(path, newBase))
     commit(path, newBase)
     deleteRecursively(new File(stage))
@@ -487,7 +562,7 @@ object ByidStore {
     * reference's ChromaDB ids are global uuids,
     * vector_db_service.py:165-261). */
   private def tenantCollisionGuard(spark: SparkSession, path: String,
-                                   idCol: String): Unit = {
+                                   idCol: String, onePartition: Boolean): Unit = {
     val segs = segments(path)
     if (segs.size < 2) return // one segment: applyCdc's per-batch
                               // uniqueness already proved id-disjoint
@@ -495,7 +570,10 @@ object ByidStore {
     if (!head.columns.contains("tenant")) return
     val union = segs.map(n => readSeg(spark, path, n)
         .select(col(idCol), col("tenant"))).reduce(_.unionByName(_))
-    val bad = union.groupBy(col(idCol))
+    // a one-file fold's store fits one task: aggregate the coalesced
+    // union with no exchange (one job)
+    val src = if (onePartition) union.coalesce(1) else union
+    val bad = src.groupBy(col(idCol))
       .agg(countDistinct(col("tenant")).as("_nt"))
       .filter(col("_nt") > 1).count()
     require(bad == 0,
@@ -538,7 +616,7 @@ object ByidStore {
     *  3. stale stages and uncommitted debris from crashed batches are
     *     vacuumed last. */
   def compact(spark: SparkSession, path: String, idCol: String,
-              nFiles: Int = 32): Unit =
+              nFiles: Int = 0): Unit =
     retireBelow(path, checkpoint(spark, path, idCol, nFiles))
 
   private def deleteRecursively(f: File): Unit = {

@@ -61,13 +61,33 @@ object Layout {
     * fixed footer+offset-index cost. Row-group size is left at the
     * default — parquet's writer enforces a ≥100-row minimum per size
     * check, so small block sizes bottom out at ~100-row groups (19.5×),
-    * while page pruning goes finer. */
+    * while page pruning goes finer.
+    *
+    * FIRST PAGE: the page row limit is only enforced at a page-size
+    * check, and parquet's first check comes at row
+    * `parquet.page.size.row.check.min` (default 100) — so by default
+    * every file's first 100 rows share one page, and a file of < 100
+    * rows is ONE page the index cannot prune inside. The writer sets
+    * that minimum to 8 as well, so every page, the first included,
+    * holds ≤ 8 rows (ByidStoreSpec reads the offset index to pin it).
+    *
+    * ONE FILE (`nFiles == 1`): coalesce(1) + sortWithinPartitions —
+    * no range sampling job and no shuffle; the whole input is sorted
+    * in one task, so this is the branch for churn-scale inputs
+    * (ByidStore sizes its layouts so small stores land here). More
+    * files range-partition on the id: one sampling pass, one shuffle,
+    * disjoint per-file id ranges. */
   def pointFetchWrite(df: DataFrame, idCol: String, path: String,
-                      nFiles: Int = 32): Unit =
-    df.repartitionByRange(nFiles, col(idCol)).sortWithinPartitions(idCol)
+                      nFiles: Int = 32): Unit = {
+    val laid =
+      if (nFiles == 1) df.coalesce(1)
+      else df.repartitionByRange(nFiles, col(idCol))
+    laid.sortWithinPartitions(idCol)
       .write.mode("overwrite")
       .option("parquet.page.row.count.limit", 8)
+      .option("parquet.page.size.row.check.min", 8)
       .parquet(path)
+  }
 
   /** Point-fetch predicate: a BALANCED or-of-equality tree instead of
     * `isin`. Spark translates `isin` above

@@ -20,6 +20,87 @@ class ByidStoreSpec extends AnyFunSuite {
     ids.map(i => (i, s"$tag-$i", i * 10)).toDF("id", "payload", "v")
   }
 
+  /** Run `body` under its own job group and return the descriptions
+    * of the jobs it launched (stage names). Counting only this group
+    * keeps the guard exact on the shared SparkContext, where an
+    * unfiltered listener would count concurrent suites' jobs. */
+  private def jobsOf(what: String)(body: => Unit): Seq[String] = {
+    val group = s"byid-guard-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        if (g == group)
+          jobs.add(js.stageInfos.map(_.name).mkString(" | ")): Unit
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, what)
+      body
+      graft.BenchProbe.drainListenerBus(spark)
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    jobs.toArray.map(_.toString).toSeq
+  }
+
+  private def parquetFiles(dir: String): Seq[java.io.File] =
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(_.getName.endsWith(".parquet")).toSeq
+
+  /** Per-file (min, max) id of a segment dir, ascending by min; the
+    * files of a multi-file layout must cover disjoint id ranges, so
+    * the page pruning contract holds file by file. */
+  private def assertDisjointIdRanges(dir: String): Unit = {
+    val ranges = parquetFiles(dir).map { f =>
+      val r = spark.read.parquet(f.getAbsolutePath)
+        .agg(min("id"), max("id")).head()
+      (r.getLong(0), r.getLong(1))
+    }.sortBy(_._1)
+    ranges.sliding(2).foreach {
+      case Seq((_, hi), (lo2, _)) => assert(hi < lo2,
+        s"layout files must cover disjoint id ranges: $ranges")
+      case _ =>
+    }
+  }
+
+  /** Row count of every data page of the `id` column, across the
+    * files and row groups of a segment dir — read from the parquet
+    * OFFSET INDEX, the structure page pruning actually consults. */
+  private def idPageRows(dir: String): Seq[Long] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    parquetFiles(dir).flatMap { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf))
+      try {
+        import scala.jdk.CollectionConverters._
+        r.getFooter.getBlocks.asScala.toSeq.flatMap { b =>
+          val chunk = b.getColumns.asScala.find(_.getPath.toDotString == "id").get
+          val oi = r.readOffsetIndex(chunk)
+          assert(oi != null, s"$f: id column has no offset index")
+          (0 until oi.getPageCount).map(i =>
+            oi.getLastRowIndex(i, b.getRowCount) - oi.getFirstRowIndex(i) + 1)
+        }
+      } finally r.close()
+    }
+  }
+
+  private def withDeltaTarget(bytes: Long)(body: => Unit): Unit = {
+    val key = "spark.graft.byid.deltaTargetBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, bytes.toString)
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("init + fetch serves the base segment") {
     val path = freshDir()
     ByidStore.init(corpus(0L until 20L, "a"), "id", path, nFiles = 2)
@@ -52,29 +133,9 @@ class ByidStoreSpec extends AnyFunSuite {
     import spark.implicits._
     val path = freshDir()
     ByidStore.init(corpus(0L until 20L, "a"), "id", path, nFiles = 2)
-    // Count only THIS call's jobs via a job group (ADVICE r16: the
-    // shared SparkContext serves every suite — an unfiltered listener
-    // counts concurrent suites' jobs and flakes).
-    val group = s"byid-cdc-guard-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-        if (g == group)
-          jobs.add(js.stageInfos.map(_.name).mkString(" | ")): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, "applyCdc job-shape guard")
+    val got = jobsOf("applyCdc job-shape guard") {
       ByidStore.applyCdc(spark, path, Seq(3L, 5L).toDF("id"),
         corpus(Seq(3L, 200L), "b"), "id")
-      graft.BenchProbe.drainListenerBus(spark)
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
     }
     // Exactly one action per input plan (raw additions stage, tombstone
     // write) + the coalesced dup-check aggregate + the shuffle-free
@@ -82,7 +143,6 @@ class ByidStoreSpec extends AnyFunSuite {
     // footer reads. A regression to count-after-write, range-sampled
     // delta writes, or a shuffling layout pass (whose AQE stage
     // materialization adds jobs) shows up as extra jobs here.
-    val got = jobs.toArray.map(_.toString)
     assert(got.length <= 4,
       s"applyCdc launched ${got.length} jobs (> 4):\n  ${got.mkString("\n  ")}")
   }
@@ -91,32 +151,17 @@ class ByidStoreSpec extends AnyFunSuite {
     import spark.implicits._
     val path = freshDir()
     ByidStore.init(corpus(0L until 4L, "a"), "id", path, nFiles = 1)
-    val prev = spark.conf.getOption("spark.graft.byid.deltaTargetBytes")
-    spark.conf.set("spark.graft.byid.deltaTargetBytes", "4096")
-    try {
+    withDeltaTarget(4096) {
       // a "backfill-scale" batch relative to the 4 KB target: fat
       // payloads force staged bytes past several multiples of it
       val fat = (100L until 400L).map(i => (i, "x" * 200, i)).toDF("id", "payload", "v")
       val b = ByidStore.applyCdc(spark, path,
         Seq.empty[Long].toDF("id"), fat, "id")
       assert(b == 1)
-      val segFiles = Option(new java.io.File(f"$path/seg_$b%05d").listFiles())
-        .getOrElse(Array.empty).filter(_.getName.endsWith(".parquet"))
+      val segFiles = parquetFiles(f"$path/seg_$b%05d")
       assert(segFiles.length > 1,
         s"backfill batch should parallelize into >1 sorted file, got ${segFiles.length}")
-      // range-partitioned + sorted: per-file id ranges are disjoint, so
-      // the point-fetch page pruning contract holds file by file
-      val ranges = segFiles.map { f =>
-        val df = spark.read.parquet(f.getAbsolutePath)
-        val r = df.agg(org.apache.spark.sql.functions.min("id"),
-          org.apache.spark.sql.functions.max("id")).head()
-        (r.getLong(0), r.getLong(1))
-      }.sortBy(_._1)
-      ranges.sliding(2).foreach {
-        case Array((_, hi), (lo2, _)) => assert(hi < lo2,
-          s"delta files must cover disjoint id ranges: ${ranges.toSeq}")
-        case _ =>
-      }
+      assertDisjointIdRanges(f"$path/seg_$b%05d")
       // the resolved view still serves point fetches correctly
       val got = ByidStore.fetch(spark, path, Seq(2L, 150L, 399L), "id")
         .orderBy("id").collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("seg")))
@@ -125,14 +170,8 @@ class ByidStoreSpec extends AnyFunSuite {
       spark.conf.set("spark.graft.byid.deltaTargetBytes", (128L * 1024 * 1024).toString)
       val b2 = ByidStore.applyCdc(spark, path,
         Seq.empty[Long].toDF("id"), corpus(Seq(500L), "c"), "id")
-      val oneFile = Option(new java.io.File(f"$path/seg_$b2%05d").listFiles())
-        .getOrElse(Array.empty).count(_.getName.endsWith(".parquet"))
+      val oneFile = parquetFiles(f"$path/seg_$b2%05d").length
       assert(oneFile == 1, s"churn batch should stay one sorted file, got $oneFile")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set("spark.graft.byid.deltaTargetBytes", v)
-        case None => spark.conf.unset("spark.graft.byid.deltaTargetBytes")
-      }
     }
   }
 
@@ -296,7 +335,7 @@ class ByidStoreSpec extends AnyFunSuite {
     // BEFORE the batch becomes visible
     val ex = intercept[IllegalArgumentException] {
       ByidStore.applyCdc(spark, path, Seq(3L).toDF("id"),
-        Seq((3L, "b-3", 30), (3L, "c-3", 31)).toDF("id", "payload", "v"), "id")
+        Seq((3L, "b-3", 30L), (3L, "c-3", 31L)).toDF("id", "payload", "v"), "id")
     }
     assert(ex.getMessage.contains("duplicate"))
     // nothing committed: the pre-batch view still serves
@@ -326,5 +365,90 @@ class ByidStoreSpec extends AnyFunSuite {
       ByidStore.checkpoint(spark, path, "id", nFiles = 1)
     }
     assert(ex.getMessage.contains("tenant"))
+  }
+
+  test("point-fetch layout: every id page holds <= 8 rows, the first page included") {
+    val path = freshDir()
+    // 99 rows: below parquet's default first page-size check (row
+    // 100), which would leave the whole file ONE page
+    ByidStore.init(corpus(0L until 99L, "a"), "id", path, nFiles = 1)
+    val pages = idPageRows(s"$path/seg_00000")
+    assert(pages.sum == 99)
+    assert(pages.forall(_ <= 8), s"id pages of >8 rows: $pages")
+  }
+
+  test("applyCdc rejects a batch whose schema drifted from the store's; nothing commits") {
+    import spark.implicits._
+    val path = freshDir()
+    ByidStore.init(corpus(0L until 10L, "a"), "id", path, nFiles = 1)
+    val pre = view(path, 0L until 10L)
+    val upd = corpus(Seq(3L), "b")
+    val drifted = Seq(
+      "extra column" -> upd.withColumn("extra", lit(1)),
+      "missing column" -> upd.drop("v"),
+      "widened type" -> upd.withColumn("v", col("v").cast("double")))
+    drifted.foreach { case (what, additions) =>
+      val ex = intercept[IllegalArgumentException] {
+        ByidStore.applyCdc(spark, path, Seq(3L).toDF("id"), additions, "id")
+      }
+      assert(ex.getMessage.contains("schema"), s"$what: ${ex.getMessage}")
+      assert(ByidStore.segments(path) == Seq(0) && ByidStore.tombstones(path).isEmpty,
+        s"$what: a drifted batch committed")
+      assert(view(path, 0L until 10L) == pre, s"$what: the view changed")
+    }
+    // column ORDER is free: reads match by name
+    assert(ByidStore.applyCdc(spark, path, Seq(3L).toDF("id"),
+      upd.select("v", "payload", "id"), "id") == 1)
+    assert(view(path, Seq(3L)) == Seq((3L, "b-3")))
+  }
+
+  test("a churn-scale compact folds to one page-indexed file in a bounded job shape") {
+    import spark.implicits._
+    def rows(ids: Seq[Long], tag: String) =
+      ids.map(i => (i, "acme", s"$tag-$i", i * 10)).toDF("id", "tenant", "payload", "v")
+    val path = freshDir()
+    ByidStore.init(rows(0L until 300L, "a"), "id", path)
+    ByidStore.applyCdc(spark, path, (0L until 40L).toDF("id"),
+      rows(20L until 40L, "b"), "id") // update 20..39, delete 0..19
+    ByidStore.applyCdc(spark, path, (300L until 310L).toDF("id"),
+      rows(300L until 320L, "c"), "id") // insert 300..319
+    val allIds = 0L until 330L
+    val before = view(path, allIds)
+    val got = jobsOf("compact job-shape guard") {
+      ByidStore.compact(spark, path, "id")
+    }
+    // Measured shape, 3 jobs: the collision guard's one coalesced
+    // aggregate (the payload has a tenant column), the broadcast of
+    // the tombstone aggregate, and the one exchange-free merge+write
+    // pass. A range-partitioned fold adds its sampling job and AQE
+    // shuffle-stage jobs (11 jobs in all for this store at 32 files).
+    assert(got.length <= 3,
+      s"compact launched ${got.length} jobs (> 3):\n  ${got.mkString("\n  ")}")
+    val Seq(base) = ByidStore.segments(path)
+    assert(parquetFiles(f"$path/seg_$base%05d").length == 1)
+    assert(idPageRows(f"$path/seg_$base%05d").forall(_ <= 8))
+    assert(view(path, allIds) == before)
+  }
+
+  test("deltaTargetBytes 4096: init and compact fan out to disjoint id ranges") {
+    import spark.implicits._
+    def fat(ids: Seq[Long], tag: String) =
+      ids.map(i => (i, tag + "x" * 200, i)).toDF("id", "payload", "v")
+    val path = freshDir()
+    withDeltaTarget(4096) {
+      ByidStore.init(fat(0L until 300L, "a"), "id", path)
+      assert(parquetFiles(s"$path/seg_00000").length > 1)
+      assertDisjointIdRanges(s"$path/seg_00000")
+      ByidStore.applyCdc(spark, path, Seq(5L, 150L).toDF("id"),
+        fat(Seq(150L, 400L), "b"), "id")
+      ByidStore.compact(spark, path, "id")
+      val Seq(base) = ByidStore.segments(path)
+      assert(parquetFiles(f"$path/seg_$base%05d").length > 1)
+      assertDisjointIdRanges(f"$path/seg_$base%05d")
+      val got = ByidStore.fetch(spark, path, Seq(2L, 5L, 150L, 299L, 400L), "id")
+        .select("id", "payload").orderBy("id").collect()
+        .map(r => (r.getLong(0), r.getString(1).take(1))).toSeq
+      assert(got == Seq((2L, "a"), (150L, "b"), (299L, "a"), (400L, "b")))
+    }
   }
 }
