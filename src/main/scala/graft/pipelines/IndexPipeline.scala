@@ -424,8 +424,8 @@ object IndexPipeline {
       VersionedStore.upsertVersioned(s, dir, batch, nBuckets = 4)
       VersionedStore.compact(s, dir, 16)
       Seq(1, 2, 3).map { n =>
-        val nb = VersionedStore.readManifest(s, dir, n)
-          .map(e => (e._1, e._2)).distinct.size
+        val nb = VersionedStore.readManifest(s, dir, n).entries
+          .map(e => (e.owner, e.bucket)).distinct.size
         VersionedStore.readSnapshot(s, dir, n)
           .groupBy(col("doc_id"))
           .agg(count(lit(1)).as("nv"),
@@ -1353,7 +1353,7 @@ object IndexPipeline {
       def vis(n: Int, cn: String): DataFrame =
         VersionedStore.readSnapshot(s, dir, n)
           .groupBy("owner").agg(countDistinct(col("doc_id")).as(cn))
-      val manAgg = VersionedStore.readManifestFull(s, dir, 3)
+      val manAgg = VersionedStore.readManifest(s, dir, 3).entries
         .groupBy(_.owner).map { case (o, es) =>
           (o, es.size.toLong, es.count(_.dv.isDefined).toLong,
             es.count(_.v != 1).toLong)
@@ -1600,23 +1600,19 @@ object IndexPipeline {
     * (buckets scanned, buckets in the union of both manifests). */
   private[graft] def snapshotCdcFeedFast(s: SparkSession, dir: String,
                                          from: Int, to: Int): (DataFrame, Int, Int) = {
-    val manFrom = VersionedStore.readManifestFull(s, dir, from)
-    val manTo = VersionedStore.readManifestFull(s, dir, to)
-    val fromMap = manFrom.map(e => ((e.owner, e.bucket), (e.v, e.dv))).toMap
-    val toMap = manTo.map(e => ((e.owner, e.bucket), (e.v, e.dv))).toMap
+    val manFrom = VersionedStore.readManifest(s, dir, from)
+    val manTo = VersionedStore.readManifest(s, dir, to)
+    val fromMap = manFrom.entries.map(e => ((e.owner, e.bucket), (e.v, e.dv))).toMap
+    val toMap = manTo.entries.map(e => ((e.owner, e.bucket), (e.v, e.dv))).toMap
     val allKeys = fromMap.keySet ++ toMap.keySet
     val changed = allKeys.filter(k => fromMap.get(k) != toMap.get(k))
-    def side(man: Seq[VersionedStore.ManifestEntry], n1: String, m1: String) = {
-      val es = man.filter(e => changed((e.owner, e.bucket)))
-      val base =
-        if (es.isEmpty)
-          VersionedStore.readSnapshot(s, dir, from).filter(lit(false))
-        else VersionedStore.scanEntries(s, dir, es)
-      base.groupBy(col("doc_id"))
+    def side(man: VersionedStore.Manifest, n1: String, m1: String) =
+      VersionedStore.scanEntries(s, dir,
+          man.copy(entries = man.entries.filter(e => changed((e.owner, e.bucket)))))
+        .groupBy(col("doc_id"))
         .agg(count(lit(1)).as(n1),
           md5(concat_ws("", array_sort(collect_list(
             when(col("vtype") === "chunk", md5(col("chunk_text"))))))).as(m1))
-    }
     val s1 = side(manFrom, "n1", "m1")
     val s2 = side(manTo, "n2", "m2")
     val j = s1.join(s2, Seq("doc_id"), "full_outer").persist()

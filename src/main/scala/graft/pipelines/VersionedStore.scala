@@ -2,6 +2,13 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{escapePathName, unescapePathName}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.hadoop.fs.Path
 
 /** Snapshot-versioned bucketed vector store — the manifest layer the
@@ -12,18 +19,24 @@ import org.apache.hadoop.fs.Path
   * Iceberg/Delta core reduced to its essentials, with no table-format
   * dependency:
   *
-  * Layout:
+  * Layout (owner values escaped as Spark's writer escapes them):
   * {{{
-  *   path/data/owner=o/bucket=b/v=N/part-*.parquet   immutable version dirs
-  *   path/manifest/snap-N.txt                        snapshot manifests
+  *   path/data/owner=o/bucket=b/v=N/w=W/part-*.parquet      immutable version dirs
+  *   path/deletes/dv=K/w=W/owner=o/bucket=b/part-*.parquet  delete vectors
+  *   path/manifest/snap-N.txt                               snapshot manifests
   * }}}
   *
-  * A manifest lists every live (owner, bucket) → data version. Commit
-  * = write `snap-N.txt.tmp`, then ONE atomic rename to `snap-N.txt`
-  * (snapshot ids are monotonic, so the destination never exists).
-  * Readers never run partition discovery over `data/` — they read the
-  * manifest and scan exactly its version dirs, so uncommitted writer
-  * output (a crash before commit) is invisible garbage, not
+  * A manifest is three header lines — `#layout` (how rows map to
+  * buckets), `#bloom` (optional per-bucket filter config) and
+  * `#schema` (the snapshot's data schema as JSON) — then one line per
+  * live (owner, bucket) → data version dir. THE MANIFEST IS THE
+  * LISTING AND THE SCHEMA: readers never run partition discovery or
+  * schema inference over `data/` — every read is one [[ManifestIndex]]
+  * over exactly the manifest's dirs, partition values from the
+  * entries, schema from the header. Commit = write a writer-unique
+  * tmp file, then ONE atomic publish to `snap-N.txt` (snapshot ids
+  * are monotonic, so the destination never exists). Uncommitted
+  * writer output (a crash before commit) is invisible garbage, not
   * corruption, and concurrent readers of snapshot K are never
   * affected by a writer building K+1. Untouched buckets carry their
   * pointer forward — snapshots SHARE unchanged files (storage grows
@@ -71,16 +84,27 @@ object VersionedStore {
     * ConcurrentModificationException with its orphan w-dir invisible
     * to every reader (vacuum reclaims it). This is the Iceberg/Delta
     * principle (writers never mutate shared paths; the commit is the
-    * only conflict point) at bucket-dir granularity. The fields are
-    * optional for manifest back-compat: wid-less entries read the
-    * bare v/dv dir. */
+    * only conflict point) at bucket-dir granularity. Every entry has a
+    * wid; `dvw` is set exactly when `dv` is. */
   private[graft] final case class ManifestEntry(owner: String, bucket: Long,
-                                                v: Int, dv: Option[Int],
+                                                v: Int, wid: String,
+                                                dv: Option[Int] = None,
+                                                dvw: Option[String] = None,
                                                 stats: Option[(Double, Double)] = None,
                                                 bloom: Option[String] = None,
-                                                stats2: Option[(Double, Double)] = None,
-                                                wid: Option[String] = None,
-                                                dvw: Option[String] = None)
+                                                stats2: Option[(Double, Double)] = None)
+
+  /** One parsed manifest: its entries plus the three header values.
+    * Parsed once per read; a commit writes the next snapshot's value
+    * back (usually a `copy` of the current one), so the layout, bloom
+    * config and schema carry forward through every metadata-only
+    * commit. `schema` is the snapshot's data schema (no partition
+    * columns) in all-nullable form — what inference would return, so
+    * reads never infer. */
+  private[graft] final case class Manifest(entries: Seq[ManifestEntry],
+                                           layout: Option[Layout],
+                                           bloom: Option[BloomConfig],
+                                           schema: StructType)
 
   /** Fresh writer id — unique per staging attempt, so a crashed
     * attempt's retry writes a NEW subdir and never collides with its
@@ -222,101 +246,56 @@ object VersionedStore {
                         tag: String): DataFrame =
     readSnapshot(spark, path, resolveTag(spark, path, tag))
 
-  /** Full entries of snapshot `n`, including delete-vector refs and
-    * zone-map stats. Lines are `owner\tbucket\tv` followed by optional
-    * prefixed fields in any order: `dv:k`, `stats:min,max`. A first
-    * line starting with `#layout` is the layout header (see
-    * [[readLayout]]); `#`-lines are skipped here. */
-  private[graft] def readManifestFull(spark: SparkSession, path: String,
-                                      n: Int): Seq[ManifestEntry] = {
-    val fs = fsOf(spark, path)
-    val in = fs.open(new Path(manifestFile(path, n)))
-    try {
-      scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .filter(l => l.nonEmpty && !l.startsWith("#")).map { line =>
-          val f = line.split('\t')
-          if (f.length < 3) throw new IllegalStateException(
-            s"manifest $n: unparseable line '$line'")
-          val opts = f.drop(3)
-          val dv = opts.collectFirst { case s if s.startsWith("dv:") =>
-            s.stripPrefix("dv:").toInt }
-          val stats = opts.collectFirst { case s if s.startsWith("stats:") =>
-            val Array(lo, hi) = s.stripPrefix("stats:").split(',')
-            (lo.toDouble, hi.toDouble) }
-          val bloom = opts.collectFirst { case s if s.startsWith("bloom:") =>
-            s.stripPrefix("bloom:") }
-          val stats2 = opts.collectFirst { case s if s.startsWith("stats2:") =>
-            val Array(lo, hi) = s.stripPrefix("stats2:").split(',')
-            (lo.toDouble, hi.toDouble) }
-          val wid = opts.collectFirst { case s if s.startsWith("wid:") =>
-            s.stripPrefix("wid:") }
-          val dvw = opts.collectFirst { case s if s.startsWith("dvw:") =>
-            s.stripPrefix("dvw:") }
-          val unknown = opts.filterNot(s => s.startsWith("dv:") ||
-            s.startsWith("stats:") || s.startsWith("stats2:") ||
-            s.startsWith("bloom:") || s.startsWith("wid:") ||
-            s.startsWith("dvw:"))
-          if (unknown.nonEmpty) throw new IllegalStateException(
-            s"manifest $n: unknown field '${unknown.head}'")
-          ManifestEntry(f(0), f(1).toLong, f(2).toInt, dv, stats, bloom,
-            stats2, wid, dvw)
-        }.toList
-    } finally in.close()
-  }
-
-  /** Layout header of snapshot `n`, if the manifest carries one.
-    * Manifests written before layout tracking have no header — callers
-    * fall back to hash bucketing with their own nBuckets. */
-  private[graft] def readLayout(spark: SparkSession, path: String,
-                                n: Int): Option[Layout] = {
-    val fs = fsOf(spark, path)
-    val in = fs.open(new Path(manifestFile(path, n)))
-    try {
-      scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .find(_.startsWith("#layout")).map { line =>
-          line.split('\t') match {
-            case Array("#layout", "hash", nb) => HashLayout(nb.toInt)
-            case Array("#layout", "range", c, mn, mx, nb) =>
-              RangeLayout(c, mn.toDouble, mx.toDouble, nb.toInt)
-            case Array("#layout", "zorder", cx, cy, mnx, mxx, mny, mxy, bits, nb) =>
-              ZLayout(cx, cy, mnx.toDouble, mxx.toDouble, mny.toDouble,
-                mxy.toDouble, bits.toInt, nb.toInt)
-            case bad => throw new IllegalStateException(
-              s"manifest $n: unparseable layout '${bad.mkString("\t")}'")
-          }
-        }
-    } finally in.close()
-  }
-
-  /** (owner, bucket, data version) entries of snapshot `n` — the
-    * dv-blind projection every layout consumer uses. */
+  /** Manifest `n`, parsed in one pass. Entry lines are
+    * `owner\tbucket\tv` followed by prefixed fields in any order:
+    * `wid:` (required), `dv:k` + `dvw:`, `stats:min,max`,
+    * `stats2:min,max`, `bloom:<hex>`. `#layout`, `#bloom` and
+    * `#schema` lines are the headers; the schema header is required. */
   private[graft] def readManifest(spark: SparkSession, path: String,
-                                  n: Int): Seq[(String, Long, Int)] =
-    readManifestFull(spark, path, n).map(e => (e.owner, e.bucket, e.v))
-
-  /** Write manifest `n` then commit with one atomic rename — the
-    * cross-bucket commit point. */
-  /** Bloom config header of snapshot `n`, if present. */
-  private[graft] def readBloomConfig(spark: SparkSession, path: String,
-                                     n: Int): Option[BloomConfig] = {
-    val fs = fsOf(spark, path)
-    val in = fs.open(new Path(manifestFile(path, n)))
-    try {
-      scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-        .find(_.startsWith("#bloom")).map { line =>
-          line.split('\t') match {
-            case Array("#bloom", c, m, k) => BloomConfig(c, m.toInt, k.toInt)
-            case bad => throw new IllegalStateException(
-              s"manifest $n: unparseable bloom header '${bad.mkString("\t")}'")
-          }
-        }
-    } finally in.close()
+                                  n: Int): Manifest = {
+    val in = fsOf(spark, path).open(new Path(manifestFile(path, n)))
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .filter(_.nonEmpty).toList finally in.close()
+    def bad(what: String, line: String) =
+      new IllegalStateException(s"manifest $n at $path: $what '$line'")
+    def pair(s: String) = { val Array(lo, hi) = s.split(','); (lo.toDouble, hi.toDouble) }
+    val (headers, body) = lines.partition(_.startsWith("#"))
+    val entries = body.map { line =>
+      val f = line.split('\t')
+      if (f.length < 3) throw bad("unparseable line", line)
+      val kv = f.drop(3).map(s => s.span(_ != ':')).map { case (k, v) => k -> v.drop(1) }.toMap
+      kv.keys.find(k => !Set("wid", "dv", "dvw", "stats", "stats2", "bloom")(k))
+        .foreach(k => throw bad(s"unknown field '$k' in", line))
+      if (kv.contains("dv") != kv.contains("dvw"))
+        throw bad("dv: and dvw: must come together in", line)
+      ManifestEntry(f(0), f(1).toLong, f(2).toInt,
+        kv.getOrElse("wid", throw bad("entry without wid:", line)),
+        kv.get("dv").map(_.toInt), kv.get("dvw"), kv.get("stats").map(pair),
+        kv.get("bloom"), kv.get("stats2").map(pair))
+    }
+    def header(tag: String) = headers.find(_.startsWith(tag + "\t")).map(_.split('\t'))
+    val layout = header("#layout").map {
+      case Array(_, "hash", nb) => HashLayout(nb.toInt)
+      case Array(_, "range", c, mn, mx, nb) =>
+        RangeLayout(c, mn.toDouble, mx.toDouble, nb.toInt)
+      case Array(_, "zorder", cx, cy, mnx, mxx, mny, mxy, bits, nb) =>
+        ZLayout(cx, cy, mnx.toDouble, mxx.toDouble, mny.toDouble,
+          mxy.toDouble, bits.toInt, nb.toInt)
+      case h => throw bad("unparseable layout", h.mkString("\t"))
+    }
+    val bloom = header("#bloom").map {
+      case Array(_, c, m, k) => BloomConfig(c, m.toInt, k.toInt)
+      case h => throw bad("unparseable bloom header", h.mkString("\t"))
+    }
+    val schema = header("#schema").map(h => DataType.fromJson(h(1)).asInstanceOf[StructType])
+      .getOrElse(throw new IllegalStateException(s"manifest $n at $path: no #schema header"))
+    Manifest(entries, layout, bloom, schema)
   }
 
-  private[graft] def commitManifestFull(spark: SparkSession, path: String, n: Int,
-                                        entries: Seq[ManifestEntry],
-                                        layout: Option[Layout] = None,
-                                        bloom: Option[BloomConfig] = None): Unit = {
+  /** Write manifest `n` then publish it atomically — the cross-bucket
+    * commit point. */
+  private[graft] def commitManifest(spark: SparkSession, path: String, n: Int,
+                                    m: Manifest): Unit = {
     val fs = fsOf(spark, path)
     // tmp must be UNIQUE PER WRITER: two racers staging the same
     // snapshot id would otherwise interleave writes into one shared
@@ -325,22 +304,22 @@ object VersionedStore {
       s".${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     val fin = new Path(manifestFile(path, n))
     if (!fs.exists(tmp.getParent)) fs.mkdirs(tmp.getParent)
-    val header = layout.map {
+    val header = m.layout.map {
       case HashLayout(nb) => s"#layout\thash\t$nb\n"
       case RangeLayout(c, mn, mx, nb) => s"#layout\trange\t$c\t$mn\t$mx\t$nb\n"
       case ZLayout(cx, cy, mnx, mxx, mny, mxy, bits, nb) =>
         s"#layout\tzorder\t$cx\t$cy\t$mnx\t$mxx\t$mny\t$mxy\t$bits\t$nb\n"
     }.getOrElse("") +
-      bloom.map(b => s"#bloom\t${b.col}\t${b.mBits}\t${b.k}\n").getOrElse("")
+      m.bloom.map(b => s"#bloom\t${b.col}\t${b.mBits}\t${b.k}\n").getOrElse("") +
+      s"#schema\t${m.schema.json}\n"
     val out = fs.create(tmp, true)
-    try out.write((header + entries.sortBy(e => (e.owner, e.bucket))
-      .map(e => s"${e.owner}\t${e.bucket}\t${e.v}" +
+    try out.write((header + m.entries.sortBy(e => (e.owner, e.bucket))
+      .map(e => s"${e.owner}\t${e.bucket}\t${e.v}\twid:${e.wid}" +
         e.dv.map(k => s"\tdv:$k").getOrElse("") +
+        e.dvw.map(w => s"\tdvw:$w").getOrElse("") +
         e.stats.map { case (lo, hi) => s"\tstats:$lo,$hi" }.getOrElse("") +
         e.stats2.map { case (lo, hi) => s"\tstats2:$lo,$hi" }.getOrElse("") +
-        e.bloom.map(h => s"\tbloom:$h").getOrElse("") +
-        e.wid.map(w => s"\twid:$w").getOrElse("") +
-        e.dvw.map(w => s"\tdvw:$w").getOrElse(""))
+        e.bloom.map(h => s"\tbloom:$h").getOrElse(""))
       .mkString("", "\n", "\n")).getBytes("UTF-8"))
     finally out.close()
     // optimistic concurrency: EXACTLY ONE writer may publish snapshot
@@ -390,49 +369,32 @@ object VersionedStore {
   }
 
 
-  private def bucketDir(path: String, o: String, b: Long, v: Int) =
-    s"${dataDir(path)}/owner=$o/bucket=$b/v=$v"
+  /** `owner=o/bucket=b` with the owner escaped exactly as Spark's
+    * partitioned writer escapes it, so the dirs it writes and the dirs
+    * entries name agree for any owner (`a:b` writes `owner=a%3Ab`). */
+  private def ownerBucket(o: String, b: Long) = s"owner=${escapePathName(o)}/bucket=$b"
 
-  /** The data dir an entry's rows actually live in: the writer-unique
-    * `w=` subdir when the entry carries a wid, the bare v dir for
-    * legacy entries. */
-  private def entryDir(path: String, e: ManifestEntry) =
-    bucketDir(path, e.owner, e.bucket, e.v) +
-      e.wid.map(w => s"/w=$w").getOrElse("")
+  /** An entry's data dir relative to `data/`, and its delete-vector dir
+    * relative to `deletes/` (requires e.dv) — also vacuum's live keys. */
+  private def entryKey(e: ManifestEntry) = s"${ownerBucket(e.owner, e.bucket)}/v=${e.v}/w=${e.wid}"
+  private def dvKey(e: ManifestEntry) =
+    s"dv=${e.dv.get}/w=${e.dvw.get}/${ownerBucket(e.owner, e.bucket)}"
 
-  /** The delete-vector dir an entry references (requires e.dv). */
-  private def dvRefDir(path: String, e: ManifestEntry) =
-    dvDir(path, e.dv.get) + e.dvw.map(w => s"/w=$w").getOrElse("") +
-      s"/owner=${e.owner}/bucket=${e.bucket}"
+  /** The data schema a staged frame writes: every column but the
+    * partition keys, all-nullable (what a parquet read returns). */
+  private def dataSchema(staged: DataFrame): StructType =
+    graft.operators.ByidStore.asNullable(StructType(staged.schema.filterNot(f =>
+      Set("owner", "bucket", "v", "w")(f.name)))).asInstanceOf[StructType]
 
-  /** Undo Spark's partition-dir escaping (`escapePathName` encodes
-    * reserved chars as %hh) when parsing partition VALUES back out of
-    * staged dir names. Fixture owners are plain strings, but a weird
-    * owner must round-trip — and if this ever disagreed with Spark's
-    * escaping, the audit's set compare (read-back partition values vs
-    * the manifest's) fails loudly before a commit. */
-  private def unescapePath(s: String): String = {
-    val sb = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '%' && i + 2 < s.length) {
-        sb.append(Integer.parseInt(s.substring(i + 1, i + 3), 16).toChar)
-        i += 3
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Write `staged` (already carrying its `v` column) under this
-    * writer's unique `w=<wid>` subdirs — concurrent writers touching
-    * the same bucket write DISJOINT directories, so staged data never
-    * mixes; the atomic manifest publish is the only conflict point.
-    * Returns the (owner, bucket) pairs that actually received data
-    * files — the LIVE bucket set, read from the write's own dir
-    * layout (partitionBy writes no dir for an empty group), so
-    * callers need no separate per-bucket count job to learn which
-    * touched buckets survived (optimization r16, guide §1.2).
+  /** Write `staged` as data version `v` under this writer's unique
+    * `w=<wid>` subdirs — concurrent writers touching the same bucket
+    * write DISJOINT directories, so staged data never mixes; the
+    * atomic manifest publish is the only conflict point. Returns one
+    * entry per (owner, bucket) that actually received data files —
+    * the LIVE bucket set, read from the write's own dir layout
+    * (partitionBy writes no dir for an empty group), so callers need
+    * no separate per-bucket count job to learn which touched buckets
+    * survived (optimization r16, guide §1.2).
     *
     * The Spark job writes into a writer-PRIVATE staging root first and
     * is then moved into place with per-bucket-dir renames (metadata-
@@ -442,31 +404,28 @@ object VersionedStore {
     * job on one output root shares its `_temporary/0` committer dir —
     * measured: the first racer's job-commit deleted the second's
     * in-flight task files (FileNotFoundException under _temporary). */
-  private def writeStaged(staged: DataFrame, path: String,
-                          wid: String): Seq[(String, Long)] = {
+  private def writeStaged(staged: DataFrame, path: String, v: Int,
+                          wid: String): Seq[ManifestEntry] = {
     val spark = staged.sparkSession
     val stagingRoot = s"${dataDir(path)}/.staging-$wid"
-    staged.withColumn("w", lit(wid))
+    staged.withColumn("v", lit(v)).withColumn("w", lit(wid))
       .write.mode("overwrite").partitionBy("owner", "bucket", "v", "w")
       .parquet(stagingRoot)
     val fs = fsOf(spark, path)
     val root = new Path(stagingRoot)
-    val moved = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    for (oDir <- fs.listStatus(root) if oDir.isDirectory;
-         bDir <- fs.listStatus(oDir.getPath) if bDir.isDirectory;
-         vDir <- fs.listStatus(bDir.getPath) if vDir.isDirectory;
-         wDir <- fs.listStatus(vDir.getPath) if wDir.isDirectory) {
-      val dst = new Path(s"${dataDir(path)}/${oDir.getPath.getName}/" +
-        s"${bDir.getPath.getName}/${vDir.getPath.getName}/${wDir.getPath.getName}")
+    val moved = for (oDir <- fs.listStatus(root).toSeq if oDir.isDirectory;
+                     bDir <- fs.listStatus(oDir.getPath) if bDir.isDirectory) yield {
+      val e = ManifestEntry(unescapePathName(oDir.getPath.getName.stripPrefix("owner=")),
+        bDir.getPath.getName.stripPrefix("bucket=").toLong, v, wid)
+      val src = new Path(bDir.getPath, s"v=$v/w=$wid")
+      val dst = new Path(s"${dataDir(path)}/${entryKey(e)}")
       fs.mkdirs(dst.getParent)
-      if (!fs.rename(wDir.getPath, dst))
-        throw new IllegalStateException(
-          s"writeStaged: move ${wDir.getPath} -> $dst failed")
-      moved += ((unescapePath(oDir.getPath.getName.stripPrefix("owner=")),
-        bDir.getPath.getName.stripPrefix("bucket=").toLong))
+      if (!fs.rename(src, dst))
+        throw new IllegalStateException(s"writeStaged: move $src -> $dst failed")
+      e
     }
     fs.delete(root, true)
-    moved.distinct.toSeq
+    moved
   }
 
   /** Bucket-assignment expression for a layout. Range assignment is
@@ -502,12 +461,6 @@ object VersionedStore {
     case _ => Nil
   }
 
-  /** The layout writers must assign under: the CURRENT manifest's
-    * header, or legacy hash(nBuckets) for headerless manifests. */
-  private def layoutOf(spark: SparkSession, path: String, cur: Int,
-                       nBuckets: Int): Layout =
-    readLayout(spark, path, cur).getOrElse(HashLayout(nBuckets))
-
   /** Bit i of value v: int(first 6 hex digits of md5(v + ":" + i))
     * mod mBits — the engine-independent arithmetic the oracle
     * replays. */
@@ -522,7 +475,7 @@ object VersionedStore {
     // null) — skip them: a lookupEq probe is always a concrete value,
     // so a null can never match and omitting it keeps the filter sound
     val bits = df.filter(col(cfg.col).isNotNull)
-      .select(col("owner"), col("bucket").cast("long").as("bucket"),
+      .select(col("owner"), col("bucket"),
         explode(array((0 until cfg.k).map(bloomBitExpr(cfg, _)): _*)).as("bit"))
       .distinct().collect()
     bits.groupBy(r => (r.getString(0), r.getLong(1))).map { case (key, rs) =>
@@ -552,45 +505,33 @@ object VersionedStore {
                   nBuckets: Int = 16): Unit = {
     require(currentSnapshot(spark, path).isEmpty,
       s"initialLoad: $path already has snapshots")
-    val nv = vectors.withColumn("bucket", IndexPipeline.docBucket(col("doc_id"), nBuckets))
-      .withColumn("v", lit(1))
+    val layout = HashLayout(nBuckets)
     // owner is a partition key AND a manifest key derived back from the
     // dir name: a null/empty owner writes __HIVE_DEFAULT_PARTITION__,
-    // which unescapePath returns literally — the manifest owner would
-    // stop round-tripping to the data's value, and initialLoad commits
+    // which unescapes literally — the manifest owner would stop
+    // round-tripping to the data's value, and initialLoad commits
     // without an audit to catch it (ADVICE r16). Fail fast in the same
     // write pass instead (raise_error evaluates per row, costs nothing
     // on valid data).
-    nv.withColumn("owner",
+    val staged = vectors.withColumn("bucket", bucketExpr(layout))
+      .withColumn("owner",
         when(col("owner").isNull || col("owner") === "",
           raise_error(lit("initialLoad: owner must be non-null/non-empty " +
             "(it is a partition key the manifest round-trips)")))
           .otherwise(col("owner")))
       .repartition(col("owner"), col("bucket"))
-      .write.mode("overwrite").partitionBy("owner", "bucket", "v")
-      .parquet(dataDir(path))
     // manifest entries from the write's own partition dirs — the input
     // plan runs once (the write), no second distinct-collect pass
     // (optimization r16, guide §1.2)
-    val fs = fsOf(spark, path)
-    val entries = (for {
-      o <- fs.listStatus(new Path(dataDir(path))).toSeq
-      if o.isDirectory && o.getPath.getName.startsWith("owner=")
-      b <- fs.listStatus(o.getPath).toSeq
-      if b.isDirectory && b.getPath.getName.startsWith("bucket=")
-    } yield ManifestEntry(
-      unescapePath(o.getPath.getName.stripPrefix("owner=")),
-      b.getPath.getName.stripPrefix("bucket=").toLong, 1, None))
-    commitManifestFull(spark, path, 1, entries, Some(HashLayout(nBuckets)))
+    val entries = writeStaged(staged, path, 1, newWid())
+    commitManifest(spark, path, 1, Manifest(entries, Some(layout), None, dataSchema(staged)))
   }
 
+  /** A staged next snapshot: its manifest (new entries carry this
+    * writer's `wid`) plus what the audit checks against. */
   private[graft] case class StagedVersion(next: Int, expectedRows: Long,
-                                          touched: Seq[(String, Long)],
-                                          entries: Seq[ManifestEntry],
-                                          layout: Option[Layout] = None,
-                                          bloom: Option[BloomConfig] = None,
-                                          probedBuckets: Int = -1,
-                                          wid: Option[String] = None)
+                                          manifest: Manifest, wid: String,
+                                          probedBuckets: Int = -1)
 
   /** Stage the next snapshot's data: merged content of every touched
     * bucket written to NEW v=next dirs (append-only — live version
@@ -598,11 +539,10 @@ object VersionedStore {
     * in here leaves orphan dirs no reader can see). */
   private[graft] def stageVersion(spark: SparkSession, path: String, batch: DataFrame,
                                   nBuckets: Int = 16): StagedVersion = {
-    val cur = currentSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(s"upsertVersioned: no snapshot at $path"))
+    val (cur, m) = manifestAt(spark, path, -1, "upsertVersioned")
     val next = cur + 1
-    val man = readManifestFull(spark, path, cur)
-    val layout = layoutOf(spark, path, cur, nBuckets)
+    val man = m.entries
+    val layout = m.layout.getOrElse(HashLayout(nBuckets))
     // the batch plan feeds several consumers (touched-bucket probe,
     // relocation id probes, the staged write's new-rows side) — cache
     // it for the episode so a join-derived CDC batch is computed once,
@@ -638,47 +578,37 @@ object VersionedStore {
     // strand the old copy under the old owner — so hash probes the
     // same bucket numbers under OTHER owners (bounded by
     // owners x batch-buckets, never a table scan).
-    var probedBuckets = -1 // pruning evidence for the spec
-    val relocated: Seq[(String, Long)] = layout match {
+    val newSet = newTouched.toSet
+    val probe = layout match {
       case HashLayout(_) =>
-        val newSet = newTouched.toSet
         val batchBuckets = newTouched.map(_._2).toSet
-        val crossOwner = man.filter(e =>
-          batchBuckets(e.bucket) && !newSet((e.owner, e.bucket)))
-        probedBuckets = crossOwner.size
-        if (crossOwner.isEmpty) Nil
-        else scanEntries(spark, path, crossOwner)
-          .select("owner", "bucket", "doc_id")
-          .join(broadcast(nv.select("doc_id").distinct()), Seq("doc_id"), "left_semi")
-          .select("owner", "bucket").distinct()
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+        man.filter(e => batchBuckets(e.bucket) && !newSet((e.owner, e.bucket)))
       case _ =>
-        val newSet = newTouched.toSet
-        val rest0 = man.filterNot(e => newSet((e.owner, e.bucket)))
+        val rest = man.filterNot(e => newSet((e.owner, e.bucket)))
         // a doc_id bloom index prunes the probe driver-side: only
         // buckets whose filter claims at least one batch id need the
         // scan — at 100 TB this turns a table-wide doc_id-column read
         // into a handful of bucket dirs (false positives just scan)
-        val rest = readBloomConfig(spark, path, cur) match {
-          case Some(cfg) if cfg.col == "doc_id" && rest0.nonEmpty =>
+        m.bloom match {
+          case Some(cfg) if cfg.col == "doc_id" && rest.nonEmpty =>
             val ids = nv.select(col("doc_id").cast("string")).distinct()
               .limit(65537).collect().map(_.getString(0))
-            if (ids.length > 65536) rest0 // batch too large to probe cheaply
+            if (ids.length > 65536) rest // batch too large to probe cheaply
             else {
               val idBits = ids.map(probeBits(_, cfg))
-              rest0.filter(e => e.bloom.forall(h =>
+              rest.filter(e => e.bloom.forall(h =>
                 idBits.exists(_.forall(bloomHas(h, _)))))
             }
-          case _ => rest0
+          case _ => rest
         }
-        probedBuckets = rest.size
-        if (rest.isEmpty) Nil
-        else scanEntries(spark, path, rest)
-          .select("owner", "bucket", "doc_id")
-          .join(broadcast(nv.select("doc_id").distinct()), Seq("doc_id"), "left_semi")
-          .select("owner", "bucket").distinct()
-          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     }
+    val relocated =
+      if (probe.isEmpty) Nil
+      else scanEntries(spark, path, m.copy(entries = probe))
+        .select("owner", "bucket", "doc_id")
+        .join(broadcast(nv.select("doc_id").distinct()), Seq("doc_id"), "left_semi")
+        .select("owner", "bucket").distinct()
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     val touched = newTouched ++ relocated
     val touchedSet = touched.toSet
     // Writer isolation (round-12 task 6): stage under a fresh unique
@@ -688,24 +618,24 @@ object VersionedStore {
     // readers, reclaimed by vacuum), and a CONCURRENT writer racing
     // the same bucket stages a disjoint dir: its data can never mix
     // into this writer's audit or committed snapshot. Exactly one of
-    // the racers wins commitManifestFull's atomic publish; the loser
+    // the racers wins commitManifest's atomic publish; the loser
     // gets ConcurrentModificationException, never silent last-wins.
     // (The previous design deleted "orphan" v=next dirs here, which
     // would have destroyed a live concurrent writer's staged data.)
     val wid = newWid()
     // survivors via the dv-applying scan: a rewrite FOLDS a bucket's
-    // delete vector into the new data version (and clears the ref)
+    // delete vector into the new data version (and clears the ref).
+    // With no touched entry the scan is empty but still carries the
+    // snapshot's schema, so the union below is the next schema.
     val touchedEntries = man.filter(e => touchedSet((e.owner, e.bucket)))
-    val content =
-      if (touchedEntries.isEmpty) nv
-      else {
-        val survivors = scanEntries(spark, path, touchedEntries)
-          .join(broadcast(nv.select("doc_id").distinct()), Seq("doc_id"), "left_anti")
-        // allowMissingColumns = schema evolution: a batch may ADD
-        // columns (survivors read NULL for them); a batch missing an
-        // existing column evolves it to NULL for the new rows
-        survivors.unionByName(nv.drop("v"), allowMissingColumns = true)
-      }
+    val old = scanEntries(spark, path, m.copy(entries = touchedEntries))
+    val survivors =
+      if (touchedEntries.isEmpty) old
+      else old.join(broadcast(nv.select("doc_id").distinct()), Seq("doc_id"), "left_anti")
+    // allowMissingColumns = schema evolution: a batch may ADD columns
+    // (survivors read NULL for them); a batch missing an existing
+    // column evolves it to NULL for the new rows
+    val content = survivors.unionByName(nv.drop("v"), allowMissingColumns = true)
     // TWO actions stage everything (was four: localCheckpoint +
     // per-bucket count + write, plus the checkpoint's block copy): the
     // staged plan is cached, the audit's expected count reads the
@@ -715,18 +645,15 @@ object VersionedStore {
     // can EMPTY a bucket (its only rows moved to other bins): no
     // v=next dir is written for it, so its manifest entry must vanish
     // rather than point at a missing path (optimization r16, §1.2).
-    val staged = content.withColumn("v", lit(next))
-      .repartition(touched.size, col("owner"), col("bucket"))
+    val staged = content.repartition(touched.size, col("owner"), col("bucket"))
       .persist()
     val expected = staged.count()
-    val live = writeStaged(staged, path, wid)
+    val live = writeStaged(staged, path, next, wid)
     staged.unpersist()
     nv.unpersist()
-    val entries = man.filterNot(e => touchedSet((e.owner, e.bucket))) ++
-      live.map { case (o, b) =>
-        ManifestEntry(o, b, next, None, wid = Some(wid)) }
-    StagedVersion(next, expected, live, entries, Some(layout),
-      readBloomConfig(spark, path, cur), probedBuckets, Some(wid))
+    StagedVersion(next, expected, m.copy(entries =
+      man.filterNot(e => touchedSet((e.owner, e.bucket))) ++ live,
+      layout = Some(layout), schema = dataSchema(staged)), wid, probe.size)
   }
 
   /** Audit the staged version dirs (row count + bucket set), then
@@ -736,16 +663,14 @@ object VersionedStore {
     * staged content — no extra pass; untouched buckets keep theirs). */
   private[graft] def auditAndCommit(spark: SparkSession, path: String,
                                     st: StagedVersion): Unit = {
-    val paths = st.touched.map { case (o, b) =>
-      bucketDir(path, o, b, st.next) +
-        st.wid.map(w => s"/w=$w").getOrElse("") }
     // one disk read serves both the audit aggregate and the bloom
     // recompute below (cached only when a bloom config exists —
     // otherwise the single consumer needs no cache)
-    val stagedRead = spark.read.option("basePath", dataDir(path)).parquet(paths: _*)
-    val shared = if (st.bloom.isDefined) stagedRead.persist() else stagedRead
+    val stagedRead = scanEntries(spark, path,
+      st.manifest.copy(entries = st.manifest.entries.filter(_.wid == st.wid)))
+    val shared = if (st.manifest.bloom.isDefined) stagedRead.persist() else stagedRead
     try auditBody(spark, path, st, shared)
-    finally if (st.bloom.isDefined) shared.unpersist(): Unit
+    finally if (st.manifest.bloom.isDefined) shared.unpersist(): Unit
   }
 
   /** [[auditAndCommit]]'s body, split out so the audit cache releases
@@ -754,29 +679,30 @@ object VersionedStore {
   private def auditBody(spark: SparkSession, path: String,
                         st: StagedVersion,
                         shared: org.apache.spark.sql.DataFrame): Unit = {
-    val statsCols = clusterCols(st.layout)
+    val m = st.manifest
+    val statsCols = clusterCols(m.layout)
     val aggs = count(lit(1)).as("cnt") +: statsCols.zipWithIndex.flatMap { case (c, j) =>
       Seq(min(col(c).cast("double")).as(s"smn$j"),
         max(col(c).cast("double")).as(s"smx$j")) }
-    val perPartRows = shared
-      .groupBy(col("owner"), col("bucket").cast("long").as("bucket"))
+    val perPartRows = shared.groupBy(col("owner"), col("bucket"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
     val perPart = perPartRows.map(r => ((r.getString(0), r.getLong(1)), r.getLong(2)))
     val gotRows = perPart.map(_._2).sum
     require(gotRows == st.expectedRows,
       s"versioned audit: staged $gotRows rows, expected ${st.expectedRows}")
-    require(perPart.map(_._1).toSet == st.touched.toSet,
-      s"versioned audit: staged buckets ${perPart.map(_._1).toSet} != ${st.touched.toSet}")
+    val touched = m.entries.filter(_.wid == st.wid).map(e => (e.owner, e.bucket)).toSet
+    require(perPart.map(_._1).toSet == touched,
+      s"versioned audit: staged buckets ${perPart.map(_._1).toSet} != $touched")
     val entries =
-      if (statsCols.isEmpty) st.entries
+      if (statsCols.isEmpty) m.entries
       else {
         val statsMap = perPartRows.map(r =>
           ((r.getString(0), r.getLong(1)),
             statsCols.indices.map(j =>
               (r.getDouble(3 + 2 * j), r.getDouble(4 + 2 * j))))).toMap
-        st.entries.map(e => statsMap.get((e.owner, e.bucket)) match {
-          case Some(ss) if e.v == st.next =>
+        m.entries.map(e => statsMap.get((e.owner, e.bucket)) match {
+          case Some(ss) if e.wid == st.wid =>
             e.copy(stats = Some(ss.head),
               stats2 = if (ss.size > 1) Some(ss(1)) else None)
           case _ => e
@@ -784,14 +710,14 @@ object VersionedStore {
       }
     // bloom maintenance: touched buckets get filters recomputed over
     // their full staged content (untouched keep theirs)
-    val entries2 = st.bloom match {
+    val entries2 = m.bloom match {
       case Some(cfg) =>
         val bl = bloomHexOf(shared, cfg) // cache released by the caller's finally
         entries.map(e =>
-          if (e.v == st.next) e.copy(bloom = bl.get((e.owner, e.bucket))) else e)
+          if (e.wid == st.wid) e.copy(bloom = bl.get((e.owner, e.bucket))) else e)
       case None => entries
     }
-    commitManifestFull(spark, path, st.next, entries2, st.layout, st.bloom)
+    commitManifest(spark, path, st.next, m.copy(entries = entries2))
   }
 
   /** Doc-granular upsert as a new snapshot: stage → audit → commit.
@@ -828,32 +754,34 @@ object VersionedStore {
     * pre-commit crashes leave orphan v-dirs no reader sees; a retry
     * clears them and converges. */
   def compact(spark: SparkSession, path: String, newBuckets: Int): Unit = {
-    val cur = currentSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(s"compact: no snapshot at $path"))
-    val next = cur + 1
+    val (cur, m) = manifestAt(spark, path, -1, "compact")
     // one snapshot scan serves the touched-bucket probe AND the staged
     // write; the write's row count is observed in-job (optimization
     // r16, guide §1.2 — was: scan → collect, localCheckpoint, count,
     // write = 3 full-corpus evaluations)
-    val nv = readSnapshot(spark, path, cur).drop("bucket")
-      .withColumn("bucket", IndexPipeline.docBucket(col("doc_id"), newBuckets))
+    val layout = HashLayout(newBuckets)
+    val nv = scanEntries(spark, path, m).drop("bucket")
+      .withColumn("bucket", bucketExpr(layout))
       .persist()
-    val touched = nv.select("owner", "bucket").distinct()
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val wid = newWid() // writer-isolated staging; see stageVersion
-    val staged = nv.withColumn("v", lit(next))
-      .repartition(touched.size, col("owner"), col("bucket"))
-      .persist()
-    val expected = staged.count()
-    writeStaged(staged, path, wid)
-    staged.unpersist()
+    rewriteAll(spark, path, cur, m, nv, layout)
     nv.unpersist()
-    // full rewrite: the new manifest carries ONLY the new bucket space
-    auditAndCommit(spark, path, StagedVersion(next, expected, touched,
-      touched.map { case (o, b) =>
-        ManifestEntry(o, b, next, None, wid = Some(wid)) },
-      Some(HashLayout(newBuckets)), readBloomConfig(spark, path, cur),
-      wid = Some(wid)))
+  }
+
+  /** The shared tail of every full rewrite: stage `nv` (the current
+    * content under its new `bucket`) as the next version and commit it
+    * through the audit. One distinct count sizes the repartition; the
+    * staged plan is cached across its count and write. The new
+    * manifest carries ONLY the new bucket space. */
+  private def rewriteAll(spark: SparkSession, path: String, cur: Int, m: Manifest,
+                         nv: DataFrame, layout: Layout): Unit = {
+    val nParts = nv.select("owner", "bucket").distinct().count().toInt
+    val wid = newWid() // writer-isolated staging; see stageVersion
+    val staged = nv.repartition(nParts, col("owner"), col("bucket")).persist()
+    val expected = staged.count()
+    val entries = writeStaged(staged, path, cur + 1, wid)
+    staged.unpersist()
+    auditAndCommit(spark, path, StagedVersion(cur + 1, expected,
+      m.copy(entries = entries, layout = Some(layout)), wid))
   }
 
   /** CLUSTERING compaction — the OPTIMIZE-ZORDER move: rewrite the
@@ -878,15 +806,13 @@ object VersionedStore {
     * layout until vacuumed. */
   def compactClustered(spark: SparkSession, path: String, statsCol: String,
                        newBuckets: Int): Unit = {
-    val cur = currentSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(s"compactClustered: no snapshot at $path"))
-    val next = cur + 1
+    val (cur, m) = manifestAt(spark, path, -1, "compactClustered")
     // one snapshot scan (cached for the episode) serves the null check
     // + range agg, the touched probe, and the staged write — was 4
     // full-corpus evaluations (optimization r16, guide §1.2). The null
     // check rides the range aggregate: count(statsCol) counts only
     // non-null values, so a null sneaks nothing past the zone maps.
-    val base = readSnapshot(spark, path, cur).drop("bucket").persist()
+    val base = scanEntries(spark, path, m).drop("bucket").persist()
     val Row(nAll: Long, nCol: Long, mnN: Any, mxN: Any) = base.agg(
       count(lit(1)), count(col(statsCol)),
       min(col(statsCol).cast("double")), max(col(statsCol).cast("double"))).head()
@@ -899,21 +825,8 @@ object VersionedStore {
       s"compactClustered: cluster column '$statsCol' must be non-null")
     val (mnA, mxA) = (mnN.asInstanceOf[Double], mxN.asInstanceOf[Double])
     val layout = RangeLayout(statsCol, mnA, mxA, newBuckets)
-    val nv = base.withColumn("bucket", bucketExpr(layout))
-    val touched = nv.select("owner", "bucket").distinct()
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val wid = newWid() // writer-isolated staging; see stageVersion
-    val staged = nv.withColumn("v", lit(next))
-      .repartition(touched.size, col("owner"), col("bucket"))
-      .persist()
-    val expected = staged.count()
-    writeStaged(staged, path, wid)
-    staged.unpersist()
+    rewriteAll(spark, path, cur, m, base.withColumn("bucket", bucketExpr(layout)), layout)
     base.unpersist()
-    auditAndCommit(spark, path, StagedVersion(next, expected, touched,
-      touched.map { case (o, b) =>
-        ManifestEntry(o, b, next, None, wid = Some(wid)) },
-      Some(layout), readBloomConfig(spark, path, cur), wid = Some(wid)))
   }
 
   /** Doc-granular DELETE as a new snapshot — the right-to-be-forgotten
@@ -928,21 +841,18 @@ object VersionedStore {
     * vector rows removed. */
   def deleteVersioned(spark: SparkSession, path: String, docIds: DataFrame,
                       nBuckets: Int = 16): Long = {
-    val cur = currentSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(s"deleteVersioned: no snapshot at $path"))
+    val (cur, m) = manifestAt(spark, path, -1, "deleteVersioned")
     val next = cur + 1
     val ids = docIds.select(col("doc_id")).distinct()
-    val snap = readSnapshot(spark, path, cur)
-    val victims = snap.join(broadcast(ids), Seq("doc_id"), "left_semi")
+    val victims = scanEntries(spark, path, m).join(broadcast(ids), Seq("doc_id"), "left_semi")
     // ONE job learns both the touched bucket set and the removed-row
     // total (was: distinct-collect + count = two snapshot-scan jobs —
     // optimization r16, guide §1.2)
-    val vb = victims.groupBy(col("owner"), col("bucket").cast("long").as("bucket"))
-      .count().collect()
+    val vb = victims.groupBy(col("owner"), col("bucket")).count().collect()
     val touched = vb.map(r => (r.getString(0), r.getLong(1))).toSeq
     if (touched.isEmpty) return 0L
     val deleted = vb.map(_.getLong(2)).sum
-    val man = readManifestFull(spark, path, cur)
+    val man = m.entries
     val touchedSet = touched.toSet
     val wid = newWid() // writer-isolated staging; see stageVersion
     // dv-applying scan: the rewrite folds any existing delete vector
@@ -952,23 +862,16 @@ object VersionedStore {
     // set is the kept set) and leave the manifest — no separate
     // kept-distinct collect.
     val staged = scanEntries(spark, path,
-        man.filter(e => touchedSet((e.owner, e.bucket))))
+        m.copy(entries = man.filter(e => touchedSet((e.owner, e.bucket)))))
       .join(broadcast(ids), Seq("doc_id"), "left_anti")
-      .withColumn("v", lit(next))
       .repartition(touched.size, col("owner"), col("bucket"))
       .persist()
     val expected = staged.count()
-    val kept = writeStaged(staged, path, wid)
+    val kept = writeStaged(staged, path, next, wid)
     staged.unpersist()
-    val entries = man.filterNot(e => touchedSet((e.owner, e.bucket))) ++
-      kept.map { case (o, b) =>
-        ManifestEntry(o, b, next, None, wid = Some(wid)) }
-    val layout = readLayout(spark, path, cur)
-    val bloomCfg = readBloomConfig(spark, path, cur)
-    if (kept.isEmpty) commitManifestFull(spark, path, next, entries, layout, bloomCfg)
-    else auditAndCommit(spark, path,
-      StagedVersion(next, expected, kept, entries, layout, bloomCfg,
-        wid = Some(wid)))
+    val nextMan = m.copy(entries = man.filterNot(e => touchedSet((e.owner, e.bucket))) ++ kept)
+    if (kept.isEmpty) commitManifest(spark, path, next, nextMan)
+    else auditAndCommit(spark, path, StagedVersion(next, expected, nextMan, wid))
     deleted
   }
 
@@ -987,11 +890,10 @@ object VersionedStore {
     * written, zero data movement, amortized into the next natural
     * rewrite. Returns the number of visible vector rows removed. */
   def softDelete(spark: SparkSession, path: String, docIds: DataFrame): Long = {
-    val cur = currentSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(s"softDelete: no snapshot at $path"))
+    val (cur, m) = manifestAt(spark, path, -1, "softDelete")
     val next = cur + 1
     val ids = docIds.select(col("doc_id")).distinct()
-    val man = readManifestFull(spark, path, cur)
+    val man = m.entries
     // Locate victims by PRUNED scan, never a full-table read (found by
     // the BENCHDOC flatness legs: the readSnapshot-based locate made a
     // 6-victim delete 4.2× slower at 100× docs — O(table) file opens).
@@ -999,12 +901,12 @@ object VersionedStore {
     // themselves; other layouts use the doc_id bloom index when one
     // exists (same pruning stageVersion's relocation probe uses) and
     // scan conservatively otherwise.
-    val candidates = layoutOf(spark, path, cur, 16) match {
+    val candidates = m.layout.getOrElse(HashLayout(16)) match {
       case HashLayout(nb) =>
         val bset = ids.select(pmod(col("doc_id"), lit(nb.toLong)).as("b"))
           .distinct().collect().map(_.getLong(0)).toSet
         man.filter(e => bset(e.bucket))
-      case _ => readBloomConfig(spark, path, cur) match {
+      case _ => m.bloom match {
         case Some(cfg) if cfg.col == "doc_id" =>
           val idv = ids.select(col("doc_id").cast("string"))
             .limit(65537).collect().map(_.getString(0))
@@ -1018,15 +920,14 @@ object VersionedStore {
       }
     }
     if (candidates.isEmpty) return 0L
-    val visible = scanEntries(spark, path, candidates)
+    val visible = scanEntries(spark, path, m.copy(entries = candidates))
     val victims = visible.join(broadcast(ids), Seq("doc_id"), "left_semi")
       .persist() // one pruned scan feeds both consumers (grouped probe
                  // + dv-id write); released below
     // ONE job learns the affected bucket set AND the removed-row total
     // (was: localCheckpoint + distinct-collect + count = three jobs —
     // optimization r16, guide §1.2)
-    val vb = victims.groupBy(col("owner"), col("bucket").cast("long").as("bucket"))
-      .count().collect()
+    val vb = victims.groupBy(col("owner"), col("bucket")).count().collect()
     val affected = vb.map(r => (r.getString(0), r.getLong(1))).toSeq
     if (affected.isEmpty) { victims.unpersist(); return 0L }
     val removed = vb.map(_.getLong(2)).sum
@@ -1038,7 +939,7 @@ object VersionedStore {
     val allIds =
       if (oldEntries.isEmpty) newVictimIds
       else newVictimIds.unionByName(
-        readDvEntries(spark, path, oldEntries)).distinct()
+        readDvEntries(spark, path, m.copy(entries = oldEntries))).distinct()
     // writer-isolated dv staging (same discipline as writeStaged): a
     // fresh w=<dvw> subdir per attempt, written via a writer-private
     // staging root + one rename, so a concurrent soft delete racing
@@ -1060,30 +961,33 @@ object VersionedStore {
         s"softDelete: move $dvStaging -> $dvTarget failed")
     // zone maps untouched: a delete only shrinks a bucket's content,
     // so its recorded (min, max) stays a sound over-approximation
-    val entries = man.map(e =>
+    commitManifest(spark, path, next, m.copy(entries = man.map(e =>
       if (affectedSet((e.owner, e.bucket)))
-        e.copy(dv = Some(next), dvw = Some(dvw)) else e)
-    commitManifestFull(spark, path, next, entries, readLayout(spark, path, cur),
-      readBloomConfig(spark, path, cur))
+        e.copy(dv = Some(next), dvw = Some(dvw)) else e)))
     removed
   }
 
   /** Read a snapshot (default: latest). Plans a scan over exactly the
     * manifest's version dirs — no discovery, orphan dirs invisible. */
-  def readSnapshot(spark: SparkSession, path: String, snapshot: Int = -1): DataFrame = {
+  def readSnapshot(spark: SparkSession, path: String, snapshot: Int = -1): DataFrame =
+    scanEntries(spark, path, manifestAt(spark, path, snapshot, "readSnapshot")._2)
+
+  /** Snapshot `snapshot` (-1: the current one) and its manifest; `op`
+    * names the caller in errors. A vacuumed (or never-committed)
+    * snapshot fails CLEANLY here — a descriptive error naming what is
+    * still readable — never a partial read or a raw FileNotFound. */
+  private def manifestAt(spark: SparkSession, path: String, snapshot: Int,
+                         op: String): (Int, Manifest) = {
     val snap = if (snapshot > 0) snapshot
     else currentSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(s"readSnapshot: no snapshot at $path"))
-    // a vacuumed (or never-committed) snapshot must fail CLEANLY here —
-    // a descriptive error naming what is still readable — never reach
-    // the scan and surface a partial read or a raw FileNotFound
+      throw new IllegalStateException(s"$op: no snapshot at $path"))
     if (snapshot > 0 && !fsOf(spark, path).exists(
         new Path(manifestFile(path, snap))))
       throw new IllegalStateException(
-        s"readSnapshot: snapshot $snap at $path is not readable " +
+        s"$op: snapshot $snap at $path is not readable " +
           s"(vacuumed or never committed); retained snapshots: " +
           s"${snapshots(spark, path).mkString(", ")}")
-    scanEntries(spark, path, readManifestFull(spark, path, snap))
+    (snap, readManifest(spark, path, snap))
   }
 
   /** ZONE-MAP-PRUNED range read over the cluster column: scan only
@@ -1095,28 +999,20 @@ object VersionedStore {
     * cluster column's name lives in the layout header). */
   def rangeScan(spark: SparkSession, path: String, lo: Double, hi: Double,
                 snapshot: Int = -1): (DataFrame, Int, Int) = {
-    val snap = if (snapshot > 0) snapshot
-    else currentSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(s"rangeScan: no snapshot at $path"))
-    val statsCol = readLayout(spark, path, snap) match {
+    val (snap, m) = manifestAt(spark, path, snapshot, "rangeScan")
+    val statsCol = m.layout match {
       case Some(RangeLayout(c, _, _, _)) => c
       case other => throw new IllegalStateException(
         s"rangeScan: snapshot $snap has no range layout (found $other) — " +
           "run compactClustered first")
     }
-    val entries = readManifestFull(spark, path, snap)
-    val scanned = entries.filter(_.stats match {
+    val scanned = m.entries.filter(_.stats match {
       case Some((mn, mx)) => !(mx < lo || mn > hi)
       case None => true
     })
-    val rows =
-      if (scanned.isEmpty) {
-        // degenerate but legal: nothing overlaps — an empty relation
-        // with the snapshot's schema
-        scanEntries(spark, path, entries).filter(lit(false))
-      } else scanEntries(spark, path, scanned)
-    (rows.filter(col(statsCol).cast("double").between(lo, hi)),
-      scanned.size, entries.size)
+    (scanEntries(spark, path, m.copy(entries = scanned))
+      .filter(col(statsCol).cast("double").between(lo, hi)),
+      scanned.size, m.entries.size)
   }
 
   def readSnapshotRange(spark: SparkSession, path: String, lo: Double,
@@ -1136,29 +1032,15 @@ object VersionedStore {
                       colY: String, nBuckets: Int, bits: Int = 5): Unit = {
     require((1L << (2 * bits)) % nBuckets == 0,
       s"nBuckets=$nBuckets must divide 4^bits=${1L << (2 * bits)}")
-    val cur = currentSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(s"compactZOrdered: no snapshot at $path"))
-    val next = cur + 1
-    val base = readSnapshot(spark, path, cur).drop("bucket")
+    val (cur, m) = manifestAt(spark, path, -1, "compactZOrdered")
+    val base = scanEntries(spark, path, m).drop("bucket")
     Seq(colX, colY).foreach(c => require(base.filter(col(c).isNull).isEmpty,
       s"compactZOrdered: cluster column '$c' must be non-null"))
     val Row(mnx: Double, mxx: Double, mny: Double, mxy: Double) = base.agg(
       min(col(colX).cast("double")), max(col(colX).cast("double")),
       min(col(colY).cast("double")), max(col(colY).cast("double"))).head()
     val layout = ZLayout(colX, colY, mnx, mxx, mny, mxy, bits, nBuckets)
-    val nv = base.withColumn("bucket", bucketExpr(layout))
-    val touched = nv.select("owner", "bucket").distinct()
-      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-    val wid = newWid() // writer-isolated staging; see stageVersion
-    val staged = nv.withColumn("v", lit(next))
-      .repartition(touched.size, col("owner"), col("bucket"))
-      .localCheckpoint()
-    val expected = staged.count()
-    writeStaged(staged, path, wid)
-    auditAndCommit(spark, path, StagedVersion(next, expected, touched,
-      touched.map { case (o, b) =>
-        ManifestEntry(o, b, next, None, wid = Some(wid)) },
-      Some(layout), readBloomConfig(spark, path, cur), wid = Some(wid)))
+    rewriteAll(spark, path, cur, m, base.withColumn("bucket", bucketExpr(layout)), layout)
   }
 
   /** 2-D ZONE-MAP-PRUNED box read over a z-ordered table: scan only
@@ -1167,25 +1049,20 @@ object VersionedStore {
     * buckets total). */
   def boxScan(spark: SparkSession, path: String, loX: Double, hiX: Double,
               loY: Double, hiY: Double, snapshot: Int = -1): (DataFrame, Int, Int) = {
-    val snap = if (snapshot > 0) snapshot
-    else currentSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(s"boxScan: no snapshot at $path"))
-    val (cx, cy) = readLayout(spark, path, snap) match {
+    val (snap, m) = manifestAt(spark, path, snapshot, "boxScan")
+    val (cx, cy) = m.layout match {
       case Some(ZLayout(x, y, _, _, _, _, _, _)) => (x, y)
       case other => throw new IllegalStateException(
         s"boxScan: snapshot $snap has no z-order layout (found $other) — " +
           "run compactZOrdered first")
     }
-    val entries = readManifestFull(spark, path, snap)
     def overlaps(st: Option[(Double, Double)], lo: Double, hi: Double) =
       st match { case Some((mn, mx)) => !(mx < lo || mn > hi); case None => true }
-    val scanned = entries.filter(e =>
+    val scanned = m.entries.filter(e =>
       overlaps(e.stats, loX, hiX) && overlaps(e.stats2, loY, hiY))
-    val rows =
-      if (scanned.isEmpty) scanEntries(spark, path, entries).filter(lit(false))
-      else scanEntries(spark, path, scanned)
-    (rows.filter(col(cx).cast("double").between(loX, hiX) &&
-      col(cy).cast("double").between(loY, hiY)), scanned.size, entries.size)
+    (scanEntries(spark, path, m.copy(entries = scanned))
+      .filter(col(cx).cast("double").between(loX, hiX) &&
+        col(cy).cast("double").between(loY, hiY)), scanned.size, m.entries.size)
   }
 
   /** Build (or rebuild) per-bucket bloom filters over `colName` as a
@@ -1198,14 +1075,12 @@ object VersionedStore {
   def buildBloomIndex(spark: SparkSession, path: String, colName: String,
                       mBits: Int = 1024, k: Int = 3): Unit = {
     require(mBits % 8 == 0 && mBits > 0, s"mBits must be a positive multiple of 8")
-    val cur = currentSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(s"buildBloomIndex: no snapshot at $path"))
+    val (cur, m) = manifestAt(spark, path, -1, "buildBloomIndex")
     val cfg = BloomConfig(colName, mBits, k)
-    val entries = readManifestFull(spark, path, cur)
-    val bl = bloomHexOf(scanEntries(spark, path, entries), cfg)
-    commitManifestFull(spark, path, cur + 1,
-      entries.map(e => e.copy(bloom = bl.get((e.owner, e.bucket)))),
-      readLayout(spark, path, cur), Some(cfg))
+    val bl = bloomHexOf(scanEntries(spark, path, m), cfg)
+    commitManifest(spark, path, cur + 1, m.copy(
+      entries = m.entries.map(e => e.copy(bloom = bl.get((e.owner, e.bucket)))),
+      bloom = Some(cfg)))
   }
 
   /** BLOOM-PRUNED equality lookup on the indexed column: scan only
@@ -1218,135 +1093,90 @@ object VersionedStore {
     * handful of bucket dirs. */
   def lookupEq(spark: SparkSession, path: String, value: String,
                snapshot: Int = -1): (DataFrame, Int, Int) = {
-    val snap = if (snapshot > 0) snapshot
-    else currentSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(s"lookupEq: no snapshot at $path"))
-    val cfg = readBloomConfig(spark, path, snap).getOrElse(
+    val (snap, m) = manifestAt(spark, path, snapshot, "lookupEq")
+    val cfg = m.bloom.getOrElse(
       throw new IllegalStateException(
         s"lookupEq: snapshot $snap has no bloom index — run buildBloomIndex first"))
-    val entries = readManifestFull(spark, path, snap)
     val bits = probeBits(value, cfg)
-    val scanned = entries.filter(e =>
+    val scanned = m.entries.filter(e =>
       e.bloom.forall(h => bits.forall(b => bloomHas(h, b))))
-    val rows =
-      if (scanned.isEmpty) scanEntries(spark, path, entries).filter(lit(false))
-      else scanEntries(spark, path, scanned)
-    (rows.filter(col(cfg.col).cast("string") === value), scanned.size, entries.size)
+    (scanEntries(spark, path, m.copy(entries = scanned))
+      .filter(col(cfg.col).cast("string") === value), scanned.size, m.entries.size)
   }
 
-  /** Scan exactly `entries`' data dirs and subtract their delete
-    * vectors (one anti-join against the referenced dv files — the
-    * merge-on-read cost, proportional to the DELETED ids, not the
-    * table). */
-  /** The (owner, bucket, doc_id) delete-vector rows the given entries
-    * reference. Wid-era and legacy dv dirs sit at DIFFERENT partition
-    * depths (dv=k/w=x/owner/bucket vs dv=k/owner/bucket) and Spark's
-    * partition discovery rejects mixed depths in one read — split by
-    * shape and union. */
-  private def readDvEntries(spark: SparkSession, path: String,
-                            entries: Seq[ManifestEntry]): DataFrame = {
-    def read(es: Seq[ManifestEntry]): Option[DataFrame] =
-      if (es.isEmpty) None
-      else Some(withDriverSideListing(spark) {
-        spark.read.option("basePath", deletesDir(path))
-          .parquet(es.map(dvRefDir(path, _)): _*)
-      }.select(col("owner"), col("bucket").cast("long").as("bucket"),
-          col("doc_id")))
-    val (w, legacy) = entries.filter(_.dv.isDefined).partition(_.dvw.isDefined)
-    (read(w), read(legacy)) match {
-      case (Some(a), Some(b)) => a.unionByName(b)
-      case (a, b) => a.orElse(b).getOrElse(
-        throw new IllegalArgumentException("readDvEntries: no dv entries"))
-    }
-  }
-
-  /** Merged-schema cache for manifest-planned reads. A committed
-    * version dir is IMMUTABLE (writes stage under fresh wids, commits
-    * rename, vacuum only deletes unreferenced dirs), so the merged
-    * schema of an exact dir list never changes — but mergeSchema
-    * inference launches one distributed footer-read job per
-    * `spark.read`, and an episode composite replays the same snapshot
-    * read dozens of times (measured: 28 of x15_cdc_mirror's 86 jobs
-    * were schema-merge jobs). First read infers and caches; repeats
-    * pass the schema explicitly — zero metadata jobs (optimization
-    * r17, guide §1.2). Driver state is bounded: one small StructType
-    * per distinct dir list. */
-  private val mergedSchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
-  /** Manifest-planned reads pass a BOUNDED, already-known dir list
-    * (≤ owners × buckets entries — the manifest IS the listing, the
-    * table-format argument of guide §6), yet Spark launches a
-    * distributed listing job whenever more than
-    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
-    * paths are passed — one scheduler round-trip per snapshot read,
-    * ~10-30 such jobs per episode composite (measured in x15/x14).
-    * Scope driver-side listing to exactly these reads; the bound is
-    * parameterised (`spark.graft.manifestListingThreshold`, default
-    * 4096) for deployments whose object-store listing latency makes
-    * the distributed listing worthwhile at very high bucket counts. */
-  private def withDriverSideListing[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-    val bound = spark.conf.getOption("spark.graft.manifestListingThreshold")
-      .getOrElse("4096")
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, bound)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
+  /** Scan exactly `m.entries`' data dirs under `m.schema` and subtract
+    * their delete vectors (one anti-join against the referenced dv
+    * files — the merge-on-read cost, proportional to the DELETED ids,
+    * not the table). An empty entry set is an empty relation with the
+    * snapshot's schema. Schema evolution needs no merge: `m.schema` is
+    * the union of every version dir's columns, and parquet reads NULL
+    * for a column a file lacks. */
   private[graft] def scanEntries(spark: SparkSession, path: String,
-                          entries: Seq[ManifestEntry]): DataFrame = {
-    // mergeSchema: a snapshot may span version dirs written before and
-    // after a column was ADDED (schema evolution) — the union schema
-    // is the snapshot's schema, old rows read NULL for new columns.
-    // Wid-era dirs (…/v=N/w=x) and legacy dirs (…/v=N) sit at
-    // different partition depths, which one parquet() call rejects
-    // ("conflicting directory structures") — split by shape, union.
-    def read(es: Seq[ManifestEntry]): Option[DataFrame] =
-      if (es.isEmpty) None
-      else {
-        val dirs = es.map(entryDir(path, _))
-        // all files of one commit share one schema (one staged write),
-        // so the merged schema is a function of the VERSION SET present
-        // (plus the partition-dir shape) — subsets of a snapshot reuse
-        // the full read's schema instead of re-inferring
-        val key = path + "|" + es.map(_.v).distinct.sorted.mkString(",") +
-          "|" + es.head.wid.isDefined
-        val df = withDriverSideListing(spark) {
-          val rdr = spark.read.option("basePath", dataDir(path))
-          Option(mergedSchemaCache.get(key)) match {
-            case Some(st) => rdr.schema(st).parquet(dirs: _*)
-            case None =>
-              val d = rdr.option("mergeSchema", "true").parquet(dirs: _*)
-              // normalize the wid partition column to string before
-              // caching: partition-type inference flips `w` to a
-              // numeric type when a wid happens to be all digits, and
-              // a later wid with hex letters would fail the cast —
-              // the column is dropped right below, so its type only
-              // has to ACCEPT every dir value
-              mergedSchemaCache.put(key,
-                org.apache.spark.sql.types.StructType(d.schema.fields.map(f =>
-                  if (f.name == "w")
-                    f.copy(dataType = org.apache.spark.sql.types.StringType)
-                  else f)))
-              d
-          }
-        }
-        Some(df.withColumn("bucket", col("bucket").cast("long")).drop("v", "w"))
-      }
-    val (wids, legacy) = entries.partition(_.wid.isDefined)
-    val base = (read(wids), read(legacy)) match {
-      case (Some(a), Some(b)) => a.unionByName(b, allowMissingColumns = true)
-      case (a, b) => a.orElse(b).getOrElse(
-        throw new IllegalArgumentException("scanEntries: empty entry set"))
-    }
-    if (!entries.exists(_.dv.isDefined)) base
-    else base.join(readDvEntries(spark, path, entries),
+                                 m: Manifest): DataFrame = {
+    val data = manifestRelation(spark,
+      m.entries.map(e => (s"${dataDir(path)}/${entryKey(e)}", e)), m.schema)
+    if (!m.entries.exists(_.dv.isDefined)) data
+    else data.join(readDvEntries(spark, path, m),
       Seq("owner", "bucket", "doc_id"), "left_anti")
+  }
+
+  /** The (doc_id, owner, bucket) delete-vector rows `m.entries`
+    * reference. */
+  private def readDvEntries(spark: SparkSession, path: String,
+                            m: Manifest): DataFrame =
+    manifestRelation(spark, m.entries.filter(_.dv.isDefined)
+      .map(e => (s"${deletesDir(path)}/${dvKey(e)}", e)),
+      StructType(Seq(m.schema("doc_id"))))
+
+  /** A DataFrame over exactly `dirs`: Spark's own parquet scan, with
+    * listing and partition values from the manifest instead of
+    * discovery, and the schema given instead of inferred — building
+    * it launches no job and touches no session conf. */
+  private def manifestRelation(spark: SparkSession, dirs: Seq[(String, ManifestEntry)],
+                               dataSchema: StructType): DataFrame = {
+    val index = new ManifestIndex(spark, dirs.map { case (d, e) =>
+      (new Path(d), InternalRow(UTF8String.fromString(e.owner), e.bucket)) })
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** The manifest as Spark's file listing: one partition directory per
+    * manifest dir, its `owner`/`bucket` values from the entry. Each dir
+    * is listed once, on the driver, through the Hadoop FS API;
+    * partition filters are evaluated against the entries' values, so
+    * `owner === x` reads only that owner's files. Committed dirs are
+    * immutable, so two indexes over the same dirs are equal — cached
+    * plans match across reads, as with Spark's own path index. */
+  private final class ManifestIndex(spark: SparkSession,
+                                    dirs: Seq[(Path, InternalRow)]) extends FileIndex {
+    override val partitionSchema: StructType = StructType(Seq(
+      StructField("owner", StringType), StructField("bucket", LongType)))
+    override val rootPaths: Seq[Path] = dirs.map(_._1)
+    private lazy val listed: Seq[PartitionDirectory] = dirs.map { case (d, values) =>
+      PartitionDirectory(values, d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(d).filter(f => f.isFile && !f.getPath.getName.startsWith(".") &&
+          !f.getPath.getName.startsWith("_")))
+    }
+    override def listFiles(partitionFilters: Seq[Expression],
+                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      partitionFilters.reduceOption(And) match {
+        case None => listed
+        case Some(f) =>
+          val keep = Predicate.createInterpreted(f.transform { case a: AttributeReference =>
+            val i = partitionSchema.fieldNames.indexWhere(_.equalsIgnoreCase(a.name))
+            BoundReference(i, partitionSchema(i).dataType, nullable = true)
+          })
+          listed.filter(p => keep.eval(p.values))
+      }
+    override def inputFiles: Array[String] =
+      listed.flatMap(_.files.map(_.getPath.toString)).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = listed.flatMap(_.files.map(_.getLen)).sum
+    override def equals(o: Any): Boolean = o match {
+      case x: ManifestIndex => x.rootPaths.toSet == rootPaths.toSet
+      case _ => false
+    }
+    override def hashCode: Int = rootPaths.toSet.hashCode
   }
 
   /** Drop data dirs referenced by NO retained manifest (keep the last
@@ -1364,15 +1194,7 @@ object VersionedStore {
     val tagged = listTags(spark, path).values.toSet
     val keep = (snaps.takeRight(retain) ++ snaps.filter(tagged)).distinct.sorted
     val keepSet = keep.toSet
-    val keptEntries = keep.flatMap(readManifestFull(spark, path, _))
-    // live keys at the granularity an entry actually references:
-    // owner=o/bucket=b/v=N for legacy entries, .../w=x for wid-era
-    // ones — so an orphan w-dir beside a live sibling (a LOSING
-    // concurrent writer's staging, or crashed-attempt debris) is
-    // reclaimed without touching the winner's data
-    val live = keptEntries.map(e =>
-      s"owner=${e.owner}/bucket=${e.bucket}/v=${e.v}" +
-        e.wid.map(w => s"/w=$w").getOrElse("")).toSet
+    val keptEntries = keep.flatMap(readManifest(spark, path, _).entries)
     var deleted = 0
     // crashed writers leave .staging-<wid> roots (never referenced,
     // invisible to readers); vacuum reclaims them — same caveat as
@@ -1385,65 +1207,30 @@ object VersionedStore {
         }
     sweepStaging(new Path(dataDir(path)))
     sweepStaging(new Path(deletesDir(path)))
-    val root = new Path(dataDir(path))
-    if (fs.exists(root)) {
-      for (oDir <- fs.listStatus(root)
-           if oDir.isDirectory && !oDir.getPath.getName.startsWith(".");
-           bDir <- fs.listStatus(oDir.getPath) if bDir.isDirectory;
-           vDir <- fs.listStatus(bDir.getPath) if vDir.isDirectory) {
-        val key = s"${oDir.getPath.getName}/${bDir.getPath.getName}/${vDir.getPath.getName}"
-        if (!live.contains(key)) {
-          val wDirs = fs.listStatus(vDir.getPath).filter(d =>
-            d.isDirectory && d.getPath.getName.startsWith("w="))
-          if (wDirs.isEmpty) { fs.delete(vDir.getPath, true); deleted += 1 }
-          else {
-            var keptW = 0
-            for (wDir <- wDirs) {
-              if (!live.contains(s"$key/${wDir.getPath.getName}")) {
-                fs.delete(wDir.getPath, true); deleted += 1
-              } else keptW += 1
-            }
-            if (keptW == 0 && fs.listStatus(vDir.getPath).isEmpty)
-              fs.delete(vDir.getPath, true)
-          }
+    // both roots are four levels deep to their leaf dirs (data:
+    // owner/bucket/v/w, deletes: dv/w/owner/bucket). A leaf no retained
+    // entry names is reclaimed, and a dir the sweep empties goes with
+    // it — so an orphan w-dir beside a live sibling (a LOSING concurrent
+    // writer's staging, or crashed-attempt debris) is reclaimed without
+    // touching the winner's data
+    def sweep(dir: Path, key: String, depth: Int, live: Set[String]): Unit =
+      for (d <- fs.listStatus(dir)
+           if d.isDirectory && !d.getPath.getName.startsWith(".")) {
+        val k = key + d.getPath.getName
+        if (depth == 1) { if (!live(k)) { fs.delete(d.getPath, true); deleted += 1 } }
+        else {
+          sweep(d.getPath, k + "/", depth - 1, live)
+          if (fs.listStatus(d.getPath).isEmpty) fs.delete(d.getPath, false)
         }
       }
-      // drop superseded manifests (never a tagged one)
-      snaps.filterNot(keepSet).foreach(n =>
-        fs.delete(new Path(manifestFile(path, n)), false))
-    }
-    // reclaim delete-vector dirs no retained manifest references —
-    // same two-shape walk (dv=k/w=x/owner/bucket vs dv=k/owner/bucket)
-    val liveDv = keptEntries.collect {
-      case e if e.dv.isDefined =>
-        s"dv=${e.dv.get}" + e.dvw.map(w => s"/w=$w").getOrElse("") +
-          s"/owner=${e.owner}/bucket=${e.bucket}"
-    }.toSet
-    val dRoot = new Path(deletesDir(path))
-    if (fs.exists(dRoot)) {
-      def sweepDvLeaf(prefix: String, dir: Path): Unit =
-        for (oDir <- fs.listStatus(dir) if oDir.isDirectory;
-             bDir <- fs.listStatus(oDir.getPath) if bDir.isDirectory) {
-          val key = s"$prefix/${oDir.getPath.getName}/${bDir.getPath.getName}"
-          if (!liveDv.contains(key)) { fs.delete(bDir.getPath, true); deleted += 1 }
-        }
-      for (kDir <- fs.listStatus(dRoot)
-           if kDir.isDirectory && !kDir.getPath.getName.startsWith(".")) {
-        val kName = kDir.getPath.getName
-        for (child <- fs.listStatus(kDir.getPath) if child.isDirectory) {
-          if (child.getPath.getName.startsWith("w="))
-            sweepDvLeaf(s"$kName/${child.getPath.getName}", child.getPath)
-          else {
-            val key = s"$kName/${child.getPath.getName}"
-            // legacy shape: child is owner=o, its children bucket=b
-            for (bDir <- fs.listStatus(child.getPath) if bDir.isDirectory) {
-              val bKey = s"$key/${bDir.getPath.getName}"
-              if (!liveDv.contains(bKey)) { fs.delete(bDir.getPath, true); deleted += 1 }
-            }
-          }
-        }
-      }
-    }
+    for ((root, live) <- Seq(
+           dataDir(path) -> keptEntries.map(entryKey).toSet,
+           deletesDir(path) -> keptEntries.filter(_.dv.isDefined).map(dvKey).toSet)
+         if fs.exists(new Path(root)))
+      sweep(new Path(root), "", 4, live)
+    // drop superseded manifests (never a tagged one)
+    snaps.filterNot(keepSet).foreach(n =>
+      fs.delete(new Path(manifestFile(path, n)), false))
     deleted
   }
 
@@ -1454,10 +1241,9 @@ object VersionedStore {
     * parquet footer row counts per bucket minus the dv cardinality;
     * the contract — one bounded row per owner — is the same. */
   def tableReport(spark: SparkSession, path: String): DataFrame = {
-    val cur = currentSnapshot(spark, path).getOrElse(
-      throw new IllegalStateException(s"tableReport: no snapshot at $path"))
-    val man = readManifestFull(spark, path, cur)
-    val layoutKind = readLayout(spark, path, cur) match {
+    val (cur, m) = manifestAt(spark, path, -1, "tableReport")
+    val man = m.entries
+    val layoutKind = m.layout match {
       case Some(_: RangeLayout) => "range"
       case Some(_: ZLayout) => "z"
       case _ => "hash"
@@ -1471,12 +1257,12 @@ object VersionedStore {
         sum(col("has_dv").cast("long")).as("n_dv_buckets"),
         sum(col("has_bloom").cast("long")).as("n_bloom_buckets"),
         max(col("v")).cast("long").as("max_data_version"))
-    val visible = readSnapshot(spark, path, cur)
+    val visible = scanEntries(spark, path, m)
       .groupBy("owner").agg(count(lit(1)).as("n_visible"))
     val masked =
       if (!man.exists(_.dv.isDefined))
         entries.select(col("owner")).distinct().withColumn("n_masked", lit(0L))
-      else readDvEntries(spark, path, man)
+      else readDvEntries(spark, path, m)
         .groupBy("owner").agg(count(lit(1)).as("n_masked"))
     perOwnerMan.join(visible, Seq("owner"), "left")
       .join(masked, Seq("owner"), "left")

@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.ByidStore
+import graft.SparkSessionHelper.jobsOf
 
 /** CDC-maintained point-fetch store: delta segments + tombstones +
   * max-seg merge must serve exactly the post-churn corpus, and
@@ -18,34 +19,6 @@ class ByidStoreSpec extends AnyFunSuite {
   private def corpus(ids: Seq[Long], tag: String) = {
     import spark.implicits._
     ids.map(i => (i, s"$tag-$i", i * 10)).toDF("id", "payload", "v")
-  }
-
-  /** Run `body` under its own job group and return the descriptions
-    * of the jobs it launched (stage names). Counting only this group
-    * keeps the guard exact on the shared SparkContext, where an
-    * unfiltered listener would count concurrent suites' jobs. */
-  private def jobsOf(what: String)(body: => Unit): Seq[String] = {
-    val group = s"byid-guard-${System.nanoTime()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(js.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
-        if (g == group)
-          jobs.add(js.stageInfos.map(_.name).mkString(" | ")): Unit
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      spark.sparkContext.setJobGroup(group, what)
-      body
-      graft.BenchProbe.drainListenerBus(spark)
-    } finally {
-      spark.sparkContext.clearJobGroup()
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    jobs.toArray.map(_.toString).toSeq
   }
 
   private def parquetFiles(dir: String): Seq[java.io.File] =

@@ -21,6 +21,14 @@ class VersionedStoreSpec extends AnyFunSuite {
           when(col("vtype") === "chunk", md5(col("chunk_text"))))))).as("dg"))
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
 
+  // projections of one parsed manifest the assertions compare
+  private def manEntries(s: org.apache.spark.sql.SparkSession, dir: String, n: Int) =
+    VersionedStore.readManifest(s, dir, n).entries
+  private def manKeys(s: org.apache.spark.sql.SparkSession, dir: String, n: Int) =
+    manEntries(s, dir, n).map(e => (e.owner, e.bucket, e.v))
+  private def manLayout(s: org.apache.spark.sql.SparkSession, dir: String, n: Int) =
+    VersionedStore.readManifest(s, dir, n).layout
+
   private def docs = Tables.documents(spark, sf).filter(col("doc_id") < 60)
   private def modified = docs.filter(col("doc_id") === 7)
     .withColumn("text", translate(col("text"), "a", "."))
@@ -40,8 +48,8 @@ class VersionedStoreSpec extends AnyFunSuite {
     assert((after - 7L) == (before - 7L))
     // untouched buckets SHARE files: every v=1 dir outside doc 7's
     // bucket is referenced by both manifests
-    val m1 = VersionedStore.readManifest(spark, dir, 1).toSet
-    val m2 = VersionedStore.readManifest(spark, dir, 2).toSet
+    val m1 = manKeys(spark, dir, 1).toSet
+    val m2 = manKeys(spark, dir, 2).toSet
     val touchedBucket = 7L % 16
     assert(m1.filterNot(_._2 == touchedBucket) == m2.filterNot(_._2 == touchedBucket))
     assert(m2.exists(e => e._2 == touchedBucket && e._3 == 2))
@@ -145,14 +153,14 @@ class VersionedStoreSpec extends AnyFunSuite {
     // content is row-identical; only the layout moved
     assert(digest(VersionedStore.readSnapshot(spark, dir, 3)) == before)
     // the manifest carries the NEW bucket space...
-    val man3 = VersionedStore.readManifest(spark, dir, 3)
+    val man3 = manKeys(spark, dir, 3)
     assert(man3.forall(_._3 == 3) && man3.map(_._2).forall(b => b >= 0 && b < 16))
     val nDocs = docs.count()
     val expected16 = docs.select(col("source"), pmod(col("doc_id"), lit(16L)))
       .distinct().count()
     assert(man3.map(e => (e._1, e._2)).distinct.size == expected16)
     // ...while snapshot 2 still reads the OLD 4-bucket layout
-    val man2 = VersionedStore.readManifest(spark, dir, 2)
+    val man2 = manKeys(spark, dir, 2)
     assert(man2.map(_._2).forall(b => b >= 0 && b < 4))
     assert(digest(VersionedStore.readSnapshot(spark, dir, 2)) == before)
     // physical layout matches the manifest: every v=3 dir is a 16-space bucket
@@ -209,7 +217,7 @@ class VersionedStoreSpec extends AnyFunSuite {
     assert(after.forall { case (k, v) => before(k) == v })
     // bucket 3 emptied → absent from manifest 2; untouched buckets
     // keep their v=1 dirs (no rewrite)
-    val m2 = VersionedStore.readManifest(spark, dir, 2)
+    val m2 = manKeys(spark, dir, 2)
     assert(!m2.exists(_._2 == 3L), s"emptied bucket still in manifest: $m2")
     val touched = Set(3L, 7L % 16)
     assert(m2.filterNot(e => touched(e._2)).forall(_._3 == 1))
@@ -225,13 +233,13 @@ class VersionedStoreSpec extends AnyFunSuite {
     val dir = freshDir("sdv")
     VersionedStore.initialLoad(spark, dir, IndexPipeline.buildIndex(docs))
     val before = digest(VersionedStore.readSnapshot(spark, dir))
-    val m1 = VersionedStore.readManifest(spark, dir, 1).toSet
+    val m1 = manKeys(spark, dir, 1).toSet
 
     // episode 1: docs 7 and 23 (same bucket: 7%16=7, 23%16=7)
     val removed1 = VersionedStore.softDelete(spark, dir, Seq(7L, 23L).toDF("doc_id"))
     assert(removed1 > 0L)
     // data versions UNTOUCHED — that is the merge-on-read contract
-    assert(VersionedStore.readManifest(spark, dir, 2).toSet == m1)
+    assert(manKeys(spark, dir, 2).toSet == m1)
     val v2 = digest(VersionedStore.readSnapshot(spark, dir, 2))
     assert(v2 == before -- Set(7L, 23L))
     // snapshot 1 still sees everything
@@ -242,7 +250,7 @@ class VersionedStoreSpec extends AnyFunSuite {
     assert(removed2 > 0L)
     assert(digest(VersionedStore.readSnapshot(spark, dir, 3)) ==
       before -- Set(7L, 23L, 39L))
-    assert(VersionedStore.readManifest(spark, dir, 3).toSet == m1)
+    assert(manKeys(spark, dir, 3).toSet == m1)
 
     // an upsert of doc 8 (bucket 8, no dv) leaves other dvs standing;
     // the soft-deleted docs stay gone in snapshot 4
@@ -357,10 +365,10 @@ class VersionedStoreSpec extends AnyFunSuite {
     // hash layout has no cluster column — rangeScan must refuse
     intercept[IllegalStateException](VersionedStore.rangeScan(spark, dir, 0, 1))
     VersionedStore.compactClustered(spark, dir, "n_chars", 8)
-    assert(VersionedStore.readLayout(spark, dir, 2)
+    assert(manLayout(spark, dir, 2)
       .exists(_.isInstanceOf[VersionedStore.RangeLayout]))
     // every entry carries a zone map
-    val man = VersionedStore.readManifestFull(spark, dir, 2)
+    val man = manEntries(spark, dir, 2)
     assert(man.nonEmpty && man.forall(_.stats.isDefined))
     val (rows, scanned, total) = VersionedStore.rangeScan(spark, dir, 150, 260)
     assert(scanned < total, s"no pruning: $scanned/$total")
@@ -386,7 +394,7 @@ class VersionedStoreSpec extends AnyFunSuite {
     val all = Tables.documents(spark, sf).filter(col("doc_id") < 100)
     VersionedStore.initialLoad(spark, dir, zrel(all), nBuckets = 4)
     VersionedStore.compactClustered(spark, dir, "n_chars", 8)
-    val lay = VersionedStore.readLayout(spark, dir, 2)
+    val lay = manLayout(spark, dir, 2)
       .get.asInstanceOf[VersionedStore.RangeLayout]
     // upsert one doc with n_chars far ABOVE the frozen max — it must be
     // clamped into the top bin and widen that bucket's zone map
@@ -395,9 +403,9 @@ class VersionedStoreSpec extends AnyFunSuite {
       .withColumn("n_chars", lit(lay.mx.toLong + 5000L))
     VersionedStore.upsertVersioned(spark, dir, big)
     // layout header carried forward unchanged (frozen boundaries)
-    assert(VersionedStore.readLayout(spark, dir, 3) == Some(lay))
+    assert(manLayout(spark, dir, 3) == Some(lay))
     val owner = big.select("owner").head().getString(0)
-    val man3 = VersionedStore.readManifestFull(spark, dir, 3)
+    val man3 = manEntries(spark, dir, 3)
     val top = man3.find(e => e.owner == owner && e.bucket == lay.nBuckets - 1L)
     assert(top.exists(_.stats.exists(_._2 == lay.mx + 5000.0)),
       s"top bin not widened: ${top.flatMap(_.stats)}")
@@ -452,8 +460,8 @@ class VersionedStoreSpec extends AnyFunSuite {
     intercept[IllegalStateException](VersionedStore.lookupEq(spark, dir, "x"))
     VersionedStore.buildBloomIndex(spark, dir, "text_md5")
     // metadata-only: every data version unchanged, every entry filtered
-    val m1 = VersionedStore.readManifest(spark, dir, 1).toSet
-    val m2full = VersionedStore.readManifestFull(spark, dir, 2)
+    val m1 = manKeys(spark, dir, 1).toSet
+    val m2full = manEntries(spark, dir, 2)
     assert(m2full.map(e => (e.owner, e.bucket, e.v)).toSet == m1)
     assert(m2full.forall(_.bloom.isDefined))
     // pruned lookup finds exactly the probe's rows
@@ -476,7 +484,7 @@ class VersionedStoreSpec extends AnyFunSuite {
     assert(s2 < t2)
     // compact to a new bucket count: filters recomputed for the new space
     VersionedStore.compact(spark, dir, 4)
-    val m4 = VersionedStore.readManifestFull(spark, dir, 4)
+    val m4 = manEntries(spark, dir, 4)
     assert(m4.forall(_.bloom.isDefined))
     val (r3, s3, t3) = VersionedStore.lookupEq(spark, dir,
       "feedfacefeedfacefeedfacefeedface")
@@ -494,16 +502,16 @@ class VersionedStoreSpec extends AnyFunSuite {
     // over-approximation), layout header intact
     VersionedStore.softDelete(spark, dir,
       all.filter(col("doc_id").isin(3, 4)).select("doc_id"))
-    assert(VersionedStore.readLayout(spark, dir, 3)
+    assert(manLayout(spark, dir, 3)
       .exists(_.isInstanceOf[VersionedStore.RangeLayout]))
-    val man3 = VersionedStore.readManifestFull(spark, dir, 3)
+    val man3 = manEntries(spark, dir, 3)
     assert(man3.forall(_.stats.isDefined))
     val (rows, _, _) = VersionedStore.rangeScan(spark, dir, 0, 1e9)
     assert(!rows.select("doc_id").collect().map(_.getLong(0)).toSet
       .exists(Set(3L, 4L)))
     // plain compact back to hash: header says hash, later upserts use it
     VersionedStore.compact(spark, dir, 4)
-    assert(VersionedStore.readLayout(spark, dir, 4) ==
+    assert(manLayout(spark, dir, 4) ==
       Some(VersionedStore.HashLayout(4)))
     intercept[IllegalStateException](VersionedStore.rangeScan(spark, dir, 0, 1))
     // hash upsert lands doc 150 in bucket 150 % 4 = 2
@@ -520,7 +528,7 @@ class VersionedStoreSpec extends AnyFunSuite {
     val all = zrel(Tables.documents(spark, sf).filter(col("doc_id") < 100))
     VersionedStore.initialLoad(spark, dir, all, nBuckets = 4)
     VersionedStore.compactClustered(spark, dir, "n_chars", 8)
-    val lay = VersionedStore.readLayout(spark, dir, 2)
+    val lay = manLayout(spark, dir, 2)
       .get.asInstanceOf[VersionedStore.RangeLayout]
     // pick a doc currently in a LOW bin; rewrite it with n_chars at the
     // frozen max so its new bucket is the TOP bin — a different bucket
@@ -542,7 +550,7 @@ class VersionedStoreSpec extends AnyFunSuite {
     assert(VersionedStore.readSnapshot(spark, dir, 3).count() == all.count())
     // the OLD bucket was rewritten in the same atomic commit — or, if
     // the victim was its only row, its entry vanished entirely
-    val man3 = VersionedStore.readManifestFull(spark, dir, 3)
+    val man3 = manEntries(spark, dir, 3)
     assert(man3.find(e => e.bucket == oldBucket &&
       e.owner == r.getAs[String]("owner")).forall(_.v == 3))
     // zone maps stay tight after relocation
@@ -578,7 +586,7 @@ class VersionedStoreSpec extends AnyFunSuite {
     // buckets are skipped)
     val movedB2 = movedAgain.withColumn("n_chars", lit(0L))
     val st = VersionedStore.stageVersion(spark, dir, movedB2)
-    val manNow = VersionedStore.readManifestFull(spark, dir,
+    val manNow = manEntries(spark, dir,
       VersionedStore.currentSnapshot(spark, dir).get)
     assert(st.probedBuckets >= 0, "clustered stage must record probe size")
     assert(st.probedBuckets < manNow.size - 1,
@@ -693,7 +701,7 @@ class VersionedStoreSpec extends AnyFunSuite {
     // other owners were scanned, never the whole manifest
     val st = VersionedStore.stageVersion(spark, dir,
       moved.withColumn("text_md5", lit("again")), nBuckets = 8)
-    val man = VersionedStore.readManifestFull(spark, dir,
+    val man = manEntries(spark, dir,
       VersionedStore.currentSnapshot(spark, dir).get)
     val sameBucket = man.count(_.bucket == 7L % 8)
     assert(st.probedBuckets >= 0 && st.probedBuckets < sameBucket,
@@ -865,5 +873,127 @@ class VersionedStoreSpec extends AnyFunSuite {
     assert(snap3(wVid) == s"winner-${winners.head._1}")
     assert(snap3(lVid) == "loser-retry")
     spark.catalog.clearCache()
+  }
+
+
+  // a small (doc_id, owner, text_md5) relation over chosen owners
+  private def ownedRel(owners: Seq[String], n: Int) = {
+    import spark.implicits._
+    (0 until n).map(i => (i.toLong, owners(i % owners.size), s"t$i"))
+      .toDF("doc_id", "owner", "text_md5")
+  }
+
+  test("zero-padded all-digit owners read back as strings and take upserts") {
+    val dir = freshDir("digits")
+    VersionedStore.initialLoad(spark, dir, ownedRel(Seq("007", "042"), 8), nBuckets = 4)
+    val s1 = VersionedStore.readSnapshot(spark, dir)
+    assert(s1.schema("owner").dataType == org.apache.spark.sql.types.StringType,
+      s"owner read back as ${s1.schema("owner").dataType}")
+    assert(s1.select("owner").distinct().collect().map(_.getString(0)).toSet ==
+      Set("007", "042"))
+    VersionedStore.upsertVersioned(spark, dir,
+      ownedRel(Seq("007", "042"), 8).filter(col("doc_id") === 0)
+        .withColumn("text_md5", lit("new")))
+    val now = VersionedStore.readSnapshot(spark, dir)
+      .select("doc_id", "owner", "text_md5").collect()
+      .map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
+    assert(now.size == 8)
+    assert(now(0L) == ("007", "new"))
+    assert(now(1L) == ("042", "t1"))
+    spark.catalog.clearCache()
+  }
+
+  test("a store deleted and rebuilt at the same path reads its new columns") {
+    import spark.implicits._
+    val dir = freshDir("rebuild")
+    VersionedStore.initialLoad(spark, dir,
+      Seq((1L, "o", "x")).toDF("doc_id", "owner", "a"))
+    assert(VersionedStore.readSnapshot(spark, dir).select("a").head().getString(0) == "x")
+    assert(new scala.reflect.io.Directory(new java.io.File(dir)).deleteRecursively())
+    VersionedStore.initialLoad(spark, dir,
+      Seq((1L, "o", "y")).toDF("doc_id", "owner", "b"))
+    val df = VersionedStore.readSnapshot(spark, dir)
+    assert(df.columns.contains("b") && !df.columns.contains("a"),
+      df.columns.mkString(","))
+    assert(df.select("b").head().getString(0) == "y")
+    spark.catalog.clearCache()
+  }
+
+  test("concurrent snapshot reads leave the session's listing threshold as they found it") {
+    val dir = freshDir("confrace")
+    VersionedStore.initialLoad(spark, dir, ownedRel(Seq("p", "q"), 16), nBuckets = 4)
+    val key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "57")
+    try {
+      val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+      val start = new java.util.concurrent.CyclicBarrier(2)
+      val readers = (1 to 2).map(_ => new Thread(() =>
+        try {
+          start.await()
+          (1 to 100).foreach(_ => VersionedStore.readSnapshot(spark, dir))
+        } catch { case t: Throwable => errors.add(t): Unit }))
+      readers.foreach(_.start()); readers.foreach(_.join(300000))
+      assert(errors.isEmpty, errors.toArray.mkString(","))
+      assert(spark.conf.get(key) == "57")
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("owners with path-reserved characters round-trip: a:b and c d") {
+    import spark.implicits._
+    val dir = freshDir("esc")
+    val owners = Seq("a:b", "c d")
+    VersionedStore.initialLoad(spark, dir, ownedRel(owners, 6), nBuckets = 2)
+    def owned(n: Int = -1) = VersionedStore.readSnapshot(spark, dir, n)
+      .select("doc_id", "owner", "text_md5").collect()
+      .map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
+    assert(owned() == (0 until 6).map(i => i.toLong -> (owners(i % 2), s"t$i")).toMap)
+    VersionedStore.upsertVersioned(spark, dir,
+      ownedRel(owners, 6).filter(col("doc_id") === 0).withColumn("text_md5", lit("new")))
+    VersionedStore.softDelete(spark, dir, Seq(1L).toDF("doc_id"))
+    val expect = (0 until 6).filter(_ != 1).map(i =>
+      i.toLong -> (owners(i % 2), if (i == 0) "new" else s"t$i")).toMap
+    assert(owned() == expect)
+    // vacuum matches the escaped dirs to the entries: it reclaims only
+    // the superseded version, and the head still reads whole
+    assert(VersionedStore.vacuum(spark, dir, retain = 1) == 1)
+    assert(owned() == expect)
+    spark.catalog.clearCache()
+  }
+
+  test("a snapshot over more than 32 dirs builds with no job and prunes an owner filter by partition") {
+    val dir = freshDir("wide")
+    val owners = (0 until 40).map(i => f"o$i%02d")
+    VersionedStore.initialLoad(spark, dir, ownedRel(owners, 80), nBuckets = 1)
+    var df: org.apache.spark.sql.DataFrame = null
+    val jobs = SparkSessionHelper.jobsOf("snapshot read build") {
+      df = VersionedStore.readSnapshot(spark, dir)
+    }
+    assert(jobs.isEmpty, s"building the read launched jobs: ${jobs.mkString("; ")}")
+    val one = df.filter(col("owner") === "o07")
+    val plan = one.queryExecution.executedPlan.toString
+    assert("PartitionFilters: \\[[^\\]]*owner[^\\]]*o07".r.findFirstIn(plan).isDefined, plan)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select("doc_id", "owner", "text_md5").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+    assert(rows(one) == rows(df).filter(_._2 == "o07"))
+    assert(rows(one).map(_._1) == Set(7L, 47L))
+    spark.catalog.clearCache()
+  }
+
+
+  test("a manifest entry without a writer id is rejected, naming the snapshot") {
+    val dir = freshDir("nowid")
+    VersionedStore.initialLoad(spark, dir, ownedRel(Seq("p"), 4), nBuckets = 2)
+    val man = new java.io.File(s"$dir/manifest/snap-1.txt").toPath
+    val text = new String(java.nio.file.Files.readAllBytes(man), "UTF-8")
+    assert(text.contains("\twid:"), text)
+    java.nio.file.Files.write(man, text.replaceAll("\twid:[0-9a-f]+", "").getBytes("UTF-8"))
+    new java.io.File(s"$dir/manifest/.snap-1.txt.crc").delete()
+    val ex = intercept[IllegalStateException](VersionedStore.readSnapshot(spark, dir))
+    assert(ex.getMessage.contains("manifest 1") && ex.getMessage.contains("wid"), ex.getMessage)
   }
 }
