@@ -273,7 +273,7 @@ object BenchDoc {
       timed(s"lex_store_init_$tag") {
         operators.ByidStore.init(
           Serving.lexDocVectors(docs, "tenant", "doc_id", "text"),
-          "id", s"$dir/lex", nFiles = 32)
+          "id", s"$dir/lex")
       }
       var counters = Serving.lexCountersOf(docs, "tenant", "text")
       val churn = docs.orderBy("doc_id").limit(500).persist()
@@ -483,7 +483,7 @@ object BenchDoc {
         VersionedStore.initialLoad(spark, wdir, w, nBuckets = 4)
         VersionedStore.upsertVersioned(spark, wdir,
           w.filter(col("doc_id") === w.select(min(col("doc_id"))).head().getLong(0))
-            .withColumn("text_md5", lit("warm")), nBuckets = 4)
+            .withColumn("text_md5", lit("warm")))
         VersionedStore.softDelete(spark, wdir, w.limit(2).select("doc_id"))
         IndexPipeline.snapshotCdcFeedFast(spark, wdir, 1, 2)._1.count()
       }
@@ -499,7 +499,7 @@ object BenchDoc {
           VersionedStore.upsertVersioned(spark, dir,
             relDf.filter(col("doc_id") === victim)
               .withColumn("text_md5", lit("churned"))
-              .withColumn("chunk_text", lit("churned")), nBuckets = nB)
+              .withColumn("chunk_text", lit("churned")))
         }
         timed(s"epi_pointread_$label") {
           Seq(1, 2).foreach { snap =>

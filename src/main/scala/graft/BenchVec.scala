@@ -860,7 +860,7 @@ object BenchVec extends Serializable {
       docsCorpus.filter(pmod(col("doc_id"), lit(256)) === 7 && col("doc_id") < 4096)
         .withColumn("text", concat(col("text"), lit(" v2"))))
     timedMin2("s8_upsert_16docs_1bucket") {
-      pipelines.IndexPipeline.upsertDocsBucketed(spark, s8Path, reBatch, nBuckets = 256)
+      pipelines.IndexPipeline.upsertDocsBucketed(spark, s8Path, reBatch)
     }
     stats("s8_touched_buckets") = "1 of 256"
 
@@ -882,7 +882,7 @@ object BenchVec extends Serializable {
       val smallByidPath = s"$vecDir/vec768_5k_byid"
       buildIfStale(smallByidPath, "byid_5k_sorted_write") {
         graft.operators.Layout.pointFetchWrite(
-          corpus.filter(col("vec_id") < 9000), "vec_id", smallByidPath, nFiles = 4)
+          corpus.filter(col("vec_id") < 9000), "vec_id", smallByidPath)
       }
       val updIds = (0 until 500).map(k => 8L * k)       // chunk 0 of docs 0..499
       val delIds = (0 until 250).map(k => 8L * k + 1)   // chunk 1 — always exists
@@ -895,9 +895,12 @@ object BenchVec extends Serializable {
         val p = Files.createTempDirectory("graft_byid_maint_")
         Files.createSymbolicLink(p.resolve("seg_00000"),
           Paths.get(baseSeg).toAbsolutePath)
-        // the store only serves COMMITTED batches (r14 task 7) — the
-        // symlinked base needs its marker like any published segment
+        // the store only serves COMMITTED batches (r14 task 7) and reads
+        // with its schema sidecar — the symlinked base needs both, like
+        // any published segment
         Files.createFile(p.resolve("commit_00000"))
+        Files.write(p.resolve("_schema.json"), ByidStore.asNullable(
+          spark.read.parquet(baseSeg).schema).json.getBytes("UTF-8"))
         p.toString
       }
       val store5k = freshStore(smallByidPath)

@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 /** Loaders for the driver-provided parquet tables (TESTDATA.md).
   *
@@ -58,9 +61,19 @@ object Tables {
     * files/partitions and this adds no shuffle; the repartition only
     * fires in the small-file regime where the shuffled bytes are by
     * definition small. Round-robin repartition is deterministic under
-    * retries (sortBeforeRepartition, guide §2.5). */
+    * retries (sortBeforeRepartition, guide §2.5). A plan with an
+    * exchange passes through untouched: AQE plans it adaptively (here
+    * or under a cached relation), so its partition count is known only
+    * once its stages have run, and counting would run them while the
+    * DataFrame is being built. */
   def fanOut(df: DataFrame): DataFrame = {
+    def adaptive(plan: SparkPlan): Boolean = plan.exists {
+      case _: AdaptiveSparkPlanExec => true
+      case m: InMemoryTableScanExec => adaptive(m.relation.cachedPlan)
+      case _ => false
+    }
     val p = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions >= p) df else df.repartition(p)
+    if (adaptive(df.queryExecution.executedPlan) || df.rdd.getNumPartitions >= p) df
+    else df.repartition(p)
   }
 }

@@ -5,6 +5,9 @@ import java.io.File
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, MapType, StructField, StructType}
+
+import graft.pipelines.ManifestIndex
 
 /** CDC-maintained point-fetch store — O(churn) maintenance for the
   * id-keyed serving layout (round-13 verdict task 1).
@@ -38,19 +41,22 @@ import org.apache.spark.sql.expressions.Window
   *    invisible debris, reclaimed by the next [[compact]].
   *  - SIZING: every layout decision — the [[init]] base, each delta,
   *    each fold — takes `ceil(bytes / spark.graft.byid.deltaTargetBytes)`
-  *    files (1..256; an explicit file count pins it), measured from
-  *    parquet bytes on the driver: the staged raw frame for init and
-  *    deltas, the committed segments for a fold. A churn-scale store
-  *    is therefore one id-sorted file, written with no shuffle.
-  *  - RESOLUTION (reader-side merge-on-read): a fetch reads EVERY
-  *    committed segment with the same `Layout.idsPredicate` or-of-eq
-  *    (each scan page-prunes to the candidate ids — K segments cost K
-  *    bounded point reads, and K is capped by compaction), takes the
-  *    max-seg version per id, then drops ids whose newest tombstone
-  *    outranks that version. Tombstone scans take the SAME id
-  *    predicate (a tombstone only matters if its id is a candidate),
-  *    so delete-heavy histories never turn point reads into tombstone
-  *    table scans.
+  *    files (1..256), measured from parquet bytes on the driver: the
+  *    staged raw frame for init and deltas, the committed segments for
+  *    a fold. A churn-scale store is therefore one id-sorted file,
+  *    written with no shuffle.
+  *  - RESOLUTION (reader-side merge-on-read): a fetch reads every
+  *    committed segment as ONE parquet scan (a [[ManifestIndex]] over
+  *    the `seg_` dirs, each dir's batch number as the `seg` partition
+  *    value, the `_schema.json` sidecar as the data schema) with the
+  *    `Layout.idsPredicate` or-of-eq pushed into it (every file
+  *    page-prunes to the candidate ids, and the segment count is
+  *    capped by compaction), takes the max-seg version per id, then
+  *    drops ids whose newest tombstone outranks that version. The
+  *    tombstone scan (one more index, `tseg` partitions) takes the
+  *    SAME id predicate (a tombstone only matters if its id is a
+  *    candidate), so delete-heavy histories never turn point reads
+  *    into tombstone table scans.
   *  - COMPACTION: when the committed batch-dir count (segments AND
   *    tombstones — delete-only histories accumulate `tomb_` dirs with
   *    no segments) passes the threshold, [[compact]] folds everything
@@ -82,13 +88,13 @@ import org.apache.spark.sql.expressions.Window
   *
   * Scale posture: applyCdc touches churn rows only (delta write +
   * tombstone write); fetch cost is segments × point-read, independent
-  * of corpus size; compaction is scheduled, not forced. On a real
-  * cluster the directory listing below becomes a manifest entry the
-  * way VersionedStore tracks buckets, and the marker create becomes
-  * the same atomic publish primitive (HDFS create-no-overwrite, S3
-  * PUT If-None-Match — `VersionedStore` scaladoc) — the local listing
-  * keeps this module freestanding for the oracle gate
-  * (`x20_cdc_byid_maintain`) and the BenchVec churn-flatness legs.
+  * of corpus size; compaction is scheduled, not forced. Reads go
+  * through the index `VersionedStore` reads through ([[ManifestIndex]]):
+  * the store dir is listed once per call and its committed batch dirs
+  * become the index's partition directories, so nothing is discovered
+  * or inferred. The marker create is the store's atomic publish
+  * primitive (HDFS create-no-overwrite, S3 PUT If-None-Match —
+  * `VersionedStore` scaladoc).
   */
 object ByidStore {
 
@@ -97,38 +103,35 @@ object ByidStore {
   private def marker(path: String, n: Int): String = f"$path/commit_$n%05d"
   private def stageDir(path: String, n: Int): String = f"$path/_stage_$n%05d"
 
-  private def numbered(path: String, prefix: String,
-                       dirsOnly: Boolean = true): Seq[Int] = {
-    val fs = Option(new File(path).listFiles()).getOrElse(Array.empty[File])
-    fs.filter(f => (!dirsOnly || f.isDirectory) && f.getName.startsWith(prefix))
-      .map(_.getName.stripPrefix(prefix).toInt).sorted.toSeq
+  /** One listing of the store dir: every batch number each kind of
+    * artifact claims, ascending. The `commit_` markers are the
+    * visibility source of truth — a `seg_`/`tomb_` dir without its
+    * marker (crash mid-publish, half-written debris) is invisible, so
+    * `segs`/`tombs` are the COMMITTED ones. `maxBatch` counts every
+    * artifact, committed or not: orphaned dirs and stale stages must
+    * never be re-numbered over (a rename onto crash debris would
+    * resurrect it). */
+  private final case class Listing(allSegs: Seq[Int], allTombs: Seq[Int],
+                                   committed: Set[Int], stages: Seq[Int]) {
+    def segs: Seq[Int] = allSegs.filter(committed)
+    def tombs: Seq[Int] = allTombs.filter(committed)
+    def maxBatch: Int = (allSegs ++ allTombs ++ committed ++ stages).foldLeft(-1)(math.max)
   }
 
-  /** Committed batch numbers — the visibility source of truth. */
-  private def committed(path: String): Set[Int] =
-    numbered(path, "commit_", dirsOnly = false).toSet
-
-  /** COMMITTED segment numbers present (base + deltas), ascending.
-    * A `seg_` dir without its `commit_` marker (crash mid-publish,
-    * half-written debris) is invisible. */
-  def segments(path: String): Seq[Int] = {
-    val ok = committed(path)
-    numbered(path, "seg_").filter(ok)
+  private def listing(path: String): Listing = {
+    val fs = Option(new File(path).listFiles()).getOrElse(Array.empty[File]).toSeq
+    def numbered(prefix: String, dirsOnly: Boolean = true): Seq[Int] =
+      fs.filter(f => (!dirsOnly || f.isDirectory) && f.getName.startsWith(prefix))
+        .map(_.getName.stripPrefix(prefix).toInt).sorted
+    Listing(numbered("seg_"), numbered("tomb_"),
+      numbered("commit_", dirsOnly = false).toSet, numbered("_stage_"))
   }
+
+  /** COMMITTED segment numbers present (base + deltas), ascending. */
+  def segments(path: String): Seq[Int] = listing(path).segs
 
   /** COMMITTED tombstone batch numbers present, ascending. */
-  def tombstones(path: String): Seq[Int] = {
-    val ok = committed(path)
-    numbered(path, "tomb_").filter(ok)
-  }
-
-  /** Highest batch number any artifact claims — committed or not
-    * (orphaned dirs and stale stages must never be re-numbered over:
-    * a rename onto crash debris would resurrect it). */
-  private def maxBatch(path: String): Int =
-    (numbered(path, "seg_") ++ numbered(path, "tomb_") ++
-      numbered(path, "commit_", dirsOnly = false) ++
-      numbered(path, "_stage_")).foldLeft(-1)(math.max)
+  def tombstones(path: String): Seq[Int] = listing(path).tombs
 
   private def rename(from: String, to: String): Unit = {
     val ok = new File(from).renameTo(new File(to))
@@ -148,21 +151,16 @@ object ByidStore {
     * [[applyCdc]]'s additions half): its plan — e.g. lexDocVectors
     * over the corpus — runs once, at natural parallelism, with no
     * persist; the file count is sized from the staged bytes
-    * (`nFiles = 0`, the default; a positive `nFiles` pins it), and
-    * the layout pass re-reads the staged parquet. Persists the
-    * store's schema as a `_schema.json` sidecar so every later read
-    * (segments, resolved view, collision guard) passes an explicit
-    * schema — parquet schema inference launches one Spark job per
-    * `spark.read.parquet` call in Spark 4, and a maintain loop reads
-    * segments dozens of times per epoch (optimization r17, guide
-    * §1.2: a scheduler round-trip per metadata question is the
-    * episode loops' floor) — and the sidecar is the schema every CDC
-    * batch must match. */
-  def init(df: DataFrame, idCol: String, path: String, nFiles: Int = 0): Unit = {
-    require(maxBatch(path) < 0, s"byid store at $path already initialized")
+    * ([[sizedFiles]]), and the layout pass re-reads the staged
+    * parquet. Persists the store's schema as a `_schema.json` sidecar:
+    * the data schema of every later read, so none infers (inference
+    * is one Spark job per read in Spark 4 — optimization r17, guide
+    * §1.2), and the schema every CDC batch must match. */
+  def init(df: DataFrame, idCol: String, path: String): Unit = {
+    require(listing(path).maxBatch < 0, s"byid store at $path already initialized")
     val spark = df.sparkSession
     val stage = stageDir(path, 0)
-    val (_, n, raw) = stageRaw(spark, path, df, None, stage, nFiles)
+    val (_, n, raw) = stageRaw(spark, path, df, None, stage)
     Layout.pointFetchWrite(raw, idCol, s"$stage/seg", n)
     // sidecar BEFORE the commit marker: file-source reads force
     // nullability anyway, so store the asNullable form — identical to
@@ -180,22 +178,17 @@ object ByidStore {
     * nullability on file relations), so sidecar-driven reads are
     * byte-identical to inferred ones. (StructType.asNullable is
     * private[sql]; same recursion.) */
-  private[graft] def asNullable(dt: org.apache.spark.sql.types.DataType)
-      : org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case st: StructType => StructType(st.fields.map(f =>
-        f.copy(dataType = asNullable(f.dataType), nullable = true)))
-      case at: ArrayType =>
-        ArrayType(asNullable(at.elementType), containsNull = true)
-      case mt: MapType => MapType(asNullable(mt.keyType),
-        asNullable(mt.valueType), valueContainsNull = true)
-      case other => other
-    }
+  private[graft] def asNullable(dt: DataType): DataType = dt match {
+    case st: StructType => StructType(st.fields.map(f =>
+      f.copy(dataType = asNullable(f.dataType), nullable = true)))
+    case at: ArrayType =>
+      ArrayType(asNullable(at.elementType), containsNull = true)
+    case mt: MapType => MapType(asNullable(mt.keyType),
+      asNullable(mt.valueType), valueContainsNull = true)
+    case other => other
   }
 
-  private def writeSchema(path: String,
-                          schema: org.apache.spark.sql.types.StructType): Unit = {
+  private def writeSchema(path: String, schema: StructType): Unit = {
     new File(path).mkdirs()
     java.nio.file.Files.write(
       java.nio.file.Paths.get(schemaFile(path)),
@@ -203,36 +196,27 @@ object ByidStore {
     : Unit
   }
 
-  /** The store's payload schema (written at [[init]]). Every segment
-    * read passes it explicitly — zero schema-inference jobs. Falls
-    * back to None for pre-sidecar stores (reads infer as before). */
-  private def readSchema(path: String): Option[org.apache.spark.sql.types.StructType] = {
+  /** The store's payload schema (written at [[init]]) — the data
+    * schema of every segment read, so no read infers. A store without
+    * it cannot be read. */
+  private def readSchema(path: String): StructType = {
     val f = new File(schemaFile(path))
-    if (!f.exists()) None
-    else org.apache.spark.sql.types.DataType.fromJson(
-      new String(java.nio.file.Files.readAllBytes(f.toPath),
-        java.nio.charset.StandardCharsets.UTF_8)) match {
-      case st: org.apache.spark.sql.types.StructType => Some(st)
-      case _ => None
-    }
+    require(f.exists(), s"byid store at $path has no ${schemaFile(path)} " +
+      "(every init writes it) — rebuild the store")
+    DataType.fromJson(new String(java.nio.file.Files.readAllBytes(f.toPath),
+      java.nio.charset.StandardCharsets.UTF_8)).asInstanceOf[StructType]
   }
 
-  /** Segment read with the sidecar schema when present (columns are
-    * matched by name, so per-batch column order differences are
-    * irrelevant) — no inference job. */
-  private def readSeg(spark: SparkSession, path: String, n: Int): DataFrame =
-    readSchema(path) match {
-      case Some(st) => spark.read.schema(st).parquet(segDir(path, n))
-      case None => spark.read.parquet(segDir(path, n))
-    }
-
-  /** Tombstone schema is static — one long id column. */
-  private def readTomb(spark: SparkSession, path: String, n: Int,
-                       idCol: String): DataFrame =
-    spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(idCol,
-          org.apache.spark.sql.types.LongType))))
-      .parquet(tombDir(path, n))
+  /** The batch dirs `dir(n)` for `ns` as ONE parquet scan: a
+    * [[ManifestIndex]] over them, each dir's batch number as the
+    * `part` partition value (`seg` for segments, `tseg` for
+    * tombstones), `data` as the data schema — the sidecar for
+    * segments (columns match by name, so per-batch column order is
+    * irrelevant), one long id column for tombstones. */
+  private def batchScan(spark: SparkSession, dir: Int => String, ns: Seq[Int],
+                        part: String, data: StructType): DataFrame =
+    ManifestIndex.relation(spark, ns.map(n => (dir(n), Seq(n))),
+      StructType(Seq(StructField(part, IntegerType))), data)
 
   /** Parquet files of a staged dir via the Hadoop FileSystem API
     * (ADVICE r16: the java.io.File form hard-wired the local FS while
@@ -265,18 +249,16 @@ object ByidStore {
 
   /** The store's one sizing rule: `ceil(bytes / target)` files,
     * clamped to 1..256, with `spark.graft.byid.deltaTargetBytes`
-    * (default 128 MB) as the target; a positive `pinned` wins. Every
-    * layout decision — [[init]], [[applyCdc]]'s delta, the
-    * [[checkpoint]]/[[compact]] fold — sizes through it, so a
-    * churn-scale store is one id-sorted file (`Layout.pointFetchWrite`'s
-    * shuffle-free branch) and a backfill-scale one fans out. */
-  private def sizedFiles(spark: SparkSession, bytes: Long, pinned: Int): Int =
-    if (pinned > 0) pinned
-    else {
-      val target = spark.conf.getOption("spark.graft.byid.deltaTargetBytes")
-        .map(_.toLong).getOrElse(128L * 1024 * 1024)
-      math.max(1L, math.min(256L, (bytes + target - 1) / target)).toInt
-    }
+    * (default 128 MB) as the target. Every layout decision — [[init]],
+    * [[applyCdc]]'s delta, the [[checkpoint]]/[[compact]] fold — sizes
+    * through it, so a churn-scale store is one id-sorted file
+    * (`Layout.pointFetchWrite`'s shuffle-free branch) and a
+    * backfill-scale one fans out. */
+  private def sizedFiles(spark: SparkSession, bytes: Long): Int = {
+    val target = spark.conf.getOption("spark.graft.byid.deltaTargetBytes")
+      .map(_.toLong).getOrElse(128L * 1024 * 1024)
+    math.max(1L, math.min(256L, (bytes + target - 1) / target)).toInt
+  }
 
   /** Stage `df` RAW under `stage/raw` (one evaluation of its plan, at
     * its natural partitioning — no sort, no shuffle), then read back
@@ -292,22 +274,20 @@ object ByidStore {
     * would otherwise drop an extra column and commit a missing one as
     * null, silently. */
   private def stageRaw(spark: SparkSession, path: String, df: DataFrame,
-                       expected: Option[org.apache.spark.sql.types.StructType],
-                       stage: String, pinned: Int): (Long, Int, DataFrame) = {
+                       expected: Option[StructType],
+                       stage: String): (Long, Int, DataFrame) = {
     expected.foreach(requireSchema(path, df.schema, _))
     deleteRecursively(new File(stage)) // single-writer: only crash debris
     df.write.mode("overwrite").parquet(s"$stage/raw")
     val (rows, bytes) = parquetRowsBytes(spark, s"$stage/raw")
     val raw = spark.read.schema(expected.getOrElse(
-        asNullable(df.schema).asInstanceOf[org.apache.spark.sql.types.StructType]))
+        asNullable(df.schema).asInstanceOf[StructType]))
       .parquet(s"$stage/raw")
-    (rows, sizedFiles(spark, bytes, pinned), raw)
+    (rows, sizedFiles(spark, bytes), raw)
   }
 
-  private def requireSchema(path: String,
-                            got: org.apache.spark.sql.types.StructType,
-                            want: org.apache.spark.sql.types.StructType): Unit = {
-    def byName(st: org.apache.spark.sql.types.StructType) =
+  private def requireSchema(path: String, got: StructType, want: StructType): Unit = {
+    def byName(st: StructType) =
       st.fields.map(f => f.name -> asNullable(f.dataType)).toMap
     val (g, w) = (byName(got), byName(want))
     if (g != w) {
@@ -347,13 +327,8 @@ object ByidStore {
     * `Layout.pointFetchWrite`'s one-file branch (coalesce(1)+sort —
     * zero shuffles, zero AQE stage jobs), and the uniqueness check is
     * a single coalesced aggregate job. Four jobs per batch end to end
-    * (was 7 with AQE stage materialization in r16).
-    *
-    * SCALE (r16 verdict task 6): `deltaFiles = 0` (the default) sizes
-    * the delta file count from the staged bytes ([[sizedFiles]]), so
-    * a backfill-scale batch parallelizes the sort+write across
-    * ceil(bytes/target) range-partitioned files instead of funneling
-    * through one task; an explicit `deltaFiles > 0` pins the count.
+    * (was 7 with AQE stage materialization in r16). A backfill-scale
+    * batch fans out to ceil(bytes/target) files ([[sizedFiles]]).
     *
     * SCHEMA: `additions` must carry exactly the store's columns and
     * types (the `_schema.json` sidecar written at [[init]]) — a
@@ -365,12 +340,11 @@ object ByidStore {
     * (readers serve the pre-batch view; the debris is vacuumed by the
     * next compaction), never a delta whose deletes were lost. */
   def applyCdc(spark: SparkSession, path: String, removals: DataFrame,
-               additions: DataFrame, idCol: String,
-               deltaFiles: Int = 0): Int = {
-    val batch = maxBatch(path) + 1
+               additions: DataFrame, idCol: String): Int = {
+    val batch = listing(path).maxBatch + 1
     val stage = stageDir(path, batch)
     val (nAdd, nFiles, raw) =
-      stageRaw(spark, path, additions, readSchema(path), stage, deltaFiles)
+      stageRaw(spark, path, additions, Some(readSchema(path)), stage)
     removals.select(col(idCol).cast("long").as(idCol))
       .coalesce(1).write.mode("overwrite").parquet(s"$stage/tomb")
     // staged parquet counts/sizes are FOOTER reads on the driver — the
@@ -411,11 +385,10 @@ object ByidStore {
     * BOTH kinds (ADVICE r14). */
   def applyCdcAutoCompact(spark: SparkSession, path: String, removals: DataFrame,
                           additions: DataFrame, idCol: String,
-                          maxSegments: Int = 8, deltaFiles: Int = 0,
-                          compactFiles: Int = 0): Int = {
-    val b = applyCdc(spark, path, removals, additions, idCol, deltaFiles)
-    if (segments(path).size + tombstones(path).size > maxSegments)
-      compact(spark, path, idCol, compactFiles)
+                          maxSegments: Int = 8): Int = {
+    val b = applyCdc(spark, path, removals, additions, idCol)
+    val l = listing(path)
+    if (l.segs.size + l.tombs.size > maxSegments) compact(spark, path, idCol)
     b
   }
 
@@ -433,45 +406,36 @@ object ByidStore {
     * from the SAME snapshot, never a torn mix.
     *
     * `onePartition` (the one-file fold) coalesces the segment and
-    * tombstone unions to one partition BEFORE the merge: a single
+    * tombstone scans to one partition BEFORE the merge: a single
     * partition satisfies the window's and the tombstone aggregate's
     * distribution, so the view plans with no exchange at all. */
-  private def resolved(spark: SparkSession, path: String, idCol: String,
-                       pred: Option[Column],
-                       range: Option[(Int, Int)] = None,
+  private def resolved(spark: SparkSession, path: String, l: Listing, idCol: String,
+                       pred: Option[Column], range: Option[(Int, Int)] = None,
                        onePartition: Boolean = false): DataFrame = {
+    def filtered(df: DataFrame): DataFrame = pred.fold(df)(df.filter)
     def gather(df: DataFrame): DataFrame =
       if (onePartition) df.coalesce(1) else df
     def inRange(n: Int): Boolean =
       range.forall { case (base, pin) => n >= base && n <= pin }
-    val segs = segments(path).filter(inRange)
+    val segs = l.segs.filter(inRange)
     require(segs.nonEmpty, s"byid store at $path has no committed segments" +
       range.fold("")(r => s" in pinned range $r"))
-    val tombsAll = tombstones(path).filter(inRange)
+    val tombs = l.tombs.filter(inRange)
+    val rows = filtered(batchScan(spark, segDir(path, _), segs, "seg", readSchema(path)))
     // compacted store (one segment, no tombstones in view): no merge
     // needed — skip the row_number window entirely, so the common
     // steady state reads like a plain table (the window would SHUFFLE
     // a full-view read and add a per-row sort to point fetches for
     // nothing). A freshly-refreshed snapshot pin always lands here.
-    if (segs.size == 1 && tombsAll.isEmpty) {
-      val df = readSeg(spark, path, segs.head)
-      return pred.fold(df)(p => df.filter(p)).withColumn("seg", lit(segs.head))
-    }
-    val rows = gather(segs.map { n =>
-      val df = readSeg(spark, path, n)
-      pred.fold(df)(p => df.filter(p)).withColumn("seg", lit(n))
-    }.reduce(_.unionByName(_)))
-    val latest = rows
+    if (segs.size == 1 && tombs.isEmpty) return rows
+    val latest = gather(rows)
       .withColumn("_rn", row_number().over(
         Window.partitionBy(col(idCol)).orderBy(col("seg").desc)))
       .filter(col("_rn") === 1).drop("_rn")
-    val tombs = tombsAll
     if (tombs.isEmpty) latest
     else {
-      val dead = gather(tombs.map { n =>
-        val df = readTomb(spark, path, n, idCol)
-        pred.fold(df)(p => df.filter(p)).withColumn("tseg", lit(n))
-      }.reduce(_.unionByName(_)))
+      val dead = gather(filtered(batchScan(spark, tombDir(path, _), tombs, "tseg",
+          StructType(Seq(StructField(idCol, LongType))))))
         .groupBy(col(idCol)).agg(max(col("tseg")).as("tseg"))
       // tombstone batch b kills versions with seg < b; the same
       // batch's postimage (seg = b) and later re-inserts survive
@@ -489,7 +453,7 @@ object ByidStore {
     * updated rows come from the delta, not a stale base). */
   def fetch(spark: SparkSession, path: String, ids: Seq[Long],
             idCol: String, range: Option[(Int, Int)] = None): DataFrame =
-    resolved(spark, path, idCol,
+    resolved(spark, path, listing(path), idCol,
       Some(Layout.idsPredicate(col(idCol).cast("long"), ids)), range)
 
   /** The full resolved logical view (every live row, merge-on-read) —
@@ -500,7 +464,7 @@ object ByidStore {
     * [[resolved]]). */
   def readAll(spark: SparkSession, path: String, idCol: String,
               range: Option[(Int, Int)] = None): DataFrame =
-    resolved(spark, path, idCol, None, range)
+    resolved(spark, path, listing(path), idCol, None, range)
 
   /** Fold the current committed view into a NEW full base segment at
     * batch max+1 WITHOUT retiring anything — the snapshot-refresh
@@ -513,25 +477,25 @@ object ByidStore {
     * uses [[compact]], which folds and retires in one call. Returns
     * the new base's batch number.
     *
-    * SIZING: `nFiles = 0` (the default) sizes the fold from the
-    * committed segments' parquet bytes, listed on the driver
-    * ([[sizedFiles]]); a positive `nFiles` pins it. A churn-scale
+    * SIZING: the fold is sized from the committed segments' parquet
+    * bytes, listed on the driver ([[sizedFiles]]). A churn-scale
     * store folds to ONE file: the merge view and the collision guard
     * run over one coalesced partition, so the fold is one
     * exchange-free pass — no range sampling, no range shuffle, no
     * persisted view — and the file gets the layout's 8-row id pages
-    * from its first row. A multi-file fold persists the view across the layout's two
-    * passes (range sampling + write) so the merge runs once. */
-  def checkpoint(spark: SparkSession, path: String, idCol: String,
-                 nFiles: Int = 0): Int = {
-    val segBytes = segments(path)
+    * from its first row. A multi-file fold persists the view across
+    * the layout's two passes (range sampling + write) so the merge
+    * runs once. */
+  def checkpoint(spark: SparkSession, path: String, idCol: String): Int = {
+    val l = listing(path)
+    val segBytes = l.segs
       .flatMap(n => parquetFiles(spark, segDir(path, n))).map(_.getLen).sum
-    val n = sizedFiles(spark, segBytes, nFiles)
-    tenantCollisionGuard(spark, path, idCol, onePartition = n == 1)
-    val newBase = maxBatch(path) + 1
+    val n = sizedFiles(spark, segBytes)
+    tenantCollisionGuard(spark, path, idCol, l.segs, onePartition = n == 1)
+    val newBase = l.maxBatch + 1
     val stage = stageDir(path, newBase)
     deleteRecursively(new File(stage))
-    val view = resolved(spark, path, idCol, None, onePartition = n == 1)
+    val view = resolved(spark, path, l, idCol, None, onePartition = n == 1)
       .drop("seg")
     if (n == 1) Layout.pointFetchWrite(view, idCol, s"$stage/seg", 1)
     else {
@@ -551,8 +515,8 @@ object ByidStore {
     * built from the resolved relation would LOSE a tenant's row with
     * no error. The resolved view itself cannot witness the collision
     * (it is one-row-per-id by construction), so this checks the
-    * PRE-MERGE union: any id carried by more than one distinct tenant
-    * across committed segments is a loud reject. Runs at every
+    * PRE-MERGE segment scan: any id carried by more than one distinct
+    * tenant across committed segments is a loud reject. Runs at every
     * [[checkpoint]]/[[compact]] (piggybacking the fold's O(corpus)
     * pass — auto-compacted CDC loops and every ServingState refresh
     * cross one), only when the payload actually has a `tenant`
@@ -561,18 +525,17 @@ object ByidStore {
     * tenant-disjoint ids for the store's whole history (the
     * reference's ChromaDB ids are global uuids,
     * vector_db_service.py:165-261). */
-  private def tenantCollisionGuard(spark: SparkSession, path: String,
-                                   idCol: String, onePartition: Boolean): Unit = {
-    val segs = segments(path)
+  private def tenantCollisionGuard(spark: SparkSession, path: String, idCol: String,
+                                   segs: Seq[Int], onePartition: Boolean): Unit = {
     if (segs.size < 2) return // one segment: applyCdc's per-batch
                               // uniqueness already proved id-disjoint
-    val head = readSeg(spark, path, segs.head)
-    if (!head.columns.contains("tenant")) return
-    val union = segs.map(n => readSeg(spark, path, n)
-        .select(col(idCol), col("tenant"))).reduce(_.unionByName(_))
+    val schema = readSchema(path)
+    if (!schema.fieldNames.contains("tenant")) return
+    val pairs = batchScan(spark, segDir(path, _), segs, "seg", schema)
+      .select(col(idCol), col("tenant"))
     // a one-file fold's store fits one task: aggregate the coalesced
-    // union with no exchange (one job)
-    val src = if (onePartition) union.coalesce(1) else union
+    // scan with no exchange (one job)
+    val src = if (onePartition) pairs.coalesce(1) else pairs
     val bad = src.groupBy(col(idCol))
       .agg(countDistinct(col("tenant")).as("_nt"))
       .filter(col("_nt") > 1).count()
@@ -588,16 +551,16 @@ object ByidStore {
     * ascending batch order (the same no-resurrection ordering
     * [[compact]] uses), then dirs, then invisible debris vacuumed. */
   def retireBelow(path: String, base: Int): Unit = {
-    (segments(path) ++ tombstones(path)).distinct.sorted
+    val l = listing(path)
+    (l.segs ++ l.tombs).distinct.sorted
       .filter(_ < base).foreach { n =>
         new File(marker(path, n)).delete(): Unit
         deleteRecursively(new File(segDir(path, n)))
         deleteRecursively(new File(tombDir(path, n)))
       }
-    val ok = committed(path)
-    (numbered(path, "seg_").filterNot(ok).map(segDir(path, _)) ++
-      numbered(path, "tomb_").filterNot(ok).map(tombDir(path, _)) ++
-      numbered(path, "_stage_").map(stageDir(path, _)))
+    (l.allSegs.filterNot(l.committed).map(segDir(path, _)) ++
+      l.allTombs.filterNot(l.committed).map(tombDir(path, _)) ++
+      l.stages.map(stageDir(path, _)))
       .foreach(p => deleteRecursively(new File(p)))
   }
 
@@ -615,9 +578,8 @@ object ByidStore {
     *     marker-less dir is already invisible when its turn comes;
     *  3. stale stages and uncommitted debris from crashed batches are
     *     vacuumed last. */
-  def compact(spark: SparkSession, path: String, idCol: String,
-              nFiles: Int = 0): Unit =
-    retireBelow(path, checkpoint(spark, path, idCol, nFiles))
+  def compact(spark: SparkSession, path: String, idCol: String): Unit =
+    retireBelow(path, checkpoint(spark, path, idCol))
 
   private def deleteRecursively(f: File): Unit = {
     Option(f.listFiles()).foreach(_.foreach(deleteRecursively))

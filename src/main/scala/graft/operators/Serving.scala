@@ -766,7 +766,7 @@ object Serving {
       val docs = graft.Tables.fanOut(
         Tables.documents(s, d).withColumn("tenant", lit("all")))
       ByidStore.init(e.select(col("vec_id"), col("embedding"), col("tenant")),
-        "vec_id", s"$sdir/byid", nFiles = 4)
+        "vec_id", s"$sdir/byid")
       ServingState.saveSnapshot(s, sdir,
         postings = Some(buildPostings(docs, "tenant", "doc_id", "text")),
         lexStats = lexStatsOf(docs, "tenant", "text"),
@@ -831,7 +831,7 @@ object Serving {
       // would otherwise run inside the single-file scan's one partition
       val v1f = graft.Tables.fanOut(v1)
       ByidStore.init(lexDocVectors(v1f, "tenant", "doc_id", "text"), "id",
-        s"$sdir/lex", nFiles = 4)
+        s"$sdir/lex")
       var counters = lexCountersOf(v1f, "tenant", "text")
       val ups = v1.filter(col("doc_id") % 7 === 0)
         .withColumn("text",

@@ -88,8 +88,10 @@ object IndexPipeline {
     * bucket (~1/nBuckets of the tenant), not the whole tenant
     * partition (`vector_db_service.py:84-163` deletes and reinserts
     * per document; the tenant-partition sink above rewrites everything
-    * the tenant owns — the SURVEY §7.4 risk). */
-  def writeVectorsBucketed(vectors: DataFrame, path: String, nBuckets: Int = 16): Unit =
+    * the tenant owns — the SURVEY §7.4 risk). The bucket count is
+    * recorded in a `_buckets` file at the table root, so every later
+    * [[upsertDocsBucketed]] buckets with the table's own count. */
+  def writeVectorsBucketed(vectors: DataFrame, path: String, nBuckets: Int = 16): Unit = {
     vectors.withColumn("bucket", docBucket(col("doc_id"), nBuckets))
       // repartition on the partition columns: each (owner, bucket)
       // lands in exactly one shuffle partition, so a bucket dir gets
@@ -100,6 +102,22 @@ object IndexPipeline {
       // s8 stage)
       .repartition(col("owner"), col("bucket"))
       .write.mode("overwrite").partitionBy("owner", "bucket").parquet(path)
+    val out = bucketsFs(vectors.sparkSession, path).create(bucketsFile(path), true)
+    try out.write(nBuckets.toString.getBytes("UTF-8")) finally out.close()
+  }
+
+  private def bucketsFile(path: String) =
+    new org.apache.hadoop.fs.Path(s"${path.stripSuffix("/")}/_buckets")
+  private def bucketsFs(spark: SparkSession, path: String) =
+    bucketsFile(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** The bucket count [[writeVectorsBucketed]] recorded for `path`. */
+  private def tableBuckets(spark: SparkSession, path: String): Int = {
+    val fs = bucketsFs(spark, path)
+    require(fs.exists(bucketsFile(path)), s"bucketed table at $path has no _buckets file")
+    val in = fs.open(bucketsFile(path))
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt finally in.close()
+  }
 
   /** Per-document upsert over the bucketed layout — WRITE-AUDIT-PUBLISH
     * (round-5 VERDICT "What's missing" #4 closed): the round-5 version
@@ -131,9 +149,8 @@ object IndexPipeline {
     *     strongest contract renames can offer, and
     *     BucketedUpsertSpec's crash simulations pin it.
     */
-  def upsertDocsBucketed(spark: SparkSession, path: String, batch: DataFrame,
-                         nBuckets: Int = 16): Unit = {
-    val st = stageUpsert(spark, path, batch, nBuckets)
+  def upsertDocsBucketed(spark: SparkSession, path: String, batch: DataFrame): Unit = {
+    val st = stageUpsert(spark, path, batch)
     auditStaged(spark, path, st)
     publishStaged(spark, path, st)
   }
@@ -146,9 +163,9 @@ object IndexPipeline {
   /** Stage the full new content of every touched bucket OUTSIDE the
     * live table. Crash here → live untouched, stale staging replaced
     * on the next call. */
-  private[graft] def stageUpsert(spark: SparkSession, path: String, batch: DataFrame,
-                                 nBuckets: Int = 16): StagedUpsert = {
-    val nv = batch.withColumn("bucket", docBucket(col("doc_id"), nBuckets))
+  private[graft] def stageUpsert(spark: SparkSession, path: String,
+                                 batch: DataFrame): StagedUpsert = {
+    val nv = batch.withColumn("bucket", docBucket(col("doc_id"), tableBuckets(spark, path)))
     val touched = nv.select(col("owner"), col("bucket")).distinct()
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     require(touched.nonEmpty, "upsertDocsBucketed: empty batch")
@@ -240,32 +257,18 @@ object IndexPipeline {
     * `document_processing_service.py` scheduling around
     * `semantic_summary_service.py:257-431`); the driver query
     * `st_index_incremental` replays three batches through this exact
-    * function and hashes the final on-disk table. */
+    * function and hashes the final on-disk table. `nBuckets` sizes the
+    * initial load only; later batches bucket with the table's recorded
+    * count. */
   def indexMicroBatch(spark: SparkSession, docs: DataFrame, path: String,
                       backend: EmbedderBackend = EmbedderBackend.fromEnv(),
                       nBuckets: Int = 16): Unit = {
     if (docs.isEmpty) return // streaming triggers can deliver empty batches
-    // SPARK_GRAFT_PROGRESS=1 → per-phase wall times to stderr (the
-    // round-9 judge's attribution ask for st_index_incremental's three
-    // cycles; local only — the driver never sets it)
-    val trace = sys.env.contains("SPARK_GRAFT_PROGRESS")
-    def phase[T](name: String)(body: => T): T = {
-      val t0 = System.nanoTime()
-      val r = body
-      if (trace) System.err.println(
-        f"[microbatch] $name ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
     val vectors = buildIndex(docs, backend)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(path)))
-      phase("initial-load")(writeVectorsBucketed(vectors, path, nBuckets))
-    else {
-      val st = phase("stage")(stageUpsert(spark, path, vectors, nBuckets))
-      phase("audit")(auditStaged(spark, path, st))
-      phase("publish")(publishStaged(spark, path, st))
-    }
+    val root = new org.apache.hadoop.fs.Path(path)
+    if (!root.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(root))
+      writeVectorsBucketed(vectors, path, nBuckets)
+    else upsertDocsBucketed(spark, path, vectors)
   }
 
   /** Fixture root for `st_index_incremental`, keyed on the sanitized
@@ -421,7 +424,7 @@ object IndexPipeline {
       VersionedStore.initialLoad(s, dir, buildIndex(docs), nBuckets = 4)
       val batch = buildIndex(docs.filter(col("doc_id") === 7)
         .withColumn("text", translate(col("text"), "a", ".")))
-      VersionedStore.upsertVersioned(s, dir, batch, nBuckets = 4)
+      VersionedStore.upsertVersioned(s, dir, batch)
       VersionedStore.compact(s, dir, 16)
       Seq(1, 2, 3).map { n =>
         val nb = VersionedStore.readManifest(s, dir, n).entries
@@ -772,7 +775,7 @@ object IndexPipeline {
       VersionedStore.initialLoad(s, dir, rel(v1))
       val snap1 = VersionedStore.readSnapshot(s, dir, 1)
       ByidStore.init(snap1.select(col("doc_id").as("id"), col("emb")),
-        "id", bdir, nFiles = 8)
+        "id", bdir)
       val changed = v1.filter(pmod(col("vec_id"), lit(7L)) === 0)
         .select(col("vec_id"), reverse(col("emb")).as("emb"))
       val fresh = all.filter(pmod(col("vec_id"), lit(9L)) === 0)
@@ -878,7 +881,7 @@ object IndexPipeline {
       deleteRecursively(java.nio.file.Paths.get(sdir))
       graft.operators.ByidStore.init(
         snap1.select(col("id"), col("emb"), col("tenant")), "id",
-        s"$sdir/byid", nFiles = 4)
+        s"$sdir/byid")
       graft.operators.ByidStore.applyCdc(s, s"$sdir/byid", removals,
         addRows.select(col("id"), col("emb"), col("tenant")), "id")
       graft.operators.ServingState.saveSnapshot(s, sdir, Some(cents),
@@ -920,8 +923,7 @@ object IndexPipeline {
           col("embedding").cast("array<double>").as("emb"))
         .withColumn("tenant", lit("all"))
       val v1 = all.filter(pmod(col("id"), lit(9L)) =!= 0)
-      ByidStore.init(v1.select("id", "emb", "tenant"), "id", s"$sdir/byid",
-        nFiles = 4)
+      ByidStore.init(v1.select("id", "emb", "tenant"), "id", s"$sdir/byid")
       ServingState.saveSnapshot(s, sdir, corpusSize = v1.count())
       val stOld = ServingState.load(s, sdir, idCol = "id", embCol = "emb")
       val qids = Seq(0L, 1L, 2L)
@@ -1017,7 +1019,7 @@ object IndexPipeline {
         nBuckets = 8)
       VersionedStore.buildBloomIndex(s, dir, "text_md5")
       VersionedStore.upsertVersioned(s, dir,
-        rel(docs.filter(col("doc_id") >= 150 && col("doc_id") < 160)), nBuckets = 8)
+        rel(docs.filter(col("doc_id") >= 150 && col("doc_id") < 160)))
       val probe = docs.filter(col("doc_id") === 42)
         .select(md5(col("text"))).head().getString(0)
       val (rows, nScanned, nTotal) = VersionedStore.lookupEq(s, dir, probe)

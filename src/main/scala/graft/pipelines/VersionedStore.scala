@@ -2,13 +2,8 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{escapePathName, unescapePathName}
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.hadoop.fs.Path
 
 /** Snapshot-versioned bucketed vector store — the manifest layer the
@@ -102,7 +97,7 @@ object VersionedStore {
     * columns) in all-nullable form — what inference would return, so
     * reads never infer. */
   private[graft] final case class Manifest(entries: Seq[ManifestEntry],
-                                           layout: Option[Layout],
+                                           layout: Layout,
                                            bloom: Option[BloomConfig],
                                            schema: StructType)
 
@@ -250,7 +245,7 @@ object VersionedStore {
     * `owner\tbucket\tv` followed by prefixed fields in any order:
     * `wid:` (required), `dv:k` + `dvw:`, `stats:min,max`,
     * `stats2:min,max`, `bloom:<hex>`. `#layout`, `#bloom` and
-    * `#schema` lines are the headers; the schema header is required. */
+    * `#schema` lines are the headers; layout and schema are required. */
   private[graft] def readManifest(spark: SparkSession, path: String,
                                   n: Int): Manifest = {
     val in = fsOf(spark, path).open(new Path(manifestFile(path, n)))
@@ -274,7 +269,8 @@ object VersionedStore {
         kv.get("bloom"), kv.get("stats2").map(pair))
     }
     def header(tag: String) = headers.find(_.startsWith(tag + "\t")).map(_.split('\t'))
-    val layout = header("#layout").map {
+    def missing(tag: String) = new IllegalStateException(s"manifest $n at $path: no $tag header")
+    val layout = header("#layout").getOrElse(throw missing("#layout")) match {
       case Array(_, "hash", nb) => HashLayout(nb.toInt)
       case Array(_, "range", c, mn, mx, nb) =>
         RangeLayout(c, mn.toDouble, mx.toDouble, nb.toInt)
@@ -288,7 +284,7 @@ object VersionedStore {
       case h => throw bad("unparseable bloom header", h.mkString("\t"))
     }
     val schema = header("#schema").map(h => DataType.fromJson(h(1)).asInstanceOf[StructType])
-      .getOrElse(throw new IllegalStateException(s"manifest $n at $path: no #schema header"))
+      .getOrElse(throw missing("#schema"))
     Manifest(entries, layout, bloom, schema)
   }
 
@@ -304,12 +300,12 @@ object VersionedStore {
       s".${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     val fin = new Path(manifestFile(path, n))
     if (!fs.exists(tmp.getParent)) fs.mkdirs(tmp.getParent)
-    val header = m.layout.map {
+    val header = (m.layout match {
       case HashLayout(nb) => s"#layout\thash\t$nb\n"
       case RangeLayout(c, mn, mx, nb) => s"#layout\trange\t$c\t$mn\t$mx\t$nb\n"
       case ZLayout(cx, cy, mnx, mxx, mny, mxy, bits, nb) =>
         s"#layout\tzorder\t$cx\t$cy\t$mnx\t$mxx\t$mny\t$mxy\t$bits\t$nb\n"
-    }.getOrElse("") +
+    }) +
       m.bloom.map(b => s"#bloom\t${b.col}\t${b.mBits}\t${b.k}\n").getOrElse("") +
       s"#schema\t${m.schema.json}\n"
     val out = fs.create(tmp, true)
@@ -455,9 +451,9 @@ object VersionedStore {
     }
 
   /** The cluster columns a layout maintains zone maps for. */
-  private def clusterCols(layout: Option[Layout]): Seq[String] = layout match {
-    case Some(RangeLayout(c, _, _, _)) => Seq(c)
-    case Some(ZLayout(cx, cy, _, _, _, _, _, _)) => Seq(cx, cy)
+  private def clusterCols(layout: Layout): Seq[String] = layout match {
+    case RangeLayout(c, _, _, _) => Seq(c)
+    case ZLayout(cx, cy, _, _, _, _, _, _) => Seq(cx, cy)
     case _ => Nil
   }
 
@@ -524,7 +520,7 @@ object VersionedStore {
     // plan runs once (the write), no second distinct-collect pass
     // (optimization r16, guide §1.2)
     val entries = writeStaged(staged, path, 1, newWid())
-    commitManifest(spark, path, 1, Manifest(entries, Some(layout), None, dataSchema(staged)))
+    commitManifest(spark, path, 1, Manifest(entries, layout, None, dataSchema(staged)))
   }
 
   /** A staged next snapshot: its manifest (new entries carry this
@@ -537,12 +533,12 @@ object VersionedStore {
     * bucket written to NEW v=next dirs (append-only — live version
     * dirs and the current manifest are untouched, so a crash anywhere
     * in here leaves orphan dirs no reader can see). */
-  private[graft] def stageVersion(spark: SparkSession, path: String, batch: DataFrame,
-                                  nBuckets: Int = 16): StagedVersion = {
+  private[graft] def stageVersion(spark: SparkSession, path: String,
+                                  batch: DataFrame): StagedVersion = {
     val (cur, m) = manifestAt(spark, path, -1, "upsertVersioned")
     val next = cur + 1
     val man = m.entries
-    val layout = m.layout.getOrElse(HashLayout(nBuckets))
+    val layout = m.layout
     // the batch plan feeds several consumers (touched-bucket probe,
     // relocation id probes, the staged write's new-rows side) — cache
     // it for the episode so a join-derived CDC batch is computed once,
@@ -553,7 +549,7 @@ object VersionedStore {
     // null probe rides the SAME job as the touched-bucket collect (a
     // per-bucket max-isNull aggregate), instead of paying one isEmpty
     // action per cluster column before any other work.
-    val ccols = clusterCols(Some(layout))
+    val ccols = clusterCols(layout)
     val probeAggs =
       if (ccols.nonEmpty) ccols.zipWithIndex.map { case (c, j) =>
         max(col(c).isNull.cast("int")).as(s"_null$j") }
@@ -653,7 +649,7 @@ object VersionedStore {
     nv.unpersist()
     StagedVersion(next, expected, m.copy(entries =
       man.filterNot(e => touchedSet((e.owner, e.bucket))) ++ live,
-      layout = Some(layout), schema = dataSchema(staged)), wid, probe.size)
+      layout = layout, schema = dataSchema(staged)), wid, probe.size)
   }
 
   /** Audit the staged version dirs (row count + bucket set), then
@@ -725,11 +721,10 @@ object VersionedStore {
     * the old snapshot live (orphan v-dirs are overwritten by the
     * retry's append of identical content under the same v — then
     * superseded when the retry commits). */
-  def upsertVersioned(spark: SparkSession, path: String, batch: DataFrame,
-                      nBuckets: Int = 16): Unit = {
+  def upsertVersioned(spark: SparkSession, path: String, batch: DataFrame): Unit = {
     // orphan v=next cleanup happens inside stageVersion, where the
     // full touched set (incl. relocated-copy buckets) is known
-    val st = stageVersion(spark, path, batch, nBuckets)
+    val st = stageVersion(spark, path, batch)
     auditAndCommit(spark, path, st)
   }
 
@@ -781,7 +776,7 @@ object VersionedStore {
     val entries = writeStaged(staged, path, cur + 1, wid)
     staged.unpersist()
     auditAndCommit(spark, path, StagedVersion(cur + 1, expected,
-      m.copy(entries = entries, layout = Some(layout)), wid))
+      m.copy(entries = entries, layout = layout), wid))
   }
 
   /** CLUSTERING compaction — the OPTIMIZE-ZORDER move: rewrite the
@@ -839,8 +834,7 @@ object VersionedStore {
     * like upsert: pre-commit crashes leave orphan v-dirs no reader
     * sees; a retry clears them and converges. Returns the number of
     * vector rows removed. */
-  def deleteVersioned(spark: SparkSession, path: String, docIds: DataFrame,
-                      nBuckets: Int = 16): Long = {
+  def deleteVersioned(spark: SparkSession, path: String, docIds: DataFrame): Long = {
     val (cur, m) = manifestAt(spark, path, -1, "deleteVersioned")
     val next = cur + 1
     val ids = docIds.select(col("doc_id")).distinct()
@@ -901,7 +895,7 @@ object VersionedStore {
     // themselves; other layouts use the doc_id bloom index when one
     // exists (same pruning stageVersion's relocation probe uses) and
     // scan conservatively otherwise.
-    val candidates = m.layout.getOrElse(HashLayout(16)) match {
+    val candidates = m.layout match {
       case HashLayout(nb) =>
         val bset = ids.select(pmod(col("doc_id"), lit(nb.toLong)).as("b"))
           .distinct().collect().map(_.getLong(0)).toSet
@@ -1001,7 +995,7 @@ object VersionedStore {
                 snapshot: Int = -1): (DataFrame, Int, Int) = {
     val (snap, m) = manifestAt(spark, path, snapshot, "rangeScan")
     val statsCol = m.layout match {
-      case Some(RangeLayout(c, _, _, _)) => c
+      case RangeLayout(c, _, _, _) => c
       case other => throw new IllegalStateException(
         s"rangeScan: snapshot $snap has no range layout (found $other) — " +
           "run compactClustered first")
@@ -1051,7 +1045,7 @@ object VersionedStore {
               loY: Double, hiY: Double, snapshot: Int = -1): (DataFrame, Int, Int) = {
     val (snap, m) = manifestAt(spark, path, snapshot, "boxScan")
     val (cx, cy) = m.layout match {
-      case Some(ZLayout(x, y, _, _, _, _, _, _)) => (x, y)
+      case ZLayout(x, y, _, _, _, _, _, _) => (x, y)
       case other => throw new IllegalStateException(
         s"boxScan: snapshot $snap has no z-order layout (found $other) — " +
           "run compactZOrdered first")
@@ -1113,8 +1107,8 @@ object VersionedStore {
     * for a column a file lacks. */
   private[graft] def scanEntries(spark: SparkSession, path: String,
                                  m: Manifest): DataFrame = {
-    val data = manifestRelation(spark,
-      m.entries.map(e => (s"${dataDir(path)}/${entryKey(e)}", e)), m.schema)
+    val data = ManifestIndex.relation(spark, m.entries.map(e =>
+      (s"${dataDir(path)}/${entryKey(e)}", Seq(e.owner, e.bucket))), entryPartitions, m.schema)
     if (!m.entries.exists(_.dv.isDefined)) data
     else data.join(readDvEntries(spark, path, m),
       Seq("owner", "bucket", "doc_id"), "left_anti")
@@ -1124,60 +1118,14 @@ object VersionedStore {
     * reference. */
   private def readDvEntries(spark: SparkSession, path: String,
                             m: Manifest): DataFrame =
-    manifestRelation(spark, m.entries.filter(_.dv.isDefined)
-      .map(e => (s"${deletesDir(path)}/${dvKey(e)}", e)),
-      StructType(Seq(m.schema("doc_id"))))
+    ManifestIndex.relation(spark, m.entries.filter(_.dv.isDefined)
+      .map(e => (s"${deletesDir(path)}/${dvKey(e)}", Seq(e.owner, e.bucket))),
+      entryPartitions, StructType(Seq(m.schema("doc_id"))))
 
-  /** A DataFrame over exactly `dirs`: Spark's own parquet scan, with
-    * listing and partition values from the manifest instead of
-    * discovery, and the schema given instead of inferred — building
-    * it launches no job and touches no session conf. */
-  private def manifestRelation(spark: SparkSession, dirs: Seq[(String, ManifestEntry)],
-                               dataSchema: StructType): DataFrame = {
-    val index = new ManifestIndex(spark, dirs.map { case (d, e) =>
-      (new Path(d), InternalRow(UTF8String.fromString(e.owner), e.bucket)) })
-    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
-      dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
-  }
-
-  /** The manifest as Spark's file listing: one partition directory per
-    * manifest dir, its `owner`/`bucket` values from the entry. Each dir
-    * is listed once, on the driver, through the Hadoop FS API;
-    * partition filters are evaluated against the entries' values, so
-    * `owner === x` reads only that owner's files. Committed dirs are
-    * immutable, so two indexes over the same dirs are equal — cached
-    * plans match across reads, as with Spark's own path index. */
-  private final class ManifestIndex(spark: SparkSession,
-                                    dirs: Seq[(Path, InternalRow)]) extends FileIndex {
-    override val partitionSchema: StructType = StructType(Seq(
-      StructField("owner", StringType), StructField("bucket", LongType)))
-    override val rootPaths: Seq[Path] = dirs.map(_._1)
-    private lazy val listed: Seq[PartitionDirectory] = dirs.map { case (d, values) =>
-      PartitionDirectory(values, d.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .listStatus(d).filter(f => f.isFile && !f.getPath.getName.startsWith(".") &&
-          !f.getPath.getName.startsWith("_")))
-    }
-    override def listFiles(partitionFilters: Seq[Expression],
-                           dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-      partitionFilters.reduceOption(And) match {
-        case None => listed
-        case Some(f) =>
-          val keep = Predicate.createInterpreted(f.transform { case a: AttributeReference =>
-            val i = partitionSchema.fieldNames.indexWhere(_.equalsIgnoreCase(a.name))
-            BoundReference(i, partitionSchema(i).dataType, nullable = true)
-          })
-          listed.filter(p => keep.eval(p.values))
-      }
-    override def inputFiles: Array[String] =
-      listed.flatMap(_.files.map(_.getPath.toString)).toArray
-    override def refresh(): Unit = ()
-    override def sizeInBytes: Long = listed.flatMap(_.files.map(_.getLen)).sum
-    override def equals(o: Any): Boolean = o match {
-      case x: ManifestIndex => x.rootPaths.toSet == rootPaths.toSet
-      case _ => false
-    }
-    override def hashCode: Int = rootPaths.toSet.hashCode
-  }
+  /** The partition values of every manifest read: each entry's
+    * `owner`/`bucket`, through the shared [[ManifestIndex]]. */
+  private val entryPartitions = StructType(Seq(
+    StructField("owner", StringType), StructField("bucket", LongType)))
 
   /** Drop data dirs referenced by NO retained manifest (keep the last
     * `retain` snapshots). Returns deleted dir count.
@@ -1244,8 +1192,8 @@ object VersionedStore {
     val (cur, m) = manifestAt(spark, path, -1, "tableReport")
     val man = m.entries
     val layoutKind = m.layout match {
-      case Some(_: RangeLayout) => "range"
-      case Some(_: ZLayout) => "z"
+      case _: RangeLayout => "range"
+      case _: ZLayout => "z"
       case _ => "hash"
     }
     import spark.implicits._

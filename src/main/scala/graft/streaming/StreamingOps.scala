@@ -227,7 +227,8 @@ object StreamingOps {
     *
     * Scale: each micro-batch is one map-only index build plus a
     * partition-pruned merge bounded by the batch's touched buckets —
-    * corpus size never enters the per-batch cost. */
+    * corpus size never enters the per-batch cost. `nBuckets` sizes the
+    * table's initial load only ([[graft.pipelines.IndexPipeline.indexMicroBatch]]). */
   def streamIndexIncremental(docsStream: DataFrame, path: String,
                              checkpointDir: String, nBuckets: Int = 16)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -735,15 +736,15 @@ object StreamingOps {
         sampleCap = 256)
       val books = PQc.pqTrainSampled(v1, "tenant", "id", "emb", 4, 8, 256)
       ByidStore.init(v1.select("id", "emb", "tenant"), "id",
-        s"$sdir/byid", nFiles = 4)
+        s"$sdir/byid")
       initCorpusCount(s, sdir)
       val a1 = Search.ivfAssign(v1, "tenant", "id", "emb", cents)
-      ByidStore.init(a1, "id", s"$sdir/cells_store", nFiles = 4)
+      ByidStore.init(a1, "id", s"$sdir/cells_store")
       ByidStore.init(PQc.pqEncode(v1, "tenant", "id", "emb", books)
           .join(a1.select(col("tenant"), col("id"), col("cell")),
             Seq("tenant", "id"))
           .select("tenant", "id", "codes", "cell"),
-        "id", s"$sdir/codes_store", nFiles = 4)
+        "id", s"$sdir/codes_store")
       val ups = v1.filter(pmod(col("id"), lit(7L)) === 0)
         .select(lit("upsert").as("op"), col("id"),
           reverse(col("emb")).as("emb"), col("tenant"))
@@ -801,13 +802,13 @@ object StreamingOps {
       val eV1 = eAll.filter(pmod(col("id"), lit(9L)) =!= 0)
       val dV1 = dAll.filter(pmod(col("id"), lit(9L)) =!= 0)
       ByidStore.init(eV1.select("id", "emb", "tenant"), "id",
-        s"$sdir/byid", nFiles = 4)
+        s"$sdir/byid")
       initCorpusCount(s, sdir)
       // fanOut: both bootstrap passes tokenize the whole corpus and
       // would otherwise run inside the single-file scan's one partition
       val dV1f = Tables.fanOut(dV1)
       ByidStore.init(Serving.lexDocVectors(dV1f, "tenant", "id", "text"),
-        "id", s"$sdir/lex", nFiles = 4)
+        "id", s"$sdir/lex")
       writeLexCounters(sdir, Serving.lexCountersOf(dV1f, "tenant", "text"))
       val noText = lit(null).cast("string").as("text")
       val noEmb = lit(null).cast("array<double>").as("emb")

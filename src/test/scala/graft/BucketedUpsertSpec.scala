@@ -247,4 +247,18 @@ class BucketedUpsertSpec extends AnyFunSuite {
     import scala.jdk.CollectionConverters._
     Files.walk(root).iterator().asScala.toSeq.reverse.foreach(Files.deleteIfExists(_))
   }
+
+  test("an upsert buckets with the count the table was written with") {
+    val path = Files.createTempDirectory("graft-bucketed-").toString
+    val docs = Tables.documents(spark, d).filter(col("doc_id") < 40)
+    IndexPipeline.writeVectorsBucketed(IndexPipeline.buildIndex(docs), path, nBuckets = 4)
+    val doc7 = IndexPipeline.buildIndex(docs.filter(col("doc_id") === 7)
+      .withColumn("text", translate(col("text"), "a", ".")))
+    IndexPipeline.upsertDocsBucketed(spark, path, doc7)
+    // doc 7 lives in bucket 7 mod 4 only: its old rows were replaced
+    // there, not left beside a copy in bucket 7 mod 16
+    val rows7 = spark.read.parquet(path).filter(col("doc_id") === 7)
+    assert(rows7.select("bucket").distinct().collect().map(_.getInt(0)).toSeq == Seq(3))
+    assert(rows7.count() == doc7.count())
+  }
 }

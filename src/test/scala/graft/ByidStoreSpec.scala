@@ -76,8 +76,10 @@ class ByidStoreSpec extends AnyFunSuite {
 
   test("init + fetch serves the base segment") {
     val path = freshDir()
-    ByidStore.init(corpus(0L until 20L, "a"), "id", path, nFiles = 2)
+    // a target below the corpus size: the base fans out to several files
+    withDeltaTarget(256)(ByidStore.init(corpus(0L until 20L, "a"), "id", path))
     assert(ByidStore.segments(path) == Seq(0))
+    assert(parquetFiles(s"$path/seg_00000").length > 1)
     val got = ByidStore.fetch(spark, path, Seq(3L, 7L, 19L), "id")
       .orderBy("id").collect()
     assert(got.map(_.getAs[Long]("id")).toSeq == Seq(3L, 7L, 19L))
@@ -88,7 +90,7 @@ class ByidStoreSpec extends AnyFunSuite {
   test("applyCdc: updates served from the delta, deletes tombstoned, others from base") {
     import spark.implicits._
     val path = freshDir()
-    ByidStore.init(corpus(0L until 20L, "a"), "id", path, nFiles = 2)
+    ByidStore.init(corpus(0L until 20L, "a"), "id", path)
     // batch: update ids 3,7 (preimage removal + postimage addition),
     // delete id 5, insert id 100
     val removals = Seq(3L, 7L, 5L).toDF("id")
@@ -105,7 +107,7 @@ class ByidStoreSpec extends AnyFunSuite {
   test("applyCdc launches at most 4 Spark jobs per churn batch (optimization r16/r17)") {
     import spark.implicits._
     val path = freshDir()
-    ByidStore.init(corpus(0L until 20L, "a"), "id", path, nFiles = 2)
+    ByidStore.init(corpus(0L until 20L, "a"), "id", path)
     val got = jobsOf("applyCdc job-shape guard") {
       ByidStore.applyCdc(spark, path, Seq(3L, 5L).toDF("id"),
         corpus(Seq(3L, 200L), "b"), "id")
@@ -123,7 +125,7 @@ class ByidStoreSpec extends AnyFunSuite {
   test("applyCdc sizes the delta layout from staged bytes (r16 verdict task 6)") {
     import spark.implicits._
     val path = freshDir()
-    ByidStore.init(corpus(0L until 4L, "a"), "id", path, nFiles = 1)
+    ByidStore.init(corpus(0L until 4L, "a"), "id", path)
     withDeltaTarget(4096) {
       // a "backfill-scale" batch relative to the 4 KB target: fat
       // payloads force staged bytes past several multiples of it
@@ -151,7 +153,7 @@ class ByidStoreSpec extends AnyFunSuite {
   test("re-insert after delete survives; empty batch writes nothing") {
     import spark.implicits._
     val path = freshDir()
-    ByidStore.init(corpus(0L until 10L, "a"), "id", path, nFiles = 1)
+    ByidStore.init(corpus(0L until 10L, "a"), "id", path)
     ByidStore.applyCdc(spark, path, Seq(4L).toDF("id"),
       corpus(Nil, "x"), "id") // delete 4
     assert(ByidStore.fetch(spark, path, Seq(4L), "id").count() == 0)
@@ -169,22 +171,26 @@ class ByidStoreSpec extends AnyFunSuite {
   test("compact folds to one base preserving the logical view; auto-compact honors threshold") {
     import spark.implicits._
     val path = freshDir()
-    ByidStore.init(corpus(0L until 30L, "a"), "id", path, nFiles = 2)
-    ByidStore.applyCdc(spark, path, Seq(1L, 2L).toDF("id"), corpus(Seq(1L), "b"), "id")
-    ByidStore.applyCdc(spark, path, Seq.empty[Long].toDF("id"), corpus(Seq(40L), "b"), "id")
-    val before = ByidStore.fetch(spark, path, (0L until 45L), "id")
-      .select("id", "payload", "v").orderBy("id").collect().toSeq
-    ByidStore.compact(spark, path, "id", nFiles = 2)
-    assert(ByidStore.segments(path).size == 1 && ByidStore.tombstones(path).isEmpty)
-    val after = ByidStore.fetch(spark, path, (0L until 45L), "id")
-      .select("id", "payload", "v").orderBy("id").collect().toSeq
-    assert(after == before)
-    // auto-compact: threshold 2 segments → third segment triggers fold
-    ByidStore.applyCdcAutoCompact(spark, path, Seq(3L).toDF("id"),
-      corpus(Seq(50L), "c"), "id", maxSegments = 2, compactFiles = 2)
-    assert(ByidStore.segments(path).size <= 2)
-    val r = ByidStore.fetch(spark, path, Seq(3L, 50L), "id").orderBy("id").collect()
-    assert(r.map(_.getAs[Long]("id")).toSeq == Seq(50L))
+    // a target below the corpus size: the base and the folds are multi-file
+    withDeltaTarget(256) {
+      ByidStore.init(corpus(0L until 30L, "a"), "id", path)
+      assert(parquetFiles(s"$path/seg_00000").length > 1)
+      ByidStore.applyCdc(spark, path, Seq(1L, 2L).toDF("id"), corpus(Seq(1L), "b"), "id")
+      ByidStore.applyCdc(spark, path, Seq.empty[Long].toDF("id"), corpus(Seq(40L), "b"), "id")
+      val before = ByidStore.fetch(spark, path, (0L until 45L), "id")
+        .select("id", "payload", "v").orderBy("id").collect().toSeq
+      ByidStore.compact(spark, path, "id")
+      assert(ByidStore.segments(path).size == 1 && ByidStore.tombstones(path).isEmpty)
+      val after = ByidStore.fetch(spark, path, (0L until 45L), "id")
+        .select("id", "payload", "v").orderBy("id").collect().toSeq
+      assert(after == before)
+      // auto-compact: threshold 2 segments → third segment triggers fold
+      ByidStore.applyCdcAutoCompact(spark, path, Seq(3L).toDF("id"),
+        corpus(Seq(50L), "c"), "id", maxSegments = 2)
+      assert(ByidStore.segments(path).size <= 2)
+      val r = ByidStore.fetch(spark, path, Seq(3L, 50L), "id").orderBy("id").collect()
+      assert(r.map(_.getAs[Long]("id")).toSeq == Seq(50L))
+    }
   }
 
   // ---- crash-injection (r14 verdict tasks 1 + 7): every partial
@@ -199,7 +205,7 @@ class ByidStoreSpec extends AnyFunSuite {
   test("marker-less segment and tombstone dirs are invisible (task 7)") {
     import spark.implicits._
     val path = freshDir()
-    ByidStore.init(corpus(0L until 10L, "a"), "id", path, nFiles = 1)
+    ByidStore.init(corpus(0L until 10L, "a"), "id", path)
     val pre = view(path, 0L until 10L)
     // crash debris: a fully-written segment + tombstone WITHOUT the
     // commit marker (applyCdc died between rename and marker create)
@@ -215,7 +221,7 @@ class ByidStoreSpec extends AnyFunSuite {
   test("crashed stage dirs are invisible and never re-numbered over") {
     import spark.implicits._
     val path = freshDir()
-    ByidStore.init(corpus(0L until 10L, "a"), "id", path, nFiles = 1)
+    ByidStore.init(corpus(0L until 10L, "a"), "id", path)
     // crash mid-staged-write: stage dir with a half-written file
     val stage = new java.io.File(s"$path/_stage_00001/seg")
     stage.mkdirs()
@@ -232,7 +238,7 @@ class ByidStoreSpec extends AnyFunSuite {
   test("compact is crash-safe at every prefix of old-batch retirement") {
     import spark.implicits._
     val path = freshDir()
-    ByidStore.init(corpus(0L until 20L, "a"), "id", path, nFiles = 2)
+    ByidStore.init(corpus(0L until 20L, "a"), "id", path)
     // batch 1: update 3, delete 5; batch 2: insert 100, delete 7
     ByidStore.applyCdc(spark, path, Seq(3L, 5L).toDF("id"), corpus(Seq(3L), "b"), "id")
     ByidStore.applyCdc(spark, path, Seq(7L).toDF("id"), corpus(Seq(100L), "b"), "id")
@@ -254,7 +260,7 @@ class ByidStoreSpec extends AnyFunSuite {
       }
     }
     copyTree(java.nio.file.Paths.get(path), java.nio.file.Paths.get(copy))
-    ByidStore.compact(spark, copy, "id", nFiles = 2)
+    ByidStore.compact(spark, copy, "id")
     val Seq(newBase) = ByidStore.segments(copy)
     assert(newBase == 3) // max existing batch + 1: outranks every old row
     copyTree(java.nio.file.Paths.get(f"$copy/seg_$newBase%05d"),
@@ -287,13 +293,13 @@ class ByidStoreSpec extends AnyFunSuite {
   test("auto-compact counts tombstone-only batches toward the threshold") {
     import spark.implicits._
     val path = freshDir()
-    ByidStore.init(corpus(0L until 10L, "a"), "id", path, nFiles = 1)
+    ByidStore.init(corpus(0L until 10L, "a"), "id", path)
     // three delete-only batches: no segments appended, but read
     // amplification grows one tombstone scan per batch — they must
     // trip the threshold (ADVICE r14)
     Seq(1L, 2L, 3L).foreach { i =>
       ByidStore.applyCdcAutoCompact(spark, path, Seq(i).toDF("id"),
-        corpus(Nil, "x"), "id", maxSegments = 3, compactFiles = 1)
+        corpus(Nil, "x"), "id", maxSegments = 3)
     }
     assert(ByidStore.segments(path).size + ByidStore.tombstones(path).size <= 3)
     assert(view(path, 0L until 10L).map(_._1) == Seq(0L) ++ (4L until 10L))
@@ -302,7 +308,7 @@ class ByidStoreSpec extends AnyFunSuite {
   test("applyCdc rejects duplicate ids within one batch (r15 task 7)") {
     import spark.implicits._
     val path = freshDir()
-    ByidStore.init(corpus(0L until 10L, "a"), "id", path, nFiles = 1)
+    ByidStore.init(corpus(0L until 10L, "a"), "id", path)
     // two postimages for id 3 in one batch would tie on seg in the
     // merge window — no deterministic winner, so the apply must throw
     // BEFORE the batch becomes visible
@@ -322,11 +328,11 @@ class ByidStoreSpec extends AnyFunSuite {
     def rows(ids: Seq[Long], tenant: String, tag: String) =
       ids.map(i => (i, tenant, s"$tag-$i")).toDF("id", "tenant", "payload")
     val path = freshDir()
-    ByidStore.init(rows(0L until 6L, "acme", "a"), "id", path, nFiles = 1)
+    ByidStore.init(rows(0L until 6L, "acme", "a"), "id", path)
     // a SAME-tenant update is legitimate churn — compact stays green
     ByidStore.applyCdc(spark, path, Seq(2L).toDF("id"),
       rows(Seq(2L), "acme", "b"), "id")
-    ByidStore.compact(spark, path, "id", nFiles = 1)
+    ByidStore.compact(spark, path, "id")
     assert(ByidStore.fetch(spark, path, Seq(2L), "id")
       .select("payload").as[String].head() == "b-2")
     // tenant "other" upserting acme's id 4 commits (the store cannot
@@ -335,7 +341,7 @@ class ByidStoreSpec extends AnyFunSuite {
     ByidStore.applyCdc(spark, path, Seq(4L).toDF("id"),
       rows(Seq(4L), "other", "x"), "id")
     val ex = intercept[IllegalArgumentException] {
-      ByidStore.checkpoint(spark, path, "id", nFiles = 1)
+      ByidStore.checkpoint(spark, path, "id")
     }
     assert(ex.getMessage.contains("tenant"))
   }
@@ -344,7 +350,7 @@ class ByidStoreSpec extends AnyFunSuite {
     val path = freshDir()
     // 99 rows: below parquet's default first page-size check (row
     // 100), which would leave the whole file ONE page
-    ByidStore.init(corpus(0L until 99L, "a"), "id", path, nFiles = 1)
+    ByidStore.init(corpus(0L until 99L, "a"), "id", path)
     val pages = idPageRows(s"$path/seg_00000")
     assert(pages.sum == 99)
     assert(pages.forall(_ <= 8), s"id pages of >8 rows: $pages")
@@ -353,7 +359,7 @@ class ByidStoreSpec extends AnyFunSuite {
   test("applyCdc rejects a batch whose schema drifted from the store's; nothing commits") {
     import spark.implicits._
     val path = freshDir()
-    ByidStore.init(corpus(0L until 10L, "a"), "id", path, nFiles = 1)
+    ByidStore.init(corpus(0L until 10L, "a"), "id", path)
     val pre = view(path, 0L until 10L)
     val upd = corpus(Seq(3L), "b")
     val drifted = Seq(
@@ -424,4 +430,81 @@ class ByidStoreSpec extends AnyFunSuite {
       assert(got == Seq((2L, "a"), (150L, "b"), (299L, "a"), (400L, "b")))
     }
   }
+
+  // ---- one scan per store view: the segments and the tombstones are
+  // each read through one manifest index ----------------------------
+
+  /** Three committed segments (0, 1, 2) and two tombstone batches
+    * (1, 3): batch 1 updates 2 and deletes 3, batch 2 inserts 10 and
+    * rewrites 5 with no preimage, batch 3 deletes 6 and 10. */
+  private def threeSegTwoTombs(): String = {
+    import spark.implicits._
+    val path = freshDir()
+    ByidStore.init(corpus(0L until 10L, "a"), "id", path)
+    ByidStore.applyCdc(spark, path, Seq(2L, 3L).toDF("id"), corpus(Seq(2L), "b"), "id")
+    ByidStore.applyCdc(spark, path, Seq.empty[Long].toDF("id"),
+      corpus(Seq(5L, 10L), "c"), "id")
+    ByidStore.applyCdc(spark, path, Seq(6L, 10L).toDF("id"), corpus(Nil, "x"), "id")
+    assert(ByidStore.segments(path) == Seq(0, 1, 2))
+    assert(ByidStore.tombstones(path) == Seq(1, 3))
+    path
+  }
+
+  /** The parquet scans of a plan (AQE stages included), each as the
+    * dir-name prefixes of its roots. */
+  private def scans(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    PlanScans.roots(df.queryExecution.executedPlan)
+
+  test("fetch and readAll plan one segment scan and at most one tombstone scan, with no job") {
+    val path = threeSegTwoTombs()
+    var views = Seq.empty[org.apache.spark.sql.DataFrame]
+    val jobs = jobsOf("byid view build") {
+      views = Seq(ByidStore.fetch(spark, path, 0L until 12L, "id"),
+        ByidStore.readAll(spark, path, "id"))
+      views.foreach(_.queryExecution.executedPlan)
+    }
+    assert(jobs.isEmpty, s"building the views launched jobs:\n  ${jobs.mkString("\n  ")}")
+    views.foreach { v =>
+      val all = scans(v)
+      val segScans = all.filter(_.forall(_.startsWith("seg_")))
+      val tombScans = all.filter(_.forall(_.startsWith("tomb_")))
+      assert(all.size == segScans.size + tombScans.size, s"unexpected scans: $all")
+      assert(segScans == Seq(Seq("seg_00000", "seg_00001", "seg_00002")), s"scans: $all")
+      assert(tombScans.size <= 1 && tombScans.flatten.toSet ==
+        Set("tomb_00001", "tomb_00003"), s"scans: $all")
+    }
+  }
+
+  test("every served row carries the seg of the batch that wrote it") {
+    val path = threeSegTwoTombs()
+    val want = Seq((0L, "a-0", 0), (1L, "a-1", 0), (2L, "b-2", 1), (4L, "a-4", 0),
+      (5L, "c-5", 2), (7L, "a-7", 0), (8L, "a-8", 0), (9L, "a-9", 0))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "payload", "seg").orderBy("id").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq
+    assert(rows(ByidStore.fetch(spark, path, 0L until 12L, "id")) == want)
+    assert(rows(ByidStore.readAll(spark, path, "id")) == want)
+    // a pinned view below batch 3 still serves 6 and 10
+    assert(rows(ByidStore.readAll(spark, path, "id", Some((0, 2)))) ==
+      (want :+ ((6L, "a-6", 0)) :+ ((10L, "c-10", 2))).sortBy(_._1))
+  }
+
+  test("a store whose _schema.json is gone fails on read, naming the file") {
+    val path = freshDir()
+    ByidStore.init(corpus(0L until 10L, "a"), "id", path)
+    assert(new java.io.File(s"$path/_schema.json").delete())
+    val ex = intercept[IllegalArgumentException] {
+      ByidStore.fetch(spark, path, Seq(1L), "id").collect()
+    }
+    assert(ex.getMessage.contains(s"$path/_schema.json"), ex.getMessage)
+  }
+}
+
+/** Parquet scans of a physical plan, AQE query stages included. */
+private object PlanScans
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+  def roots(plan: org.apache.spark.sql.execution.SparkPlan): Seq[Seq[String]] =
+    collect(plan) { case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+      s.relation.location.rootPaths.map(_.getName).sorted
+    }
 }

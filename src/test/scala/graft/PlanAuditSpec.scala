@@ -110,4 +110,22 @@ class PlanAuditSpec extends AnyFunSuite {
       s"hint-broadcast over a corpus file scan (justify in boundedBroadcast or drop " +
         s"the hint and let AQE decide): ${offenders.mkString(", ")}")
   }
+
+  test("fanOut runs no job on an exchange plan; a one-file scan still fans out") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fanout-").toString
+    spark.range(0, 400).selectExpr("id", "id % 7 as k").coalesce(1)
+      .write.mode("overwrite").parquet(dir)
+    val scan = spark.read.parquet(dir)
+    val p = spark.sparkContext.defaultParallelism
+    assert(scan.rdd.getNumPartitions < p, "fixture must be one narrow scan")
+    assert(Tables.fanOut(scan).rdd.getNumPartitions == p)
+    val agg = scan.groupBy("k").count()
+    var out = agg
+    val jobs = SparkSessionHelper.jobsOf("fanOut over an exchange") {
+      out = Tables.fanOut(agg)
+    }
+    assert(jobs.isEmpty, s"fanOut ran ${jobs.size} jobs:\n  ${jobs.mkString("\n  ")}")
+    assert(out.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq ==
+      (0L until 7L).map(k => (k, (0L until 400L).count(_ % 7 == k).toLong)))
+  }
 }

@@ -249,13 +249,6 @@ class ServingSpec extends AnyFunSuite {
     // the same state (brute vector arm so the vector side is one
     // batched scan in both)
     val lexed = st().copy(postings = Some(postings), lexStats = lexStats)
-    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(): Unit
-      }
-    }
     val termSets = Vector(Seq("join", "vector", "dup"),
       Seq("scan", "merge", "sort"), Seq("window", "group", "agg"),
       Seq("table", "row", "column"), Seq("stream", "batch", "filter"),
@@ -266,14 +259,10 @@ class ServingSpec extends AnyFunSuite {
       // start cold: an earlier serve's persisted postings slice would
       // otherwise make one count run partially cached and skew the pair
       spark.catalog.clearCache()
-      graft.BenchProbe.drainListenerBus(spark)
-      spark.sparkContext.addSparkListener(listener)
-      jobs.set(0)
-      searchBatchText(lexed, "all", batch, k = 10,
-        bruteForceCeiling = Long.MaxValue).count()
-      graft.BenchProbe.drainListenerBus(spark)
-      spark.sparkContext.removeSparkListener(listener)
-      jobs.get()
+      SparkSessionHelper.jobsOf(s"hybrid serve Q=$nq") {
+        searchBatchText(lexed, "all", batch, k = 10,
+          bruteForceCeiling = Long.MaxValue).count(): Unit
+      }.size.toLong
     }
     val j1 = countJobs(1)
     val j8 = countJobs(8)
@@ -286,7 +275,7 @@ class ServingSpec extends AnyFunSuite {
     val v1 = docs.filter(col("doc_id") % 9 =!= 0)
     graft.operators.ByidStore.init(
       Serving.lexDocVectors(v1, "tenant", "doc_id", "text"), "id",
-      s"$dir/lex", nFiles = 2)
+      s"$dir/lex")
     var counters = Serving.lexCountersOf(v1, "tenant", "text")
     val ups = v1.filter(col("doc_id") % 7 === 0)
       .withColumn("text", concat(lit("freshly updated revision: "), col("text")))

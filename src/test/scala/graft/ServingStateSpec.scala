@@ -37,8 +37,7 @@ class ServingStateSpec extends AnyFunSuite {
 
   private def buildDir(): String = {
     val dir = Files.createTempDirectory("graft-svstate-").toString
-    ByidStore.init(e.select("id", "embedding", "tenant"), "id", s"$dir/byid",
-      nFiles = 4)
+    ByidStore.init(e.select("id", "embedding", "tenant"), "id", s"$dir/byid")
     val n = ServingState.saveSnapshot(spark, dir, Some(cents), Some(books),
       cells = Some(assigned), encoded = Some(encCells),
       corpusSize = e.count(), encodedHasCells = true)
@@ -224,8 +223,7 @@ class ServingStateSpec extends AnyFunSuite {
 
   test("lex counters persist in the manifest and re-derive stats bit-exactly (r15 task 2)") {
     val dir = Files.createTempDirectory("graft-svlex-").toString
-    ByidStore.init(e.select("id", "embedding", "tenant"), "id", s"$dir/byid",
-      nFiles = 2)
+    ByidStore.init(e.select("id", "embedding", "tenant"), "id", s"$dir/byid")
     val docs = Tables.documents(spark, d).withColumn("tenant", lit("all"))
     val counters = Serving.lexCountersOf(docs, "tenant", "text")
     val n = ServingState.saveSnapshot(spark, dir,
@@ -241,8 +239,7 @@ class ServingStateSpec extends AnyFunSuite {
 
   test("postings term fetch pushes or-of-eq to the parquet scan (r16: page-prunable inverted index)") {
     val dir = Files.createTempDirectory("graft-svpost-").toString
-    ByidStore.init(e.select("id", "embedding", "tenant"), "id", s"$dir/byid",
-      nFiles = 2)
+    ByidStore.init(e.select("id", "embedding", "tenant"), "id", s"$dir/byid")
     val docs = Tables.documents(spark, d).withColumn("tenant", lit("all"))
     ServingState.saveSnapshot(spark, dir,
       postings = Some(Serving.buildPostings(docs, "tenant", "doc_id", "text")),

@@ -281,7 +281,7 @@ class StreamingSpec extends AnyFunSuite {
     val srcDir = java.nio.file.Files.createTempDirectory("graft_sbm_src").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_sbm_ckpt").toString
     ByidStore.init((0L until 20L).map(i => (i, s"a-$i", i * 10)).toDF("id", "payload", "v"),
-      "id", store, nFiles = 1)
+      "id", store)
     // two arrival batches with DISJOINT ids (micro-batch order-free):
     // updates to 1,2 and deletes of 5,6
     Seq(("upsert", 1L, "b-1", 10L), ("upsert", 2L, "b-2", 20L))
@@ -306,7 +306,7 @@ class StreamingSpec extends AnyFunSuite {
     val srcDir = java.nio.file.Files.createTempDirectory("graft_sbm2_src").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_sbm2_ckpt").toString
     ByidStore.init((0L until 10L).map(i => (i, s"a-$i"))
-      .toDF("id", "payload"), "id", store, nFiles = 1)
+      .toDF("id", "payload"), "id", store)
     // ONE micro-batch with conflicting ops: upsert-then-delete of 1
     // (must end deleted — the same-batch tombstone may not lose to its
     // own upsert), delete-then-upsert of 2 (must end upserted), and
@@ -339,13 +339,13 @@ class StreamingSpec extends AnyFunSuite {
     val v1 = all.filter(pmod(col("id"), lit(9L)) =!= 0)
     val cents = Search.ivfTrainSampled(v1, "tenant", "id", "emb", 16, sampleCap = 256)
     val books = PQ.pqTrainSampled(v1, "tenant", "id", "emb", 4, 8, 256)
-    ByidStore.init(v1.select("id", "emb", "tenant"), "id", s"$sdir/byid", 2)
+    ByidStore.init(v1.select("id", "emb", "tenant"), "id", s"$sdir/byid")
     val a1 = Search.ivfAssign(v1, "tenant", "id", "emb", cents)
-    ByidStore.init(a1, "id", s"$sdir/cells_store", 2)
+    ByidStore.init(a1, "id", s"$sdir/cells_store")
     ByidStore.init(PQ.pqEncode(v1, "tenant", "id", "emb", books)
         .join(a1.select(col("tenant"), col("id"), col("cell")), Seq("tenant", "id"))
         .select("tenant", "id", "codes", "cell"),
-      "id", s"$sdir/codes_store", 2)
+      "id", s"$sdir/codes_store")
     StreamingOps.initCorpusCount(spark, sdir)
     val ups = v1.filter(pmod(col("id"), lit(7L)) === 0)
       .select(lit("upsert").as("op"), col("id"),
@@ -430,7 +430,7 @@ class StreamingSpec extends AnyFunSuite {
       .select("tenant", "doc_id", "text")
     val v1 = docs.filter(col("doc_id") % 9 =!= 0)
     ByidStore.init(Serving.lexDocVectors(v1, "tenant", "doc_id", "text"),
-      "id", s"$sdir/lex", nFiles = 2)
+      "id", s"$sdir/lex")
     StreamingOps.writeLexCounters(sdir,
       Serving.lexCountersOf(v1, "tenant", "text"))
     val ups = v1.filter(col("doc_id") % 7 === 0)
@@ -485,10 +485,10 @@ class StreamingSpec extends AnyFunSuite {
       .withColumn("tenant", lit("all"))
     val eV1 = eAll.filter(pmod(col("id"), lit(9L)) =!= 0)
     val dV1 = dAll.filter(pmod(col("id"), lit(9L)) =!= 0)
-    ByidStore.init(eV1.select("id", "emb", "tenant"), "id", s"$sdir/byid", 2)
+    ByidStore.init(eV1.select("id", "emb", "tenant"), "id", s"$sdir/byid")
     StreamingOps.initCorpusCount(spark, sdir)
     ByidStore.init(Serving.lexDocVectors(dV1, "tenant", "id", "text"),
-      "id", s"$sdir/lex", nFiles = 2)
+      "id", s"$sdir/lex")
     StreamingOps.writeLexCounters(sdir,
       Serving.lexCountersOf(dV1, "tenant", "text"))
     val noText = lit(null).cast("string").as("text")
@@ -588,7 +588,7 @@ class StreamingSpec extends AnyFunSuite {
     val srcDir = java.nio.file.Files.createTempDirectory("graft_sbm4_src").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_sbm4_ckpt").toString
     ByidStore.init((0L until 5L).map(i => (i, s"a-$i"))
-      .toDF("id", "payload"), "id", store, nFiles = 1)
+      .toDF("id", "payload"), "id", store)
     // two ops on id 1 with the SAME sequence number: no total order,
     // so the collapse winner would be arbitrary across retries
     Seq(("upsert", 1L, "b-1", 10L), ("delete", 1L, "", 10L))
@@ -614,7 +614,7 @@ class StreamingSpec extends AnyFunSuite {
     val srcDir = java.nio.file.Files.createTempDirectory("graft_sbm3_src").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_sbm3_ckpt").toString
     ByidStore.init((0L until 5L).map(i => (i, s"a-$i"))
-      .toDF("id", "payload"), "id", store, nFiles = 1)
+      .toDF("id", "payload"), "id", store)
     Seq(("upsert", 1L, "b-1"), ("delete", 1L, ""))
       .toDF("op", "id", "payload").write.parquet(s"$srcDir/b0")
     val streamed = spark.readStream

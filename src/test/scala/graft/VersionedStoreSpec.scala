@@ -27,7 +27,7 @@ class VersionedStoreSpec extends AnyFunSuite {
   private def manKeys(s: org.apache.spark.sql.SparkSession, dir: String, n: Int) =
     manEntries(s, dir, n).map(e => (e.owner, e.bucket, e.v))
   private def manLayout(s: org.apache.spark.sql.SparkSession, dir: String, n: Int) =
-    VersionedStore.readManifest(s, dir, n).layout
+    Some(VersionedStore.readManifest(s, dir, n).layout)
 
   private def docs = Tables.documents(spark, sf).filter(col("doc_id") < 60)
   private def modified = docs.filter(col("doc_id") === 7)
@@ -146,7 +146,7 @@ class VersionedStoreSpec extends AnyFunSuite {
   test("compact: content identical under the new bucket space; old layout time-travels; vacuum reclaims it") {
     val dir = freshDir("cmp")
     VersionedStore.initialLoad(spark, dir, IndexPipeline.buildIndex(docs), nBuckets = 4)
-    VersionedStore.upsertVersioned(spark, dir, IndexPipeline.buildIndex(modified), nBuckets = 4)
+    VersionedStore.upsertVersioned(spark, dir, IndexPipeline.buildIndex(modified))
     val before = digest(VersionedStore.readSnapshot(spark, dir, 2))
     VersionedStore.compact(spark, dir, 16)
     assert(VersionedStore.snapshots(spark, dir) == Seq(1, 2, 3))
@@ -477,7 +477,7 @@ class VersionedStoreSpec extends AnyFunSuite {
     // recomputed so the lookup finds it
     val nv = zrel(Tables.documents(spark, sf).filter(col("doc_id") === 150))
       .withColumn("text_md5", lit("feedfacefeedfacefeedfacefeedface"))
-    VersionedStore.upsertVersioned(spark, dir, nv, nBuckets = 8)
+    VersionedStore.upsertVersioned(spark, dir, nv)
     val (r2, s2, t2) = VersionedStore.lookupEq(spark, dir,
       "feedfacefeedfacefeedfacefeedface")
     assert(r2.select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(150L))
@@ -690,7 +690,7 @@ class VersionedStoreSpec extends AnyFunSuite {
     val oldOwner = victim.select("owner").head().getString(0)
     val moved = victim.withColumn("owner", lit("migrated-tenant"))
       .withColumn("text_md5", lit("rehomed"))
-    VersionedStore.upsertVersioned(spark, dir, moved, nBuckets = 8)
+    VersionedStore.upsertVersioned(spark, dir, moved)
     val now = VersionedStore.readSnapshot(spark, dir)
       .filter(col("doc_id") === 7).collect()
     assert(now.length == 1, s"stale cross-owner duplicate: ${now.toSeq}")
@@ -700,7 +700,7 @@ class VersionedStoreSpec extends AnyFunSuite {
     // the probe is BOUNDED: only same-bucket-number entries under
     // other owners were scanned, never the whole manifest
     val st = VersionedStore.stageVersion(spark, dir,
-      moved.withColumn("text_md5", lit("again")), nBuckets = 8)
+      moved.withColumn("text_md5", lit("again")))
     val man = manEntries(spark, dir,
       VersionedStore.currentSnapshot(spark, dir).get)
     val sameBucket = man.count(_.bucket == 7L % 8)
@@ -766,7 +766,7 @@ class VersionedStoreSpec extends AnyFunSuite {
           try {
             VersionedStore.upsertVersioned(spark, dir,
               all.filter(col("doc_id") === vid)
-                .withColumn("text_md5", lit(s"winner-$vid")), nBuckets = 16)
+                .withColumn("text_md5", lit(s"winner-$vid")))
             done = true
           } catch {
             // CME = lost the commit rename; anything else non-fatal =
@@ -822,7 +822,7 @@ class VersionedStoreSpec extends AnyFunSuite {
       try {
         val st = VersionedStore.stageVersion(spark, dir,
           all.filter(col("doc_id") === vid)
-            .withColumn("text_md5", lit(s"winner-$tag")), nBuckets = 16)
+            .withColumn("text_md5", lit(s"winner-$tag")))
         barrier.await() // both finish staging before either commits
         VersionedStore.auditAndCommit(spark, dir, st)
         results.put(tag, Right(()))
@@ -865,7 +865,7 @@ class VersionedStoreSpec extends AnyFunSuite {
     // the loser converges the standard way: re-read current, restage
     VersionedStore.upsertVersioned(spark, dir,
       all.filter(col("doc_id") === lVid)
-        .withColumn("text_md5", lit("loser-retry")), nBuckets = 16)
+        .withColumn("text_md5", lit("loser-retry")))
     val snap3 = VersionedStore.readSnapshot(spark, dir, 3)
       .filter(col("doc_id").isin(7L, 23L))
       .select("doc_id", "text_md5").collect()
@@ -995,5 +995,21 @@ class VersionedStoreSpec extends AnyFunSuite {
     new java.io.File(s"$dir/manifest/.snap-1.txt.crc").delete()
     val ex = intercept[IllegalStateException](VersionedStore.readSnapshot(spark, dir))
     assert(ex.getMessage.contains("manifest 1") && ex.getMessage.contains("wid"), ex.getMessage)
+  }
+
+  test("a manifest without a #layout header is rejected, naming the snapshot") {
+    val dir = freshDir("nolayout")
+    VersionedStore.initialLoad(spark, dir, ownedRel(Seq("p"), 4), nBuckets = 2)
+    val man = new java.io.File(s"$dir/manifest/snap-1.txt").toPath
+    val text = new String(java.nio.file.Files.readAllBytes(man), "UTF-8")
+    assert(text.contains("#layout\t"), text)
+    java.nio.file.Files.write(man, text.split("\n").filterNot(_.startsWith("#layout"))
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
+    new java.io.File(s"$dir/manifest/.snap-1.txt.crc").delete()
+    // an upsert must not guess a bucket count for the store
+    val ex = intercept[IllegalStateException](
+      VersionedStore.upsertVersioned(spark, dir, ownedRel(Seq("p"), 1)))
+    assert(ex.getMessage.contains("manifest 1") && ex.getMessage.contains("#layout"),
+      ex.getMessage)
   }
 }
