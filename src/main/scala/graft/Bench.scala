@@ -30,7 +30,7 @@ object Bench {
     "st_window_agg", "aj_asof_join", "rj_range_bucketed",
     "eval_retrieval_metrics", "skew_salted_agg", "curate_corpus",
     "ann_rp_lsh", "pp_token_budget", "v1_knn_768", "ann_rp_lsh_768",
-    "emb_batched", "emb_fast", "c2h_hdbscan_eom", "ann_ivf_sampled",
+    "emb_batched", "c2h_hdbscan_eom", "ann_ivf_sampled",
     "st_index_incremental", "l11_response_cache", "ann_pq_topk",
     "ann_batch_topk", "curate_corpus_v2", "dd_shared_spans", "ts_bpe_train")
 

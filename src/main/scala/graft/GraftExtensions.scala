@@ -11,9 +11,11 @@ import graft.functions.{DotProduct, L2Normalize}
   *   SparkSession.builder().withExtensions(new GraftExtensions) ...
   *   spark.sql("SELECT dot_product(embedding, other) ...")
   *
-  * (Per SURVEY §4 no custom planner Strategy is required — every
-  * operator compiles to existing physical nodes; a KNN strategy slot
-  * would only be added alongside an index-backed scan source.)
+  * The engine's one planner Strategy, `BatchEmbedStrategy` (the
+  * batched embedding node), is not injected here: `BatchEmbed.embedColumn`
+  * installs it on the frame's own session, because sessions built
+  * without these extensions (the benches) embed too. Every other
+  * operator compiles to existing physical nodes.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

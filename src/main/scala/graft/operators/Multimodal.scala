@@ -1,22 +1,20 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.Tables
 
 /** Multimodal column operators: image/audio/video as opaque `binary`
-  * columns with typed metadata, processed in executor-local batches.
+  * columns with typed metadata, processed by map-only UDF columns.
   *
   * The decode step is a clearly-marked deterministic STUB (no media
   * libraries in this container); everything Spark-side is real:
-  * schema, binary columns, mapPartitions batching (the JVM equivalent
-  * of `mapInPandas` — decoder state initialized once per partition,
-  * rows processed in batches of `batchSize`), and frame-sampling
-  * explode. Swap `StubDecoder` for a JNI/FFI decoder at deployment;
-  * the plan shape (map-only over the media scan, no shuffle) is
-  * unchanged at 100 TB. Reference anchor: images skip text extraction
-  * and flow to vision analysis (S5, `document_processing_service.py:93-121`).
+  * schema, binary columns, decode and feature UDF columns planned
+  * inside the query, and frame-sampling explode. Swap `StubDecoder`
+  * for a JNI/FFI decoder at deployment; the plan shape (map-only over
+  * the media scan, no shuffle) is unchanged at 100 TB. Reference
+  * anchor: images skip text extraction and flow to vision analysis
+  * (S5, `document_processing_service.py:93-121`).
   */
 object Multimodal {
 
@@ -250,29 +248,15 @@ object Multimodal {
     }
   }
 
-  val decodedSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("n_bytes", LongType),
-    StructField("width", IntegerType), StructField("height", IntegerType),
-    StructField("channels", IntegerType)))
-
-  /** mapPartitions media decode: per-partition decoder init, batched
-    * row processing (the mapInPandas batch shape, JVM-side). */
-  def decodeMedia(media: DataFrame, decoder: MediaDecoder = StubDecoder,
-                  batchSize: Int = 32): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id").cast("long"), col("content")).rdd
-      .mapPartitions { it =>
-        // decoder/codec context initialized once per partition
-        val dec = decoder
-        it.grouped(batchSize).flatMap { batch =>
-          batch.map { r =>
-            val bytes = r.getAs[Array[Byte]](1)
-            val (w, h, c) = dec.decode(bytes)
-            Row(r.getLong(0), bytes.length.toLong, w, h, c)
-          }
-        }
-      }
-    spark.createDataFrame(rdd, decodedSchema)
+  /** Media decode as one UDF column over the media scan (the shape
+    * `mm_audio_meta` uses): doc_id, n_bytes, width, height, channels.
+    * A map-only pass; the decoder object ships once per task. */
+  def decodeMedia(media: DataFrame, decoder: MediaDecoder = StubDecoder): DataFrame = {
+    val decodeUdf = udf((bytes: Array[Byte]) => decoder.decode(bytes))
+    media.select(col("doc_id").cast("long"), length(col("content")).cast("long").as("n_bytes"),
+        decodeUdf(col("content")).as("m"))
+      .select(col("doc_id"), col("n_bytes"), col("m._1").as("width"),
+        col("m._2").as("height"), col("m._3").as("channels"))
   }
 
   /** Media table stand-in: document text bytes as the binary payload. */
@@ -280,30 +264,19 @@ object Multimodal {
     Tables.documents(s, d).select(col("doc_id"),
       encode(col("text"), "UTF-8").as("content"))
 
-  val featureSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("f0", DoubleType),
-    StructField("f_sum", DoubleType)))
-
-  /** Feature extraction (vision/audio-embedding stand-in): same
-    * mapPartitions batch shape as decodeMedia — model weights would
-    * load once per partition, rows run in batches. The STUB computes
+  /** Feature extraction (vision/audio-embedding stand-in): one UDF
+    * column over the media scan, like decodeMedia. The STUB computes
     * `dim` deterministic pseudo-features from byte length with exact
     * integer arithmetic and ONE final double division, so the oracle
     * matches bit-for-bit. Emits (f0, f_sum) summaries, not the raw
     * array (array cells don't hash-compare portably). */
-  def extractFeatures(media: DataFrame, dim: Int = 8, batchSize: Int = 32): DataFrame = {
-    val spark = media.sparkSession
-    val rdd = media.select(col("doc_id").cast("long"), col("content")).rdd
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          batch.map { r =>
-            val n = r.getAs[Array[Byte]](1).length.toLong
-            val ints = (1 to dim).map(j => (n * j) % 997L)
-            Row(r.getLong(0), ints.head.toDouble / 997.0, ints.sum.toDouble / 997.0)
-          }
-        }
-      }
-    spark.createDataFrame(rdd, featureSchema)
+  def extractFeatures(media: DataFrame, dim: Int = 8): DataFrame = {
+    val featUdf = udf((bytes: Array[Byte]) => {
+      val ints = (1 to dim).map(j => (bytes.length.toLong * j) % 997L)
+      (ints.head.toDouble / 997.0, ints.sum.toDouble / 997.0)
+    })
+    media.select(col("doc_id").cast("long"), featUdf(col("content")).as("f"))
+      .select(col("doc_id"), col("f._1").as("f0"), col("f._2").as("f_sum"))
   }
 
   /** 63-bit dHash fingerprint over 64 evenly-sampled payload bytes of
@@ -324,7 +297,7 @@ object Multimodal {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Decode-metadata pass (stub arithmetic mirrored in the oracle —
-    // verifies binary column plumbing + mapPartitions batch shape).
+    // verifies binary column plumbing through the decode UDF).
     "mm_decode_meta" -> ((s, d) =>
       decodeMedia(mediaTable(s, d)).orderBy("doc_id")),
 
@@ -372,7 +345,7 @@ object Multimodal {
     }),
 
     // Feature extraction over binary media (stubbed model, real
-    // mapPartitions batch plumbing).
+    // UDF column over the binary payload).
     "mm_feature_extract" -> ((s, d) =>
       extractFeatures(mediaTable(s, d)).orderBy("doc_id")),
 

@@ -18,12 +18,14 @@ import graft.functions.{BatchEmbed, Embedder, EmbedderAsBackend, EmbedderBackend
   * `count().over(partitionBy(doc_id))` here was a full shuffle+sort in
   * an otherwise map-only pipeline). Embedding runs through
   * `BatchEmbed.embedColumn` — per-partition model handle, batch 32,
-  * the reference's worker loop (`embedding_service.py:132-179`). ZERO
-  * Exchange end-to-end (PlanAuditSpec asserts it): at 100 TB this is a
-  * map-only job whose output is written partitioned by tenant with
-  * dynamic partition overwrite — the reference's delete-then-insert
-  * per-document upsert (S8, `vector_db_service.py:84-163`) becomes
-  * overwrite-by-partition.
+  * the reference's worker loop (`embedding_service.py:132-179`) — as a
+  * `BatchEmbed` plan node above the union and the chunk explode, so
+  * building the frame runs nothing and `explain` shows the whole plan.
+  * ZERO Exchange end-to-end (BatchEmbedSpec asserts it on the executed
+  * plan): at 100 TB this is a map-only job whose output is written
+  * partitioned by tenant with dynamic partition overwrite — the
+  * reference's delete-then-insert per-document upsert (S8,
+  * `vector_db_service.py:84-163`) becomes overwrite-by-partition.
   */
 object IndexPipeline {
 
@@ -53,10 +55,7 @@ object IndexPipeline {
       .select(col("doc_id"), col("owner"), lit("chunk").as("vtype"),
         col("chunk_index"), col("total_chunks"), col("chunk_text"))
 
-    // the internal-row fast runner: batching without the external-Row
-    // boxing tax (see BatchEmbed.embedColumnFast; emb_fast vs
-    // emb_batched vs emb_scalar quantify the three shapes)
-    BatchEmbed.embedColumnFast(summaries.unionByName(chunks), "chunk_text",
+    BatchEmbed.embedColumn(summaries.unionByName(chunks), "chunk_text",
       backend, batchSize)
   }
 
@@ -1508,7 +1507,7 @@ object IndexPipeline {
 
     // Batched-vs-scalar embedding throughput pair: both embed the full
     // documents text column with the SAME HashEmbedder math — emb_batched
-    // through BatchEmbed (mapPartitions, per-partition handle, batch 32),
+    // through the BatchEmbed plan node (per-partition handle, batch 32),
     // emb_scalar through a per-row scalar UDF. Driver-visible oracle
     // pins the row set + dim; BatchEmbedSpec asserts the two paths'
     // VECTORS are bit-identical and the batch/handle accounting holds.
@@ -1526,16 +1525,6 @@ object IndexPipeline {
       val embedUdf = udf((t: String) => emb.embed(t))
       Tables.documents(s, d)
         .select(col("doc_id"), size(embedUdf(col("text"))).as("emb_dim"))
-        .orderBy("doc_id")
-    }),
-    // Third execution shape: the internal-row fast runner X1 ships on
-    // (batching semantics of emb_batched without its external-Row
-    // boxing — see BatchEmbed.embedColumnFast).
-    "emb_fast" -> ((s, d) => {
-      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-      graft.functions.BatchEmbed.embedColumnFast(docs, "text",
-        new EmbedderAsBackend(new HashEmbedder(64)))
-        .select(col("doc_id"), size(col("embedding")).as("emb_dim"))
         .orderBy("doc_id")
     }),
 
@@ -2810,8 +2799,6 @@ object IndexPipeline {
     "emb_batched" ->
       "SELECT doc_id, 64 AS emb_dim FROM documents ORDER BY doc_id",
     "emb_scalar" ->
-      "SELECT doc_id, 64 AS emb_dim FROM documents ORDER BY doc_id",
-    "emb_fast" ->
       "SELECT doc_id, 64 AS emb_dim FROM documents ORDER BY doc_id",
     "t1_chunk_sentence" ->
       s"""WITH RECURSIVE src AS (

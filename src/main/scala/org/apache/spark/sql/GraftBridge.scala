@@ -1,29 +1,22 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge to the package-private Expression <-> Column converters of the
   * classic Spark SQL API. Spark 4 removed the public `new Column(expr)`
   * constructor; `classic.ExpressionUtils` is `private[sql]`, so this
   * one-file shim in the sql package re-exports the two converters the
-  * engine needs to expose custom Catalyst expressions as `Column`s.
+  * engine needs to expose custom Catalyst expressions as `Column`s,
+  * plus the plan-to-DataFrame factory for its one custom plan node.
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** The two `private[sql]` hooks behind `BatchEmbed.embedColumnFast`:
-    * the InternalRow RDD of a DataFrame and the inverse constructor.
-    * Together they let a batched mapPartitions run WITHOUT the
-    * external-Row conversion tax (`Row.fromSeq`/`toSeq` boxing every
-    * field both ways) that made the round-5 RDD runner ~2× slower
-    * than the scalar UDF under a cheap model. */
-  def toInternalRdd(df: Dataset[Row]): org.apache.spark.rdd.RDD[
-      org.apache.spark.sql.catalyst.InternalRow] =
-    df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd
-
-  def internalCreateDataFrame(spark: SparkSession,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): Dataset[Row] =
-    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rdd, schema)
+  /** A DataFrame over a logical plan: `Dataset.ofRows` is
+    * `private[sql]`. `BatchEmbed.embedColumn` wraps its plan node with
+    * it, so the embedding stays inside the caller's query. */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

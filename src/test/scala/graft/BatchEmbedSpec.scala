@@ -1,9 +1,11 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{GenerateExec, UnionExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.{BatchEmbed, Embedder, EmbedderAsBackend, EmbedderBackend,
+import graft.functions.{BatchEmbed, BatchEmbedExec, Embedder, EmbedderBackend,
   EmbedderHandle, HashEmbedder}
 import graft.pipelines.IndexPipeline
 
@@ -33,56 +35,54 @@ class BatchEmbedSpec extends AnyFunSuite {
   lazy val spark = SparkSessionHelper.spark
   private val d = "/root/testdata/sf0.001"
 
-  test("batched path produces bit-identical vectors to the scalar UDF path") {
-    val emb = new HashEmbedder(64)
-    val docs = Tables.documents(spark, d).select(col("doc_id"), col("text"))
-    val batched = BatchEmbed.embedColumn(docs, "text", emb)
-      .select("doc_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+  private def scalarRows(df: DataFrame, emb: Embedder, cols: String*): Set[Seq[Any]] = {
     val embedUdf = udf((t: String) => emb.embed(t))
-    val scalar = docs.select(col("doc_id"), embedUdf(col("text")).as("embedding"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-    assert(batched.keySet == scalar.keySet)
-    batched.foreach { case (id, v) =>
-      assert(v == scalar(id), s"doc $id: batched vector != scalar vector")
-    }
+    df.select(cols.map(col) :+ embedUdf(col("text")).as("embedding"): _*)
+      .collect().map(_.toSeq).toSet
   }
 
-  test("fast internal-row path: bit-identical vectors, all other columns preserved") {
+  test("batched path produces bit-identical vectors to the scalar UDF path") {
+    val emb = new HashEmbedder(64)
+    val cols = Seq("doc_id", "text", "source", "n_chars")
+    val docs = Tables.documents(spark, d).select(cols.map(col): _*)
+    val batched = BatchEmbed.embedColumn(docs, "text", emb)
+    assert(batched.columns.toSeq == cols :+ "embedding")
+    val got = batched.collect().map(_.toSeq).toSet
+    assert(got.size == docs.count())
+    assert(got == scalarRows(docs, emb, cols: _*),
+      "batched rows must equal the per-row scalar UDF rows, every column included")
+  }
+
+  test("pruned and filtered reads through the node return the scalar-UDF rows") {
     val emb = new HashEmbedder(64)
     val docs = Tables.documents(spark, d)
       .select(col("doc_id"), col("text"), col("source"), col("n_chars"))
-    val fast = BatchEmbed.embedColumnFast(docs, "text",
-      new EmbedderAsBackend(emb))
-      .select("doc_id", "source", "n_chars", "embedding").collect()
-      .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2), r.getSeq[Double](3)))
-      .toMap
-    val embedUdf = udf((t: String) => emb.embed(t))
-    val scalar = docs
-      .select(col("doc_id"), col("source"), col("n_chars"),
-        embedUdf(col("text")).as("embedding")).collect()
-      .map(r => r.getLong(0) -> (r.getString(1), r.getLong(2), r.getSeq[Double](3)))
-      .toMap
-    assert(fast.keySet == scalar.keySet)
-    fast.foreach { case (id, v) =>
-      assert(v == scalar(id), s"doc $id: fast-path row != scalar row")
-    }
+    val embedded = BatchEmbed.embedColumn(docs, "text", emb)
+    val pruned = embedded.select("doc_id", "source", "embedding")
+    assert(pruned.collect().map(_.toSeq).toSet == scalarRows(docs, emb, "doc_id", "source"))
+    // ColumnPruning reaches through the node: n_chars is never read
+    val node = pruned.queryExecution.optimizedPlan.collectFirst { case b: BatchEmbed => b }
+    assert(node.exists(!_.child.output.exists(_.name == "n_chars")),
+      s"n_chars not pruned below the node:\n${pruned.queryExecution.optimizedPlan}")
+    val filtered = embedded.filter(col("n_chars") > 100).select("doc_id", "embedding")
+    val expected = scalarRows(docs.filter(col("n_chars") > 100), emb, "doc_id")
+    assert(expected.nonEmpty && filtered.collect().map(_.toSeq).toSet == expected)
   }
 
-  test("fast path keeps the per-partition handle + batch contract") {
-    val sc = spark.sparkContext
-    val opens = sc.longAccumulator("f_opens")
-    val closes = sc.longAccumulator("f_closes")
-    val batches = sc.longAccumulator("f_batches")
-    val rows = sc.longAccumulator("f_rows")
-    val oversize = sc.longAccumulator("f_oversize")
-    val docs = Tables.documents(spark, d)
-      .select(col("doc_id"), col("text")).repartition(4)
-    val backend = new CountingBackend(64, opens, closes, batches, rows, oversize, 32)
-    val n = BatchEmbed.embedColumnFast(docs, "text", backend, 32).count()
-    assert(rows.value == n && oversize.value == 0)
-    assert(opens.value == 4 && closes.value == opens.value)
-    assert(batches.value <= n / 32 + 4 && batches.value > opens.value)
+  test("an embedded frame joins with itself") {
+    val docs = Tables.documents(spark, d).select(col("doc_id"), col("text"))
+    val v = BatchEmbed.embedColumn(docs, "text", new HashEmbedder(8))
+    val j = v.as("a").join(v.as("b"), col("a.doc_id") === col("b.doc_id"))
+      .filter(col("a.embedding") === col("b.embedding"))
+    assert(j.count() == docs.count())
+  }
+
+  test("a missing or non-string textCol fails when embedColumn is called") {
+    val docs = Tables.documents(spark, d).select(col("doc_id"), col("text"))
+    val emb = new HashEmbedder(8)
+    intercept[IllegalArgumentException](BatchEmbed.embedColumn(docs, "no_such_col", emb))
+    val e = intercept[IllegalArgumentException](BatchEmbed.embedColumn(docs, "doc_id", emb))
+    assert(e.getMessage.contains("not a string"), e.getMessage)
   }
 
   test("handle opened once per non-empty partition, closed once, batches ≤ batchSize") {
@@ -158,8 +158,24 @@ class BatchEmbedSpec extends AnyFunSuite {
 
   test("buildIndex plans ZERO shuffle Exchange (map-only pipeline)") {
     val plan = IndexPipeline.buildIndex(Tables.documents(spark, d))
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"),
+      .queryExecution.executedPlan
+    assert(!plan.toString.contains("Exchange"),
       s"buildIndex must be map-only; plan:\n$plan")
+    // the real plan, not an RDD scan: the union and the chunk explode
+    // sit below the embedding node
+    val node = plan.collectFirst { case e: BatchEmbedExec => e }
+    assert(node.exists(n => n.child.exists(_.isInstanceOf[UnionExec]) &&
+      n.child.exists(_.isInstanceOf[GenerateExec])), s"plan:\n$plan")
+  }
+
+  test("buildIndex over an exchange launches no Spark job while it is built") {
+    val docs = Tables.documents(spark, d).groupBy("doc_id", "source")
+      .agg(max("text").as("text"))
+    var vecs: DataFrame = null
+    val jobs = SparkSessionHelper.jobsOf("buildIndex over groupBy") {
+      vecs = IndexPipeline.buildIndex(docs, new HashEmbedder(16))
+    }
+    assert(jobs.isEmpty, s"building the frame ran jobs: ${jobs.mkString("; ")}")
+    assert(vecs.filter(col("vtype") === "summary").count() == docs.count())
   }
 }

@@ -34,7 +34,7 @@ class ReflectiveBackendSpec extends AnyFunSuite {
   test("class:FQCN?args constructs through reflection and embeds") {
     val b = EmbedderBackend.resolve("class:graft.FakeReflectiveBackend?xy,4")
     assert(b.dim == 4)
-    val out = BatchEmbed.embedColumnFast(docs, "text", b)
+    val out = BatchEmbed.embedColumn(docs, "text", b)
       .select($"doc_id", $"embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     // "alpha beta".length=10, tag "xy".length=2 -> base 12

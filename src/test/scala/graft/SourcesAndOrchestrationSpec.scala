@@ -226,7 +226,7 @@ class SourcesAndOrchestrationSpec extends AnyFunSuite {
     assert(r == Seq((1L, "a", None), (2L, "b", Some("en"))))
   }
 
-  test("multimodal decode: batched mapPartitions plumbing, stub arithmetic") {
+  test("multimodal decode: decode UDF column, stub arithmetic") {
     val media = Seq((1L, Array[Byte](1, 2, 3)), (2L, Array.fill[Byte](600)(7)))
       .toDF("doc_id", "content")
     val r = Multimodal.decodeMedia(media).orderBy("doc_id")

@@ -53,25 +53,20 @@ class SubprocessEmbedSpec extends AnyFunSuite {
     f
   }
 
-  test("subprocess backend: bit-identical vectors through a real python child, both runners") {
+  test("subprocess backend: bit-identical vectors through a real python child") {
     val script = workerScript
     val backend = new SubprocessEmbedderBackend(
       Seq("python3", script.toString, Dim.toString), Dim)
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("text")).repartition(3)
-
-    for (runner <- Seq[(org.apache.spark.sql.DataFrame, String) => org.apache.spark.sql.DataFrame](
-      (df, c) => BatchEmbed.embedColumn(df, c, backend, batchSize = 8),
-      (df, c) => BatchEmbed.embedColumnFast(df, c, backend, batchSize = 8))) {
-      val got = runner(docs, "text")
-        .select("doc_id", "embedding").collect()
-        .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
-      val exp = docs.select("doc_id", "text").collect()
-        .map(r => r.getLong(0) -> refEmb(r.getString(1), Dim).toSeq).toMap
-      assert(got.keySet == exp.keySet)
-      got.foreach { case (id, v) =>
-        assert(v == exp(id), s"doc $id: subprocess vector != reference math")
-      }
+    val got = BatchEmbed.embedColumn(docs, "text", backend, batchSize = 8)
+      .select("doc_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
+    val exp = docs.select("doc_id", "text").collect()
+      .map(r => r.getLong(0) -> refEmb(r.getString(1), Dim).toSeq).toMap
+    assert(got.keySet == exp.keySet)
+    got.foreach { case (id, v) =>
+      assert(v == exp(id), s"doc $id: subprocess vector != reference math")
     }
     java.nio.file.Files.deleteIfExists(script)
   }
@@ -85,7 +80,7 @@ class SubprocessEmbedSpec extends AnyFunSuite {
     val rows = Seq((1L, "héllo wörld 東京"), (2L, null: String), (3L, ""),
       (4L, "line\nbreak and, commas"))
       .toDF("id", "text")
-    val got = BatchEmbed.embedColumnFast(rows, "text", backend, batchSize = 2)
+    val got = BatchEmbed.embedColumn(rows, "text", backend, batchSize = 2)
       .select("id", "embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Double](1)).toMap
     // python len() counts code points; String.length counts UTF-16
